@@ -1655,7 +1655,7 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     out["ann1m_brute_column_sec"] = round(time.time() - t0, 4)
 
     t0 = time.time()
-    index = S.ivf_index(corpus, n_centroids=64, iters=3, kernel="matrix")
+    index = S.ivf_index(corpus, n_centroids=64, iters=3)
     index[1].count()  # materialize the persisted assignment
     out["ann1m_ivf_build_sec"] = round(time.time() - t0, 4)
 
@@ -1665,7 +1665,7 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     # exact and recall would read 1.0 by construction
     t0 = time.time()
     approx = S.ivf_topk(
-        corpus, queries, k=10, n_probe=8, index=index, kernel="matrix",
+        corpus, queries, k=10, n_probe=8, index=index,
         brute_fallback_coverage=None,
     ).persist()
     approx.count()
@@ -1700,7 +1700,7 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     books = S.train_pq_codebooks(
         corpus, m=16, n_codes=256, iters=3, kernel="column"
     )
-    enc = S.pq_encode(corpus, books, kernel="matrix").persist()
+    enc = S.pq_encode(corpus, books).persist()
     enc.count()
     out["ann1m_pq_build_sec"] = round(time.time() - t0, 4)
 
@@ -1734,7 +1734,7 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     t0 = time.time()
     pq = S.pq_topk(
         enc, queries, books, k=10, rerank=corpus, rerank_factor=300,
-        kernel="matrix", brute_fallback=False,
+        brute_fallback=False,
     ).persist()
     pq.count()
     out["ann1m_pq_query_sec"] = round(time.time() - t0, 4)
@@ -1898,7 +1898,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     sample = corpus.filter(F.col("vec_id") % 10 == 3)
     t0 = time.time()
     cents = S.train_ivf_centroids(sample, n_centroids=64, iters=3)
-    index = S.ivf_index(corpus, centroids=cents, kernel="matrix")
+    index = S.ivf_index(corpus, centroids=cents)
     index[1].count()
     out["ann10m_ivf_build_sec"] = round(time.time() - t0, 4)
 
@@ -1910,7 +1910,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # per-cell grouping overhead (0.74x of brute recorded in r12).
     t0 = time.time()
     approx = S.ivf_topk(
-        corpus, queries, k=10, n_probe=8, index=index, kernel="matrix",
+        corpus, queries, k=10, n_probe=8, index=index,
         brute_fallback_coverage=None,
     ).persist()
     approx.count()
@@ -1946,9 +1946,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # "batch serve is never slower than brute" wiring. This is the
     # gate row ann10m_ivf_speedup divides into.
     t0 = time.time()
-    S.ivf_topk(
-        corpus, queries_b, k=10, n_probe=8, index=index, kernel="matrix"
-    ).count()
+    S.ivf_topk(corpus, queries_b, k=10, n_probe=8, index=index).count()
     out["ann10m_ivf_query_sec"] = round(time.time() - t0, 4)
 
     # single-query serve twin — the regime the corpus-fraction thesis
@@ -1963,7 +1961,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     S.brute_force_topk_matrix(corpus, q1, k=10).count()
     out["ann10m_brute_q1_sec"] = round(time.time() - t0, 4)
     t0 = time.time()
-    S.ivf_topk(corpus, q1, k=10, n_probe=8, index=index, kernel="matrix").count()
+    S.ivf_topk(corpus, q1, k=10, n_probe=8, index=index).count()
     out["ann10m_ivf_q1_sec"] = round(time.time() - t0, 4)
     out["ann10m_ivf_q1_speedup"] = round(
         out["ann10m_brute_q1_sec"] / max(out["ann10m_ivf_q1_sec"], 1e-9), 2
@@ -1985,7 +1983,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
         masked = _best(
             lambda: S.ivf_topk(
                 corpus, qx, k=10, n_probe=8, index=index,
-                kernel="matrix", brute_fallback_coverage=None,
+                brute_fallback_coverage=None,
             ).count(),
             2,
         )
@@ -2003,7 +2001,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     books = S.train_pq_codebooks(
         sample, m=16, n_codes=256, iters=3, kernel="column"
     )
-    enc = S.pq_encode(corpus, books, kernel="matrix").persist()
+    enc = S.pq_encode(corpus, books).persist()
     enc.count()
     out["ann10m_pq_build_sec"] = round(time.time() - t0, 4)
 
@@ -2022,7 +2020,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     t0 = time.time()
     pq = S.pq_topk(
         enc, queries, books, k=10, rerank=corpus, rerank_factor=1500,
-        kernel="matrix", brute_fallback=False,
+        brute_fallback=False,
     ).persist()
     pq.count()
     out["ann10m_pq_adc_sec"] = round(time.time() - t0, 4)
@@ -2040,7 +2038,6 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     t0 = time.time()
     S.pq_topk(
         enc, queries_b, books, k=10, rerank=corpus, rerank_factor=1500,
-        kernel="matrix",
     ).count()
     out["ann10m_pq_query_sec"] = round(time.time() - t0, 4)
 
@@ -2221,10 +2218,10 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
         ANN_ROWS = saved
 
     ivf_dir = os.path.join(data_dir, "ann10m_cold_ivf")
-    # array layout, deliberately: the pq_widen columnar form measured
-    # 3x SLOWER through the Arrow bridge's per-column cost despite a
-    # 55x faster gather (see pq_widen docstring) — the at-rest layout
-    # for THIS engine's serve is the codes array
+    # array layout, deliberately: a one-smallint-column-per-subspace
+    # layout measured 3x SLOWER through the Arrow bridge's per-column
+    # cost despite a 55x faster gather (round 13, OPTIMIZATION_r13.md)
+    # — the at-rest layout for THIS engine's serve is the codes array
     codes_path = os.path.join(data_dir, "ann10m_cold_codes.parquet")
     meta_path = os.path.join(data_dir, "ann10m_cold_meta.json")
 
@@ -2238,7 +2235,7 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
         corpus = spark.read.parquet(corpus_path)
         sample = corpus.filter(F.col("vec_id") % 10 == 3)
         cents = S.train_ivf_centroids(sample, n_centroids=64, iters=3)
-        idx = S.ivf_index(corpus, centroids=cents, kernel="matrix")
+        idx = S.ivf_index(corpus, centroids=cents)
         (
             idx[1]
             .select(
@@ -2276,9 +2273,7 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     if not os.path.isdir(codes_path):
         assign = spark.read.parquet(ivf_dir).select("vec_id", "cell")
         (
-            S.pq_encode(
-                spark.read.parquet(corpus_path), books, kernel="matrix"
-            )
+            S.pq_encode(spark.read.parquet(corpus_path), books)
             .join(assign, "vec_id")
             .write.mode("overwrite")
             .parquet(codes_path)
@@ -2345,14 +2340,12 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
         idx_df = spark.read.parquet(ivf_dir)
         return S.ivf_topk(
             spark.read.parquet(corpus_path), q1, k=10, n_probe=8,
-            index=(cents, idx_df), kernel="matrix",
+            index=(cents, idx_df),
             brute_fallback_coverage=None,
         )
 
     def serve_pq_adc():
-        return S.pq_topk(
-            spark.read.parquet(codes_path), q1, books, k=10, kernel="matrix"
-        )
+        return S.pq_topk(spark.read.parquet(codes_path), q1, books, k=10)
 
     def serve_pq():
         # rerank against the cell-partitioned corpus copy: pq_topk
@@ -2362,7 +2355,7 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
         return S.pq_topk(
             spark.read.parquet(codes_path), q1, books, k=10,
             rerank=spark.read.parquet(bycell_dir), rerank_factor=1500,
-            kernel="matrix", brute_fallback=False,
+            brute_fallback=False,
         )
 
     paths = {
@@ -2408,7 +2401,7 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     # the timed trials, from the same ADC budget the serve used
     enc_cold = spark.read.parquet(codes_path)
     cand15k = S.pq_topk(
-        enc_cold, q1, books, k=10 * 1500, kernel="matrix",
+        enc_cold, q1, books, k=10 * 1500,
         brute_fallback=False,
     ).select("vec_id")
     probed_cells = sorted(

@@ -3,7 +3,8 @@
 - brute_force_topk: exact cosine top-k — broadcast the (small) query
   set against the corpus, dot products via higher-order functions
   (JVM-side), per-query top-k as a rank-limit. The baseline and the
-  verifier for approximate paths.
+  verifier for approximate paths; brute_force_topk_matrix is its
+  per-Arrow-batch matmul sibling, the exact kernel at scale.
 - lsh_topk: random-hyperplane LSH — bucket corpus and queries by sign
   bits (deterministic seeded planes), search only matching buckets
   (optionally multi-probe neighboring buckets), exact re-rank inside.
@@ -17,11 +18,12 @@
   (12.8x smaller on disk at 64-dim/16-sub, measured), ADC scoring +
   exact re-rank of the candidate budget.
 
-IVF and PQ training both have an ORACLE-GRADE sequential kernel
-(fixed-order left folds) that DuckDB recomputes bit-identically
-(oracle_ivf.py / oracle_pq.py), so the ann_recall driver legs are true
-cross-engine checks, plus matrix kernels (numpy per Arrow batch) as
-the measured scale path.
+Each ANN stage — IVF assignment and serving, PQ encoding and serving —
+has ONE kernel: numpy per Arrow batch (mapInPandas), with the bounded
+query batch collected to the driver. IVF and PQ training additionally
+have an ORACLE-GRADE sequential kernel (fixed-order left folds) that
+DuckDB recomputes bit-identically (oracle_ivf.py / oracle_pq.py), so
+the ann_recall driver legs are true cross-engine checks.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-#: default driver-side cap for matrix-kernel query batches (see
+#: default driver-side cap for collected query batches (see
 #: _collect_query_batch). 10k queries x 64 float64 ≈ 5 MB — far below
 #: any driver heap, far above every recorded serve batch (50).
 MAX_QUERY_BATCH = 10_000
@@ -56,14 +58,14 @@ MAX_QUERY_BATCH = 10_000
 def _collect_query_batch(
     queries: DataFrame, query_id_col: str, vec_col: str, caller: str,
     max_query_batch: int,
-) -> list:
-    """Collect the bounded query batch to the driver for a matrix
-    kernel, enforcing the bounded-queries contract LOUDLY (round-13
-    verdict item 4): the docstring promise was previously the only
-    guard, and a corpus-scale query side would OOM the driver at 100x
-    instead of raising. collect() goes through limit(cap + 1), so the
-    guard itself never materializes an unbounded batch on the driver
-    before failing. Pass max_query_batch <= 0 to disable (caller
+) -> tuple[np.ndarray, np.ndarray]:
+    """Collect the bounded query batch to the driver as (ids, unit
+    query matrix), enforcing the bounded-queries contract LOUDLY
+    (round-13 verdict item 4): the docstring promise was previously the
+    only guard, and a corpus-scale query side would OOM the driver at
+    100x instead of raising. collect() goes through limit(cap + 1), so
+    the guard itself never materializes an unbounded batch on the
+    driver before failing. Pass max_query_batch <= 0 to disable (caller
     explicitly owns the driver-memory risk)."""
     sel = queries.select(query_id_col, vec_col)
     if max_query_batch > 0:
@@ -71,17 +73,19 @@ def _collect_query_batch(
         if len(qrows) > max_query_batch:
             raise ValueError(
                 f"{caller}: query batch exceeds max_query_batch="
-                f"{max_query_batch} — the matrix kernel collects the query"
-                " side to the driver (bounded-queries contract). Raise"
-                " max_query_batch explicitly for a larger bounded batch,"
-                " or use kernel='column', which keeps the query side"
-                " distributed and unbounded."
+                f"{max_query_batch} — the kernel collects the query side"
+                " to the driver (bounded-queries contract). Raise"
+                " max_query_batch explicitly for a larger bounded batch."
             )
     else:
         qrows = sel.collect()
     if not qrows:
         raise ValueError(f"{caller}: empty query batch")
-    return qrows
+    q_ids = np.array([r[0] for r in qrows])
+    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
+    qn = np.linalg.norm(Q, axis=1)
+    qn[qn == 0] = 1.0
+    return q_ids, Q / qn[:, None]
 
 
 def brute_force_topk(
@@ -368,17 +372,10 @@ def lsh_topk(
         .drop("_qv", "_b")
     )
     scored = c.join(q, "bucket").withColumn("cosine", _dot("_cu", "_qu"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
     # no distinct needed: probe masks are distinct, so each corpus row
     # (one bucket) matches at most one probe row per query — the rank
     # output is already unique per (query, rank)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("_rn").alias("rank"))
-    )
+    return _rank_topk(scored, k, "cosine", id_col, query_id_col)
 
 
 def _sim_cells(unit_col: str, centroids: list[list[float]]):
@@ -400,14 +397,6 @@ def _assign_expr(unit_col: str, centroids: list[list[float]]):
     expression (centroid literals inlined into the plan)."""
     last = F.element_at(_sim_cells(unit_col, centroids), -1)
     return (-last["nc"]).cast("int")
-
-
-def _probe_cells_expr(unit_col: str, centroids: list[list[float]], n_probe: int):
-    """The n_probe nearest cells per row, declaratively — no driver
-    collect, so the query side can itself be unbounded."""
-    ranked = _sim_cells(unit_col, centroids)
-    top = F.slice(F.reverse(ranked), 1, n_probe)
-    return F.transform(top, lambda s: (-s["nc"]).cast("int"))
 
 
 def train_ivf_centroids(
@@ -628,59 +617,45 @@ def ivf_index(
     id_col: str = "vec_id",
     seed: int = 42,
     centroids: list[list[float]] | None = None,
-    kernel: str = "column",
 ) -> tuple[list[list[float]], DataFrame]:
     """Build the IVF index: (centroids, cell-assigned normalized
     corpus, persisted). Training and assignment are the expensive
     built-once phase; hold onto the returned index and serve many
     query batches against it (ivf_topk(index=...)).
 
-    kernel='column' (default) assigns cells with the pure Column argmax
-    — SQL-auditable and the form the driver oracles pin. kernel=
-    'matrix' assigns via one numpy matmul per Arrow batch (the round-8
-    batching finding, BENCH_SCALE.md): same argmax/lowest-cell-on-tie
-    semantics, ~1-ULP cosine differences possible at exact cell
-    boundaries, ~6x faster at 1M x 64 cells — use it for real corpora."""
+    Cells are assigned via one numpy matmul per Arrow batch (the
+    round-8 batching finding, BENCH_SCALE.md): argmax cosine, ties to
+    the lowest cell — the rule oracle_ivf.py's fold-based SQL twin
+    applies, so the two can differ only where a ~1-ULP summation-order
+    difference straddles an exact cell boundary."""
     if centroids is None:
         centroids = train_ivf_centroids(corpus, n_centroids, iters, vec_col, id_col, seed)
-    if kernel == "matrix":
-        import pandas as pd
+    C = np.asarray(centroids)
 
-        C = np.asarray(centroids)
+    def assign(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            nrm = np.linalg.norm(X, axis=1)
+            nrm[nrm == 0] = 1.0
+            U = X / nrm[:, None]
+            cells = np.argmax(U @ C.T, axis=1)  # ties -> lowest cell
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "_cu": list(U),
+                    "cell": cells.astype("int32"),
+                }
+            )
 
-        def assign(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                nrm = np.linalg.norm(X, axis=1)
-                nrm[nrm == 0] = 1.0
-                U = X / nrm[:, None]
-                cells = np.argmax(U @ C.T, axis=1)  # ties -> lowest cell
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "_cu": list(U),
-                        "cell": cells.astype("int32"),
-                    }
-                )
-
-        # id type follows the caller's schema (the Column kernel
-        # preserves it, so the matrix twin must too — string or int
-        # ids work identically in both)
-        id_t = corpus.schema[id_col].dataType.simpleString()
-        c = _cluster_by_cell(
-            corpus.select(id_col, vec_col)
-            .mapInPandas(assign, f"{id_col} {id_t}, _cu array<double>, cell int")
-        )
-        return centroids, c
+    # id type follows the caller's schema — string or int ids work
+    id_t = corpus.schema[id_col].dataType.simpleString()
     c = _cluster_by_cell(
-        corpus.select(id_col, F.col(vec_col).alias("_cv"))
-        .withColumn("_cu", _unit("_cv"))
-        .withColumn("cell", _assign_expr("_cu", centroids))
-        .drop("_cv")
+        corpus.select(id_col, vec_col)
+        .mapInPandas(assign, f"{id_col} {id_t}, _cu array<double>, cell int")
     )
     return centroids, c
 
@@ -718,52 +693,37 @@ def ivf_topk(
     seed: int = 42,
     centroids: list[list[float]] | None = None,
     index: tuple[list[list[float]], DataFrame] | None = None,
-    kernel: str = "column",
     max_query_batch: int = MAX_QUERY_BATCH,
     brute_fallback_coverage: float | None = 1.0,
 ) -> DataFrame:
     """IVF approximate top-k: corpus partitioned into coarse cells
     (spherical k-means), each query probes its n_probe nearest cells,
-    exact cosine re-rank inside. The join shuffles (cell, id, vec) —
-    a 1/(n_centroids/n_probe) fraction of the corpus per query batch
-    instead of a cross product. Under kernel='column' probe-cell
-    assignment is a pure Column expression (no driver collect), so the
-    query side may itself be unbounded — it is broadcast here on the
-    assumption it is the small side; swap the build side for huge query
-    batches. kernel='matrix' COLLECTS the query batch to the driver
-    (same bounded-queries assumption as brute_force_topk_matrix /
-    pq_topk's matrix kernels), capped at ``max_query_batch`` rows —
-    exceeding it raises ValueError instead of OOMing the driver (<=0
-    disables) — use kernel='column' when the query
-    side is itself corpus-scale. Pass a prebuilt
-    `index` (ivf_index) to serve against an existing materialized index
-    — the persisted assignment also keeps the K×dim argmax expression
-    out of the join/rank stages' codegen.
+    exact cosine re-rank inside. Pass a prebuilt `index` (ivf_index)
+    to serve against an existing materialized index; otherwise this
+    call builds one.
 
-    kernel='matrix' batches the index ASSIGNMENT when this call builds
-    the index (see ivf_index) AND serves via a SCAN-ONCE masked matmul
-    (round 12): the assigned corpus is read exactly once; each Arrow
-    batch is grouped by cell, matmul'd against only the queries probing
-    that cell, and reduced to a per-(batch, query) top-k before
-    anything shuffles — so the exchange carries batches x queries x k
-    rows, never candidate PAIRS. The previous pair-join serve
-    (corpus ⋈ probes, then a fold per pair) materialized
-    corpus x n_probe/n_centroids x matching-query rows — 62M pairs at
-    10M x 50 queries — and measured 36.5 s where this form is
-    expected at ~brute/(n_centroids/n_probe); its earlier per-pair
-    Arrow-scorer objection (shipping both vectors per candidate) does
-    not apply here because each corpus vector crosses Arrow once.
-    kernel='column' keeps the pair-join + Column-fold form — the
-    SQL-auditable shape the driver oracles pin.
+    The query batch is COLLECTED to the driver (bounded-queries
+    contract, shared with brute_force_topk_matrix and pq_topk), capped
+    at ``max_query_batch`` rows — exceeding it raises ValueError
+    instead of OOMing the driver (<=0 disables). Probe sets are chosen
+    on the driver; the serve is a SCAN-ONCE masked matmul (round 12):
+    the assigned corpus is read exactly once; each Arrow batch is
+    grouped by cell, matmul'd against only the queries probing that
+    cell, and reduced to a per-(batch, query) top-k before anything
+    shuffles — so the exchange carries batches x queries x k rows,
+    never candidate PAIRS. The pair-join serve (corpus ⋈ probes, then
+    a fold per pair) materialized corpus x n_probe/n_centroids x
+    matching-query rows — 62M pairs at 10M x 50 queries — and measured
+    36.5 s.
 
-    brute_fallback_coverage (matrix kernel only, round-13): a broad
-    query batch's union-of-probes can cover (nearly) every cell, at
-    which point the masked serve decodes the whole corpus like brute
-    force while still paying per-cell grouping + per-(cell, query)
-    partial top-k overhead — the recorded 10M x 50-query batch measured
-    0.74x of brute (BENCH_r12). When the probed-cell fraction reaches
-    this threshold, serve EXACT instead: one full matmul scan of the
-    cached index (brute_force_topk_matrix over the pre-normalized _cu
+    brute_fallback_coverage (round 13): a broad query batch's
+    union-of-probes can cover (nearly) every cell, at which point the
+    masked serve decodes the whole corpus like brute force while still
+    paying per-cell grouping + per-(cell, query) partial top-k overhead
+    — the recorded 10M x 50-query batch measured 0.74x of brute
+    (BENCH_r12). When the probed-cell fraction reaches this threshold,
+    serve EXACT instead: one full matmul scan of the cached index
+    (brute_force_topk_matrix's kernel over the pre-normalized _cu
     column), which dominates the masked plan at full coverage. The
     fallback returns exact cosine top-k — a superset-quality answer
     (recall vs truth = 1.0 >= the IVF answer's), so results for a batch
@@ -772,125 +732,102 @@ def ivf_topk(
     (e.g. when measuring the index itself)."""
     if index is None:
         index = ivf_index(
-            corpus, n_centroids, iters, vec_col, id_col, seed, centroids,
-            kernel=kernel,
+            corpus, n_centroids, iters, vec_col, id_col, seed, centroids
         )
     centroids, c = index
-    if kernel == "matrix":
-        import numpy as np
-        import pandas as pd
+    q_ids, Q = _collect_query_batch(
+        queries, query_id_col, vec_col, "ivf_topk", max_query_batch
+    )
+    qid_t = queries.schema[query_id_col].dataType.simpleString()
+    C = np.asarray(centroids, dtype=np.float64)
+    sims = Q @ C.T
+    # probe rule: the n_probe highest-cosine cells, ties to the lowest
+    # cell id (lexsort: -sim, cell) — oracle_ivf.py's (d DESC, ci ASC)
+    order = np.lexsort((np.arange(C.shape[0])[None, :].repeat(len(q_ids), 0), -sims), axis=1)
+    probe_sets = order[:, :n_probe]
+    cell_to_q: dict[int, list[int]] = {}
+    for qi, cells_row in enumerate(probe_sets):
+        for cell in cells_row:
+            cell_to_q.setdefault(int(cell), []).append(qi)
 
-        qrows = _collect_query_batch(
-            queries, query_id_col, vec_col, "ivf_topk", max_query_batch
+    if (
+        brute_fallback_coverage is not None
+        and len(cell_to_q) >= brute_fallback_coverage * C.shape[0]
+    ):
+        # union-of-probes covers the corpus: the masked serve would
+        # decode everything brute does plus grouping overhead — run
+        # the exact full matmul over the cached index instead (the
+        # _cu vectors are already unit; the renormalize inside is a
+        # ~1-ULP no-op), reusing the batch collected above. Never
+        # slower than brute, exact results.
+        return _brute_topk_matrix(
+            c.select(id_col, F.col("_cu").alias(vec_col)), q_ids, Q, qid_t,
+            k, vec_col, id_col, query_id_col,
         )
-        q_ids = [r[0] for r in qrows]
-        Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0] = 1.0
-        Q = Q / qn[:, None]
-        C = np.asarray(centroids, dtype=np.float64)
-        sims = Q @ C.T
-        # same probe TIE RULE as _probe_cells_expr: n_probe
-        # highest-cosine cells, ties to the lowest cell id (lexsort:
-        # -sim, cell). Float accumulation order differs from the column
-        # kernel's sequential SQL fold (this is a pairwise float64
-        # matmul), so probe SETS can diverge on near-exact centroid
-        # ties — don't assume bit-stable cross-kernel results.
-        order = np.lexsort((np.arange(C.shape[0])[None, :].repeat(len(q_ids), 0), -sims), axis=1)
-        probe_sets = order[:, :n_probe]
-        cell_to_q: dict[int, list[int]] = {}
-        for qi, cells_row in enumerate(probe_sets):
-            for cell in cells_row:
-                cell_to_q.setdefault(int(cell), []).append(qi)
 
-        if (
-            brute_fallback_coverage is not None
-            and len(cell_to_q) >= brute_fallback_coverage * C.shape[0]
-        ):
-            # union-of-probes covers the corpus: the masked serve would
-            # decode everything brute does plus grouping overhead — run
-            # the exact full matmul over the cached index instead (the
-            # _cu vectors are already unit; the renormalize inside is a
-            # ~1-ULP no-op). Never slower than brute, exact results.
-            return brute_force_topk_matrix(
-                c.select(id_col, F.col("_cu").alias(vec_col)), queries,
-                k=k, vec_col=vec_col, id_col=id_col,
-                query_id_col=query_id_col, max_query_batch=max_query_batch,
-            )
+    id_t = c.schema[id_col].dataType.simpleString()
 
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = c.schema[id_col].dataType.simpleString()
-
-        def score(batches):
-            for pdf in batches:
-                if not len(pdf):
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            outs = []
+            for cell, g in pdf.groupby("cell"):
+                qidx = cell_to_q.get(int(cell))
+                if not qidx:
                     continue
-                outs = []
-                for cell, g in pdf.groupby("cell"):
-                    qidx = cell_to_q.get(int(cell))
-                    if not qidx:
-                        continue
-                    X = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in g["_cu"]]
-                    )
-                    S = X @ Q[qidx].T  # m x g
-                    ids = g[id_col].to_numpy()
-                    kk = min(k, S.shape[0])
-                    for j, qi in enumerate(qidx):
-                        col = S[:, j]
-                        # partial top-k by the FINAL ordering
-                        # (cosine desc, id asc) so the global window
-                        # sees every possible top-k row
-                        idx = np.lexsort((ids, -col))[:kk]
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    query_id_col: [q_ids[qi]] * len(idx),
-                                    id_col: ids[idx],
-                                    "cosine": col[idx],
-                                }
-                            )
+                X = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in g["_cu"]]
+                )
+                S = X @ Q[qidx].T  # m x g
+                ids = g[id_col].to_numpy()
+                kk = min(k, S.shape[0])
+                for j, qi in enumerate(qidx):
+                    col = S[:, j]
+                    # partial top-k by the FINAL ordering
+                    # (cosine desc, id asc) so the global window
+                    # sees every possible top-k row
+                    idx = np.lexsort((ids, -col))[:kk]
+                    outs.append(
+                        pd.DataFrame(
+                            {
+                                query_id_col: [q_ids[qi]] * len(idx),
+                                id_col: ids[idx],
+                                "cosine": col[idx],
+                            }
                         )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                    )
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
 
-        # probed-cell filter BEFORE the scan: with the index cached
-        # cell-clustered (_cluster_by_cell), batch min/max stats skip
-        # unprobed cells' batches — vector decode included. A broad
-        # query batch covers every cell (no-op); a point query touches
-        # n_probe/n_centroids of the corpus physically.
-        probed = sorted(cell_to_q)
-        pooled = (
-            c.filter(F.col("cell").isin(probed))
-            .select("cell", id_col, "_cu")
-            .mapInPandas(
-                score, f"{query_id_col} {qid_t}, {id_col} {id_t}, cosine double"
-            )
+    # probed-cell filter BEFORE the scan: with the index cached
+    # cell-clustered (_cluster_by_cell), batch min/max stats skip
+    # unprobed cells' batches — vector decode included. A broad
+    # query batch covers every cell (no-op); a point query touches
+    # n_probe/n_centroids of the corpus physically.
+    probed = sorted(cell_to_q)
+    pooled = (
+        c.filter(F.col("cell").isin(probed))
+        .select("cell", id_col, "_cu")
+        .mapInPandas(
+            score, f"{query_id_col} {qid_t}, {id_col} {id_t}, cosine double"
         )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("cosine").desc(), F.col(id_col).asc()
-        )
-        return (
-            pooled.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(query_id_col, id_col, "cosine", F.col("_rn").alias("rank"))
-        )
-    probes = (
-        queries.select(query_id_col, F.col(vec_col).alias("_qv"))
-        .withColumn("_qu", _unit("_qv"))
-        .withColumn("cell", F.explode(_probe_cells_expr("_qu", centroids, n_probe)))
-        .drop("_qv")
     )
-    scored = c.join(F.broadcast(probes), "cell").withColumn(
-        "cosine", _dot("_cu", "_qu")
-    )
+    return _rank_topk(pooled, k, "cosine", id_col, query_id_col)
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, score_col: str, id_col: str, query_id_col: str
+) -> DataFrame:
+    """Global per-query top-k over partial top-k rows: (score desc,
+    id asc) row_number, keep rank <= k."""
     w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+        F.col(score_col).desc(), F.col(id_col).asc()
     )
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("_rn").alias("rank"))
+        .select(query_id_col, id_col, score_col, F.col("_rn").alias("rank"))
     )
 
 
@@ -915,30 +852,37 @@ def brute_force_topk_matrix(
     The query batch is collected to the driver and broadcast into the
     scorer (bounded, same assumption the Column form's broadcast join
     makes), capped at ``max_query_batch`` rows — exceeding it raises
-    ValueError instead of OOMing the driver (<=0 disables). Output contract matches brute_force_topk: (query_id, id,
-    cosine, rank), ties broken by ascending id. Summation order is
-    BLAS pairwise rather than a left fold, so cosines can differ from
-    the Column kernel by ~1 ULP — use rank_decimals there (or this
-    form consistently) when comparing engines at a top-k boundary."""
-    import numpy as np
-    import pandas as pd
-
-    qrows = _collect_query_batch(
+    ValueError instead of OOMing the driver (<=0 disables). Output
+    contract matches brute_force_topk: (query_id, id, cosine, rank),
+    ties broken by ascending id. Summation order is BLAS pairwise
+    rather than a left fold, so cosines can differ from the Column
+    kernel by ~1 ULP — use rank_decimals there (or this form
+    consistently) when comparing engines at a top-k boundary."""
+    q_ids, Q = _collect_query_batch(
         queries, query_id_col, vec_col, "brute_force_topk_matrix",
         max_query_batch,
     )
-    q_ids = np.array([r[0] for r in qrows])
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Q = Q / qn[:, None]
-    n_q = len(q_ids)
-    kk = k
-
-    # id types follow the callers' schemas (the Column kernel preserves
-    # them; hard-coded bigint here used to fail string/int ids at
-    # runtime despite the parameterized id_col API)
     qid_t = queries.schema[query_id_col].dataType.simpleString()
+    return _brute_topk_matrix(
+        corpus, q_ids, Q, qid_t, k, vec_col, id_col, query_id_col
+    )
+
+
+def _brute_topk_matrix(
+    corpus: DataFrame,
+    q_ids: np.ndarray,
+    Q: np.ndarray,
+    qid_t: str,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """brute_force_topk_matrix over an already-collected unit query
+    matrix (``_collect_query_batch`` output) — so a caller that has
+    collected the batch for its own use does not collect it again."""
+    n_q = len(q_ids)
+    # id types follow the callers' schemas — string or int ids work
     cid_t = corpus.schema[id_col].dataType.simpleString()
     schema = f"{query_id_col} {qid_t}, {id_col} {cid_t}, cosine double"
 
@@ -953,7 +897,7 @@ def brute_force_topk_matrix(
             mn = np.linalg.norm(M, axis=1)
             mn[mn == 0] = 1.0
             S = (M / mn[:, None]) @ Q.T  # n_batch x n_q
-            kb = min(kk, S.shape[0])
+            kb = min(k, S.shape[0])
             # per-query partial top-k within the batch; ties by asc id
             order = np.lexsort((ids[:, None].repeat(n_q, 1), -S), axis=0)[:kb]
             out_q = np.repeat(q_ids, kb)
@@ -967,14 +911,7 @@ def brute_force_topk_matrix(
             )
 
     partial = corpus.select(id_col, vec_col).mapInPandas(gen, schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("_rn").alias("rank"))
-    )
+    return _rank_topk(partial, k, "cosine", id_col, query_id_col)
 
 
 # --------------------------------------------------------------------------
@@ -1249,121 +1186,49 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    kernel: str = "column",
 ) -> DataFrame:
     """Encode the corpus: (id, codes array<int> of length m) — the
     m-byte-per-vector representation the ADC scan reads instead of
-    the float column. kernel='column' is the SQL-auditable parsed
-    expression (what the driver oracle pins); kernel='matrix' encodes
-    via numpy per Arrow batch for real corpora (same argmin /
-    lowest-code-on-tie semantics; ~1-ULP distance differences possible
-    at exact code boundaries — the ivf_index kernel note applies)."""
+    the float column. Encodes via numpy per Arrow batch: per subspace,
+    squared-L2 argmin against the codebook, ties to the lowest code —
+    the rule oracle_pq.py's fold-based SQL twin applies (~1-ULP
+    distance differences possible at exact code boundaries, as for
+    ivf_index). A vector whose dim is not the codebooks' m*sd fails
+    the encode loudly."""
     m = len(codebooks)
     sd = len(codebooks[0][0])
     slices = _pq_slices(m * sd, m)
-    if kernel == "matrix":
-        import pandas as pd
+    CBs = [np.asarray(b) for b in codebooks]
+    id_t = corpus.schema[id_col].dataType.simpleString()
 
-        CBs = [np.asarray(b) for b in codebooks]
-        id_t = corpus.schema[id_col].dataType.simpleString()
-
-        def enc(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                if X.shape[1] != m * sd:
-                    raise ValueError(
-                        f"pq_encode: corpus vector dim {X.shape[1]} != "
-                        f"codebook dim {m * sd} (m={m} x sd={sd})"
-                    )
-                nrm = np.linalg.norm(X, axis=1)
-                nrm[nrm == 0] = 1.0
-                U = X / nrm[:, None]
-                codes = np.empty((len(U), m), dtype=np.int32)
-                for si, (lo, ssd) in enumerate(slices):
-                    Us = U[:, lo : lo + ssd]
-                    d2 = (
-                        (Us * Us).sum(axis=1)[:, None]
-                        - 2.0 * (Us @ CBs[si].T)
-                        + (CBs[si] * CBs[si]).sum(axis=1)[None, :]
-                    )
-                    codes[:, si] = np.argmin(d2, axis=1)
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "codes": list(codes)}
-                )
-
-        return corpus.select(id_col, vec_col).mapInPandas(
-            enc, f"{id_col} {id_t}, codes array<int>"
-        )
-    if kernel != "column":
-        raise ValueError(f"pq_encode: unknown kernel {kernel!r}")
-    u = corpus.select(id_col, F.col(vec_col).alias("_v")).withColumn(
-        "_u", _unit("_v")
-    )
-    codes = F.array(
-        *[
-            _pq_assign_expr("_u", lo, sd_, codebooks[si])
-            for si, (lo, sd_) in enumerate(slices)
-        ]
-    )
-    # Dimension guard (round-10 review): slice() on a too-short vector
-    # silently returns a short array, zip_with pads with nulls, and the
-    # argmin fold would pick an arbitrary code — the encode would
-    # complete with meaningless codes. The matrix kernel fails loudly
-    # (numpy shape check above); make this kernel fail loudly too.
-    # NULL vectors also land here (size(NULL) is NULL → otherwise);
-    # coalesce keeps the error message non-NULL for them.
-    return u.select(
-        id_col,
-        F.when(F.size("_u") == m * sd, codes)
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("pq_encode: corpus vector dim "),
-                    F.coalesce(F.size("_u").cast("string"), F.lit("NULL")),
-                    F.lit(f" != codebook dim {m * sd} (m={m} x sd={sd})"),
-                )
+    def enc(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-        )
-        .alias("codes"),
-    )
+            if X.shape[1] != m * sd:
+                raise ValueError(
+                    f"pq_encode: corpus vector dim {X.shape[1]} != "
+                    f"codebook dim {m * sd} (m={m} x sd={sd})"
+                )
+            nrm = np.linalg.norm(X, axis=1)
+            nrm[nrm == 0] = 1.0
+            U = X / nrm[:, None]
+            codes = np.empty((len(U), m), dtype=np.int32)
+            for si, (lo, ssd) in enumerate(slices):
+                Us = U[:, lo : lo + ssd]
+                d2 = (
+                    (Us * Us).sum(axis=1)[:, None]
+                    - 2.0 * (Us @ CBs[si].T)
+                    + (CBs[si] * CBs[si]).sum(axis=1)[None, :]
+                )
+                codes[:, si] = np.argmin(d2, axis=1)
+            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
 
-
-def pq_widen(
-    encoded: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
-    """Columnar layout for PQ codes: one ``code_<s>`` smallint column
-    per subspace instead of a single ``codes array<int>``. pq_topk's
-    matrix kernel auto-detects it (absence of a ``codes`` column) and
-    gathers each column as a flat int array — 55x faster per batch
-    than the array layout's per-row list->ndarray stack in pure numpy.
-
-    MEASURED CAVEAT (round 13, the reason this is NOT the default serve
-    layout): Spark's Arrow bridge pays a per-COLUMN per-batch
-    conversion cost that swamps the gather win — a pass-through
-    mapInPandas over 10M rows delivered (id + 16 smallint columns) in
-    7.7-9.9 s vs 2.7 s for (id + array), batch size insensitive, and
-    the end-to-end ADC serve measured 14.5 s wide vs ~5 s array. Parquet
-    bitpacking also saved ~nothing (203.2 vs 204.0 MB: the array
-    layout's int32 codes already dictionary/bitpack). Use the array
-    layout for serving in this engine; pq_widen exists for interop and
-    for columnar analytics over individual code columns. smallint caps
-    n_codes at 32768 — far above the 256-code standard. The column
-    kernel stays array-layout (the driver-oracle-pinned form)."""
-    if "codes" not in encoded.columns:
-        raise ValueError("pq_widen: encoded frame has no 'codes' column")
-    # m (subspace count) from the data, not a parameter: one row's
-    # codes length — constant by construction (pq_encode output)
-    n_sub = len(encoded.select("codes").head()["codes"])
-    return encoded.select(
-        id_col,
-        *[
-            F.element_at("codes", s + 1).cast("smallint").alias(f"code_{s}")
-            for s in range(n_sub)
-        ],
+    return corpus.select(id_col, vec_col).mapInPandas(
+        enc, f"{id_col} {id_t}, codes array<int>"
     )
 
 
@@ -1377,16 +1242,21 @@ def pq_topk(
     query_id_col: str = "query_id",
     rerank: DataFrame | None = None,
     rerank_factor: int = 4,
-    kernel: str = "column",
     max_query_batch: int = MAX_QUERY_BATCH,
     brute_fallback: bool | str = "auto",
 ) -> DataFrame:
     """ADC top-k over the PQ-encoded corpus: score ≈ cosine =
-    Σ_sub dot(q_sub, codebook[sub][codes[sub]]) — each sub-dot a
-    dim-ordered fold against the literal codebook entry selected by
-    the row's code, the subs summed in sub order (both orders fixed so
-    the DuckDB twin reproduces the scores bit-for-bit). The scan reads
-    (id, m codes): no float vectors move.
+    Σ_sub dot(q_sub, codebook[sub][codes[sub]]). The scan reads
+    (id, m codes): no float vectors move. This is the LUT form (the
+    textbook ADC implementation): per query batch, one (m x n_codes)
+    table of sub-dots is precomputed on the driver, and each Arrow
+    batch scores via numpy gather+sum over the codes — no per-row
+    interpreted folds (the round-8 batching finding applied to PQ).
+    oracle_pq.py spells the same scores as sub-ordered folds; the
+    summation orders differ by ~1 ULP, so ties at a boundary may
+    reorder. The query batch is collected to the driver, capped at
+    ``max_query_batch`` rows — exceeding it raises ValueError instead
+    of OOMing the driver (<=0 disables).
 
     With ``rerank`` (the corpus with exact vectors), the ADC
     top-(k*rerank_factor) per query is joined back to the exact
@@ -1394,22 +1264,10 @@ def pq_topk(
     cheap scan bounds the candidate set, the exact fetch touches only
     candidates.
 
-    kernel='column' is the SQL-auditable parsed form (what the driver
-    oracle pins). kernel='matrix' is the LUT form for real corpora
-    (the textbook ADC implementation): per query batch, one
-    (m x n_codes) table of sub-dots is precomputed on the driver, and
-    each Arrow batch scores via numpy gather+sum over the code
-    columns — no per-row interpreted folds (the round-8 batching
-    finding applied to PQ; summation order differs by ~1 ULP from the
-    fold, ties at a boundary may reorder). The matrix kernel collects
-    the query batch to the driver, capped at ``max_query_batch`` rows
-    — exceeding it raises ValueError instead of OOMing the driver
-    (<=0 disables); kernel='column' keeps the query side distributed.
-
-    brute_fallback (matrix kernel with ``rerank`` only, round-13): PQ's
-    serve economics are a BYTE lever — scan m codes instead of dim
-    floats — which pays only where the exact vectors are expensive to
-    scan (disk/object-store-resident state). When ``rerank`` is already
+    brute_fallback (with ``rerank`` only, round 13): PQ's serve
+    economics are a BYTE lever — scan m codes instead of dim floats —
+    which pays only where the exact vectors are expensive to scan
+    (disk/object-store-resident state). When ``rerank`` is already
     RAM-resident, ADC + candidate re-rank measured 0.35x of plain brute
     force at 10M x 50 queries (BENCH_r12): the code scan saves nothing
     against a page-cache/Spark-cache-hot vector scan and the rerank
@@ -1418,254 +1276,137 @@ def pq_topk(
     ``rerank.storageLevel.useMemory`` is set — never slower than brute,
     recall 1.0 >= the ADC answer's; True forces the exact path; False
     always runs ADC (e.g. when measuring the index itself, or when the
-    storage level doesn't reflect the real scan cost). The column
-    kernel (the driver-oracle-pinned form) ignores this."""
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    n_cand = k * rerank_factor if rerank is not None else k
-    prune_cells = False  # set in the matrix kernel when cell columns exist
-    if (
-        kernel == "matrix"
-        and rerank is not None
-        and (
-            brute_fallback is True
-            or (brute_fallback == "auto" and rerank.storageLevel.useMemory)
-        )
+    storage level doesn't reflect the real scan cost)."""
+    if rerank is not None and (
+        brute_fallback is True
+        or (brute_fallback == "auto" and rerank.storageLevel.useMemory)
     ):
         return brute_force_topk_matrix(
             rerank, queries, k=k, vec_col=vec_col, id_col=id_col,
             query_id_col=query_id_col, max_query_batch=max_query_batch,
         )
-    if kernel == "matrix":
-        import pandas as pd
+    m = len(codebooks)
+    sd = len(codebooks[0][0])
+    n_cand = k * rerank_factor if rerank is not None else k
+    q_ids, Q = _collect_query_batch(
+        queries, query_id_col, vec_col, "pq_topk", max_query_batch
+    )
+    if Q.shape[1] != m * sd:
+        raise ValueError(
+            f"pq_topk: query vector dim {Q.shape[1]} != codebook dim "
+            f"{m * sd} (m={m} x sd={sd})"
+        )
+    n_q = len(q_ids)
+    # LUT[q, s, code] = dot(q_sub, codebooks[s][code])
+    LUT = np.stack(
+        [
+            Q[:, s * sd : (s + 1) * sd] @ np.asarray(codebooks[s]).T
+            for s in range(m)
+        ],
+        axis=1,
+    )
+    qid_t = queries.schema[query_id_col].dataType.simpleString()
+    cid_t = encoded.schema[id_col].dataType.simpleString()
+    schema = f"{query_id_col} {qid_t}, {id_col} {cid_t}, score double"
 
-        qrows = _collect_query_batch(
-            queries, query_id_col, vec_col, "pq_topk", max_query_batch
-        )
-        q_ids = np.array([r[0] for r in qrows])
-        Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0] = 1.0
-        Q = Q / qn[:, None]
-        if Q.shape[1] != m * sd:
-            raise ValueError(
-                f"pq_topk: query vector dim {Q.shape[1]} != codebook dim "
-                f"{m * sd} (m={m} x sd={sd})"
+    # Rerank-fetch cell pruning (round 14, r13-verdict item 4):
+    # when BOTH the encoded frame and the rerank frame carry an IVF
+    # `cell` column (the at-rest cold layout: codes stamped with
+    # their vector's cell, rerank corpus partitioned by cell), the
+    # exact-vector fetch is restricted to the candidates' OWN cells
+    # — a static partition-pruning IN filter, exact by
+    # construction (every candidate id lives in its stamped cell).
+    # Measured at 10M/64 cells: the ADC top-1500 of a point query
+    # landed in ONE cell (61 MB) vs the 2.6 GB full-corpus fetch
+    # that made the cold PQ serve SLOWER than brute (0.74-0.81x).
+    prune_cells = (
+        rerank is not None
+        and "cell" in encoded.columns
+        and "cell" in rerank.columns
+    )
+
+    def gen(batches):
+        # running top-n_cand per query across the PARTITION's
+        # batches, emitted once: the old per-batch emission shipped
+        # n_q*n_cand rows per Arrow batch into the global window
+        # (candidate budget x batch count rows through the
+        # shuffle), which made large rerank budgets — the recall
+        # lever — pay a linear wall tax. The pruning order is the
+        # same (score desc, id asc) total order the final window
+        # applies, so the global result set is IDENTICAL.
+        pool_ids = pool_S = pool_cells = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy()
+            codes = np.stack(
+                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
             )
-        n_q = len(q_ids)
-        # LUT[q, s, code] = dot(q_sub, codebooks[s][code])
-        LUT = np.stack(
-            [
-                Q[:, s * sd : (s + 1) * sd] @ np.asarray(codebooks[s]).T
-                for s in range(m)
-            ],
-            axis=1,
-        )
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        cid_t = encoded.schema[id_col].dataType.simpleString()
-        schema = f"{query_id_col} {qid_t}, {id_col} {cid_t}, score double"
-        # layout detection: pq_widen's columnar codes (code_0..code_{m-1}
-        # flat columns) vs the classic codes array. Wide columns reach
-        # the scorer as flat int arrays — no per-row list->ndarray
-        # stack, the decode cost that dominated the array-layout cold
-        # ADC serve (round 13).
-        wide = "codes" not in encoded.columns
-        if wide:
-            missing = [
-                s for s in range(m) if f"code_{s}" not in encoded.columns
-            ]
-            if missing or f"code_{m}" in encoded.columns:
+            if codes.shape[1] != m:
+                # codes LONGER than m would otherwise silently use the
+                # first m entries against the wrong codebooks
                 raise ValueError(
-                    "pq_topk: encoded frame has neither a 'codes' array nor "
-                    f"exactly code_0..code_{m - 1} wide columns for "
-                    f"codebook count m={m} "
-                    f"(missing={missing[:4]}, columns={encoded.columns[:6]})"
+                    f"pq_topk: encoded codes length "
+                    f"{codes.shape[1]} != codebook count m={m}"
                 )
-
-        # Rerank-fetch cell pruning (round 14, r13-verdict item 4):
-        # when BOTH the encoded frame and the rerank frame carry an IVF
-        # `cell` column (the at-rest cold layout: codes stamped with
-        # their vector's cell, rerank corpus partitioned by cell), the
-        # exact-vector fetch is restricted to the candidates' OWN cells
-        # — a static partition-pruning IN filter, exact by
-        # construction (every candidate id lives in its stamped cell).
-        # Measured at 10M/64 cells: the ADC top-1500 of a point query
-        # landed in ONE cell (61 MB) vs the 2.6 GB full-corpus fetch
-        # that made the cold PQ serve SLOWER than brute (0.74-0.81x).
-        prune_cells = (
-            rerank is not None
-            and "cell" in encoded.columns
-            and "cell" in rerank.columns
-        )
-
-        def gen(batches):
-            # running top-n_cand per query across the PARTITION's
-            # batches, emitted once: the old per-batch emission shipped
-            # n_q*n_cand rows per Arrow batch into the global window
-            # (candidate budget x batch count rows through the
-            # shuffle), which made large rerank budgets — the recall
-            # lever — pay a linear wall tax. The pruning order is the
-            # same (score desc, id asc) total order the final window
-            # applies, so the global result set is IDENTICAL.
-            pool_ids = pool_S = pool_cells = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy()
-                # scores: (n_q, n_batch) = Σ_s LUT[:, s, codes[:, s]]
-                S = np.zeros((n_q, len(ids)))
-                if wide:
-                    for s in range(m):
-                        S += LUT[:, s, pdf[f"code_{s}"].to_numpy()]
-                else:
-                    codes = np.stack(
-                        [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-                    )
-                    if codes.shape[1] != m:
-                        # codes LONGER than m would otherwise silently
-                        # use the first m entries against the wrong
-                        # codebooks
-                        raise ValueError(
-                            f"pq_topk: encoded codes length "
-                            f"{codes.shape[1]} != codebook count m={m}"
-                        )
-                    for s in range(m):
-                        S += LUT[:, s, codes[:, s]]
-                bid = np.broadcast_to(ids, (n_q, len(ids)))
-                bcell = (
-                    np.broadcast_to(
-                        pdf["cell"].to_numpy(), (n_q, len(ids))
-                    )
-                    if prune_cells
-                    else None
-                )
-                if pool_S is not None:
-                    S = np.concatenate([pool_S, S], axis=1)
-                    bid = np.concatenate([pool_ids, bid], axis=1)
-                    if prune_cells:
-                        bcell = np.concatenate([pool_cells, bcell], axis=1)
-                kb = min(n_cand, S.shape[1])
-                order = np.lexsort((bid, -S), axis=1)[:, :kb]
-                pool_S = np.take_along_axis(S, order, axis=1)
-                pool_ids = np.take_along_axis(bid, order, axis=1)
+            # scores: (n_q, n_batch) = Σ_s LUT[:, s, codes[:, s]]
+            S = np.zeros((n_q, len(ids)))
+            for s in range(m):
+                S += LUT[:, s, codes[:, s]]
+            bid = np.broadcast_to(ids, (n_q, len(ids)))
+            bcell = (
+                np.broadcast_to(pdf["cell"].to_numpy(), (n_q, len(ids)))
+                if prune_cells
+                else None
+            )
+            if pool_S is not None:
+                S = np.concatenate([pool_S, S], axis=1)
+                bid = np.concatenate([pool_ids, bid], axis=1)
                 if prune_cells:
-                    pool_cells = np.take_along_axis(bcell, order, axis=1)
-            if pool_S is None:
-                return
-            kb = pool_S.shape[1]
-            out = {
-                query_id_col: np.repeat(q_ids, kb),
-                id_col: pool_ids.ravel(),
-                "score": pool_S.ravel(),
-            }
+                    bcell = np.concatenate([pool_cells, bcell], axis=1)
+            kb = min(n_cand, S.shape[1])
+            order = np.lexsort((bid, -S), axis=1)[:, :kb]
+            pool_S = np.take_along_axis(S, order, axis=1)
+            pool_ids = np.take_along_axis(bid, order, axis=1)
             if prune_cells:
-                out["cell"] = pool_cells.ravel()
-            yield pd.DataFrame(out)
-
-        scan_cols = (
-            [f"code_{s}" for s in range(m)] if wide else ["codes"]
-        )
+                pool_cells = np.take_along_axis(bcell, order, axis=1)
+        if pool_S is None:
+            return
+        kb = pool_S.shape[1]
+        out = {
+            query_id_col: np.repeat(q_ids, kb),
+            id_col: pool_ids.ravel(),
+            "score": pool_S.ravel(),
+        }
         if prune_cells:
-            scan_cols.append("cell")
-            cell_t = encoded.schema["cell"].dataType.simpleString()
-            schema += f", cell {cell_t}"
-        partial = encoded.select(id_col, *scan_cols).mapInPandas(gen, schema)
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        )
-        top = partial.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= n_cand
-        )
-        if rerank is not None:
-            qu = (
-                queries.select(query_id_col, F.col(vec_col).alias("_qv"))
-                .withColumn("_qu", _unit("_qv"))
-                .drop("_qv")
-            )
-            top = top.join(F.broadcast(qu), query_id_col)
-    elif kernel == "column":
-        if "codes" not in encoded.columns:
-            raise ValueError(
-                "pq_topk: kernel='column' requires the 'codes' array "
-                "layout — pq_widen frames are matrix-kernel only"
-            )
-        qu = (
-            queries.select(query_id_col, F.col(vec_col).alias("_qv"))
-            .withColumn("_qu", _unit("_qv"))
-            .drop("_qv")
-        )
-        sub_terms = []
-        for si in range(m):
-            lo = si * sd
-            cb_arr = (
-                "array("
-                + ", ".join(
-                    "array(" + ", ".join(_d(x) for x in c) + ")"
-                    for c in codebooks[si]
-                )
-                + ")"
-            )
-            sub_terms.append(
-                f"aggregate(zip_with(slice(_qu, {lo + 1}, {sd}),"
-                f" element_at({cb_arr}, element_at(codes, {si + 1}) + 1),"
-                " (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-            )
-        score = F.expr(" + ".join(f"({t})" for t in sub_terms))
-        # Dimension guards, BOTH sides (second review pass): slice() on
-        # a short query vector and element_at past a short codes array
-        # each silently yield NULL sub-dots — an all-NULL "top-k" — so
-        # both fail loudly. Sizes go through coalesce: size(NULL) is
-        # NULL, and concat with a NULL operand would swallow the whole
-        # error message.
-        _qd = F.coalesce(F.size("_qu").cast("string"), F.lit("NULL"))
-        _cd = F.coalesce(F.size("codes").cast("string"), F.lit("NULL"))
-        # eqNullSafe, not ==: size(NULL array) is NULL, a NULL when-
-        # condition falls through the chain, and a NULL row would reach
-        # otherwise() and score as NULL silently
-        score = (
-            F.when(
-                ~F.size("codes").eqNullSafe(m),
-                F.raise_error(
-                    F.concat(
-                        F.lit("pq_topk: encoded codes length "), _cd,
-                        F.lit(f" != codebook count m={m}"),
-                    )
-                ),
-            )
-            .when(
-                ~F.size("_qu").eqNullSafe(m * sd),
-                F.raise_error(
-                    F.concat(
-                        F.lit("pq_topk: query vector dim "), _qd,
-                        F.lit(f" != codebook dim {m * sd} (m={m} x sd={sd})"),
-                    )
-                ),
-            )
-            .otherwise(score)
-        )
-        scored = encoded.join(F.broadcast(qu), how="cross").withColumn(
-            "score", score
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        )
-        top = scored.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= n_cand
-        )
-    else:
-        raise ValueError(f"pq_topk: unknown kernel {kernel!r}")
+            out["cell"] = pool_cells.ravel()
+        yield pd.DataFrame(out)
+
+    scan_cols = ["codes"]
+    if prune_cells:
+        scan_cols.append("cell")
+        cell_t = encoded.schema["cell"].dataType.simpleString()
+        schema += f", cell {cell_t}"
+    partial = encoded.select(id_col, *scan_cols).mapInPandas(gen, schema)
     if rerank is None:
-        return top.select(
-            query_id_col, id_col, "score", F.col("_rn").alias("rank")
-        )
+        return _rank_topk(partial, k, "score", id_col, query_id_col)
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("score").desc(), F.col(id_col).asc()
+    )
+    top = partial.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= n_cand
+    )
+    qu = (
+        queries.select(query_id_col, F.col(vec_col).alias("_qv"))
+        .withColumn("_qu", _unit("_qv"))
+        .drop("_qv")
+    )
+    top = top.join(F.broadcast(qu), query_id_col)
     # the candidate set is query-batch-bounded (n_queries * k * factor)
     # while `rerank` is the corpus: BROADCAST the candidates so the
     # exact-vector fetch is one corpus scan with no shuffle, and
-    # normalize AFTER the join — the per-row _unit transform is an
-    # interpreted HOF, and computing it corpus-wide just to fetch a
-    # few thousand candidates was the serve wall at 1M (the join
-    # itself probes only the raw id column)
-    if kernel == "matrix" and prune_cells:
+    # normalize AFTER the join inside the vectorized cosine below
+    if prune_cells:
         # restrict the exact-vector fetch to the candidates' OWN cells:
         # a literal IN on the rerank table's partition column, so a
         # cell-partitioned at-rest corpus scans only the probed cells'
@@ -1683,34 +1424,21 @@ def pq_topk(
     cand = rerank.select(id_col, F.col(vec_col).alias("_cv")).join(
         F.broadcast(top.select(query_id_col, id_col, "_qu")), id_col
     )
-    if kernel == "matrix":
-        # vectorized exact cosine in ONE Arrow pass: the interpreted
-        # per-row _unit HOF + fold made the rerank scale linearly with
-        # the candidate budget (r11 probe: +4.5 s going 3000 -> 5000
-        # candidates at 1M), which defeated the budget-as-recall-lever.
-        # ~1 ULP from the fold — inside this kernel's documented slack.
-        from pyspark.sql.functions import pandas_udf
+    # vectorized exact cosine in ONE Arrow pass: an interpreted per-row
+    # _unit HOF + fold made the rerank scale linearly with the
+    # candidate budget (r11 probe: +4.5 s going 3000 -> 5000
+    # candidates at 1M), which defeated the budget-as-recall-lever.
+    from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("double")
-        def _cosine(cv: pd.Series, qu: pd.Series) -> pd.Series:
-            if not len(cv):
-                return pd.Series([], dtype="float64")
-            C = np.stack([np.asarray(v, dtype=np.float64) for v in cv])
-            Q = np.stack([np.asarray(v, dtype=np.float64) for v in qu])
-            nrm = np.linalg.norm(C, axis=1)
-            nrm[nrm == 0] = 1.0
-            return pd.Series((C * Q).sum(axis=1) / nrm)
+    @pandas_udf("double")
+    def _cosine(cv: pd.Series, qu: pd.Series) -> pd.Series:
+        if not len(cv):
+            return pd.Series([], dtype="float64")
+        C = np.stack([np.asarray(v, dtype=np.float64) for v in cv])
+        Qs = np.stack([np.asarray(v, dtype=np.float64) for v in qu])
+        nrm = np.linalg.norm(C, axis=1)
+        nrm[nrm == 0] = 1.0
+        return pd.Series((C * Qs).sum(axis=1) / nrm)
 
-        rr = cand.withColumn("cosine", _cosine("_cv", "_qu"))
-    else:
-        rr = cand.withColumn("_cu", _unit("_cv")).withColumn(
-            "cosine", _dot("_cu", "_qu")
-        )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        rr.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("_rn").alias("rank"))
-    )
+    rr = cand.withColumn("cosine", _cosine("_cv", "_qu"))
+    return _rank_topk(rr, k, "cosine", id_col, query_id_col)

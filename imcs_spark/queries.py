@@ -1416,9 +1416,14 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
+    # brute_fallback_coverage=None / brute_fallback=False: the legs
+    # measure the INDEX against the DuckDB twins, so the serves must
+    # not swap to their exact fallbacks (3 queries x 3 probes can
+    # cover all 8 cells; `emb` may be RAM-resident)
     def _ivf():
         return similarity.ivf_topk(
-            emb, queries_df, k=5, n_centroids=8, n_probe=3, iters=1, index=ivf_index
+            emb, queries_df, k=5, n_centroids=8, n_probe=3, iters=1,
+            index=ivf_index, brute_fallback_coverage=None,
         )
     # PQ legs (round 10): codebooks from the same sequential fixed-
     # order kernel, so oracle_pq.py recomputes train -> encode -> ADC
@@ -1442,7 +1447,8 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     def _pq():
         return similarity.pq_topk(
-            pq_index[1], queries_df, pq_index[0], k=5, rerank=emb, rerank_factor=4
+            pq_index[1], queries_df, pq_index[0], k=5, rerank=emb,
+            rerank_factor=4, brute_fallback=False,
         )
 
     exact = _exact_top5(spark, sf_dir)
@@ -1458,10 +1464,11 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # three independent serve+recall legs -> thread-pooled plan
     # construction (_parallel_union, r13): the serve builders are the
-    # heavy py4j chains (lsh bucket probe / ivf probe-cell plan / pq
-    # ADC+rerank); the shared index ARTIFACTS were resolved serially
-    # above so the thread pool never races _artifact's build path.
-    # Execution still happens in the single collect of the union.
+    # heavy driver-side steps (lsh bucket probe chain / ivf and pq
+    # query-batch collects); the shared index ARTIFACTS were resolved
+    # serially above so the thread pool never races _artifact's build
+    # path. The serves themselves run in the single collect of the
+    # union.
     return _parallel_union([
         lambda: recall(_lsh(), "lsh"),
         lambda: recall(_ivf(), "ivf"),

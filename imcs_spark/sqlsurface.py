@@ -390,6 +390,6 @@ def register_views(spark: SparkSession, engine=None, **frames) -> None:
     reachable from any SQL session."""
     if engine is not None:
         for name, t in engine.tables.items():
-            t.df.createOrReplaceTempView(name)
+            t.df().createOrReplaceTempView(name)
     for name, df in frames.items():
         df.createOrReplaceTempView(name)

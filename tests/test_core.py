@@ -361,13 +361,17 @@ def test_readme_quickstart_runs(spark, tmp_path):
     assert n == 12
 
     register_sql(spark)
+    # both publishing forms: keyword DataFrames and a whole Engine
     register_views(spark, quote_sql=q.df())
-    out = spark.sql(
+    register_views(spark, engine=eng)
+    for view in ("quote_sql", "quote"):
+        out = spark.sql(
+            f"""
+          SELECT symbol, cs_wavg(CAST(volume AS DOUBLE), close) AS vwap
+          FROM {view} GROUP BY symbol
         """
-      SELECT symbol, cs_wavg(CAST(volume AS DOUBLE), close) AS vwap
-      FROM quote_sql GROUP BY symbol
-    """
-    ).collect()
-    got = {r["symbol"]: r["vwap"] for r in out}
-    assert set(got) == {"IBM", "MSFT"} and all(v > 0 for v in got.values())
+        ).collect()
+        got = {r["symbol"]: r["vwap"] for r in out}
+        assert set(got) == {"IBM", "MSFT"} and all(v > 0 for v in got.values())
+    spark.catalog.dropTempView("quote")
     eng.drop("quote")

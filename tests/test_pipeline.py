@@ -1661,36 +1661,76 @@ def test_brute_force_topk_matrix_matches_column_kernel(spark, sf_dir):
         assert abs(ka[key][1] - kb[key][1]) < 1e-7
 
 
-def test_ivf_matrix_kernel_matches_column_kernel(spark, sf_dir):
-    """ivf_index/ivf_topk kernel='matrix' (numpy argmax assignment +
-    Arrow dot scoring) returns the same cells and neighbor sets as the
-    Column kernel for the same trained centroids."""
+def _duckdb_embeddings(sf_dir):
+    """DuckDB connection over the embeddings table, plus the unit-vector
+    CTE prefix ``u(vec_id, u)`` the oracle_ivf / oracle_pq chains
+    append to (the ann_recall oracle's normalization)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    return con, """
+WITH u AS (
+  SELECT vec_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)
+           / CASE WHEN nrm = 0 THEN 1 ELSE nrm END) AS u
+  FROM (
+    SELECT vec_id, embedding,
+           sqrt(list_sum(list_transform(embedding, x -> CAST(x * x AS DOUBLE)))) AS nrm
+    FROM embeddings
+  )
+)"""
+
+
+def test_ivf_index_and_serve_match_duckdb_twin(spark, sf_dir):
+    """ivf_index (numpy argmax per Arrow batch) assigns the same cells,
+    and the masked ivf_topk serve returns the same ranked ids, as the
+    DuckDB twin (oracle_ivf.ivf_ctes: iv_asg* cell map, iv_cand
+    re-rank) for the same bit-identical sequential centroids."""
+    from imcs_spark.oracle_ivf import ivf_ctes
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = S.train_ivf_centroids(corpus, n_centroids=8, iters=2)
-    queries = corpus.filter(F.col("vec_id") % 101 == 5).limit(5).selectExpr(
+    cents = S.train_ivf_centroids(
+        corpus, n_centroids=8, iters=2, kernel="sequential"
+    )
+    queries = corpus.filter(F.col("vec_id") < 5).selectExpr(
         "vec_id AS query_id", "embedding"
     )
-    out = {}
-    for kern in ("column", "matrix"):
-        idx = S.ivf_index(corpus, centroids=cents, kernel=kern)
+    idx = S.ivf_index(corpus, centroids=cents)
+    try:
         cells = {r.vec_id: r.cell for r in idx[1].collect()}
         top = {
             (r.query_id, r.rank): r.vec_id
             for r in S.ivf_topk(
-                corpus, queries, k=5, n_probe=3, index=idx, kernel=kern,
-                # pin the MASKED serve: the parity under test is
-                # column-vs-matrix IVF, and a broad union-of-probes
-                # would otherwise trip the matrix kernel's exact
-                # full-coverage fallback (tested separately)
+                corpus, queries, k=5, n_probe=3, index=idx,
+                # pin the MASKED serve: a broad union-of-probes would
+                # otherwise trip the exact full-coverage fallback
+                # (tested separately)
                 brute_fallback_coverage=None,
             ).collect()
         }
-        out[kern] = (cells, top)
+    finally:
         idx[1].unpersist()
-    assert out["column"][0] == out["matrix"][0]  # identical cell map
-    assert out["column"][1] == out["matrix"][1]  # identical ranked ids
+
+    con, u = _duckdb_embeddings(sf_dir)
+    chain = u + ivf_ctes(n_centroids=8, iters=2, n_probe=3, k=5, n_queries=5)
+    want_cells = dict(con.execute(chain + "\nSELECT vec_id, cell FROM iv_asg2").fetchall())
+    want_top = {
+        (q, rn): v
+        for q, v, rn in con.execute(
+            chain
+            + """
+SELECT query_id, vec_id,
+       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rn
+FROM iv_cand QUALIFY rn <= 5"""
+        ).fetchall()
+    }
+    assert cells == want_cells  # identical cell map
+    assert top == want_top  # identical ranked ids
 
 
 def test_ivf_sequential_centroids_bit_equal_duckdb(spark, sf_dir):
@@ -1756,21 +1796,28 @@ def test_pq_sequential_codebooks_bit_equal_duckdb(spark, sf_dir):
             assert struct.pack("<d", a) == struct.pack("<d", b), (sub, ci, j, a, b)
 
 
-def test_pq_matrix_kernel_matches_column_kernel(spark, sf_dir):
-    """pq_encode kernel='matrix' (numpy squared-L2 argmin per Arrow
-    batch) returns the same code arrays as the Column expression for
-    the same codebooks — the ivf matrix-kernel equality applied to
-    PQ."""
+def test_pq_encode_matches_duckdb_twin(spark, sf_dir):
+    """pq_encode (numpy squared-L2 argmin per Arrow batch) returns the
+    same code arrays as the DuckDB twin (oracle_pq.pq_ctes: pq_a*) for
+    the same bit-identical sequential codebooks — the ivf_index cell
+    map pin applied to PQ."""
+    from imcs_spark.oracle_pq import pq_ctes
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = S.train_pq_codebooks(corpus, m=4, n_codes=8, iters=2)
-    col = {r.vec_id: list(r.codes) for r in S.pq_encode(corpus, books).collect()}
-    mat = {
-        r.vec_id: list(r.codes)
-        for r in S.pq_encode(corpus, books, kernel="matrix").collect()
-    }
-    assert col == mat
+    books = S.train_pq_codebooks(
+        corpus, m=2, n_codes=4, iters=2, kernel="sequential"
+    )
+    got = {r.vec_id: list(r.codes) for r in S.pq_encode(corpus, books).collect()}
+    con, u = _duckdb_embeddings(sf_dir)
+    want = dict(
+        con.execute(
+            u
+            + pq_ctes(m=2, n_codes=4, iters=2, n_queries=0)
+            + "\nSELECT vec_id, list(code ORDER BY sub) FROM pq_a2 GROUP BY vec_id"
+        ).fetchall()
+    )
+    assert got == want
 
 
 def test_pq_topk_rerank_recovers_exact_neighbors(spark, sf_dir):
@@ -1781,7 +1828,7 @@ def test_pq_topk_rerank_recovers_exact_neighbors(spark, sf_dir):
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     books = S.train_pq_codebooks(corpus, m=4, n_codes=8, iters=2)
-    enc = S.pq_encode(corpus, books, kernel="matrix")
+    enc = S.pq_encode(corpus, books)
     queries = corpus.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
     out = S.pq_topk(enc, queries, books, k=5, rerank=corpus, rerank_factor=8)
     rows = out.collect()
@@ -1806,38 +1853,66 @@ def test_pq_m_must_divide_dim(spark):
         S._pq_slices(64, 5)
 
 
-def test_pq_topk_matrix_kernel_matches_column_kernel(spark, sf_dir):
-    """pq_topk kernel='matrix' (driver LUT + numpy gather per batch)
-    returns the same candidate ids and post-rerank ranking as the
-    Column ADC fold for the same codebooks and codes."""
+def test_pq_topk_matches_duckdb_twin(spark, sf_dir):
+    """pq_topk (driver LUT + numpy gather per batch) returns the same
+    ranked ids as the DuckDB twin (oracle_pq.pq_ctes) for the same
+    codebooks: the ADC top-k without rerank (pq_score), and the
+    post-rerank ranking with it (pq_rr)."""
+    from imcs_spark.oracle_pq import pq_ctes
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = S.train_pq_codebooks(corpus, m=4, n_codes=8, iters=2)
-    enc = S.pq_encode(corpus, books, kernel="matrix").persist()
-    queries = corpus.filter(F.col("vec_id") % 97 == 3).limit(4).selectExpr(
+    books = S.train_pq_codebooks(
+        corpus, m=2, n_codes=4, iters=2, kernel="sequential"
+    )
+    enc = S.pq_encode(corpus, books).persist()
+    queries = corpus.filter(F.col("vec_id") < 4).selectExpr(
         "vec_id AS query_id", "embedding"
     )
-    out = {}
-    for kern in ("column", "matrix"):
-        rows = S.pq_topk(
-            enc, queries, books, k=5, rerank=corpus, rerank_factor=4,
-            # the parity under test is column-vs-matrix ADC; pin the
-            # ADC path so a cache-resident corpus (any test caching a
-            # plan-identical read) can't swap the matrix leg to the
-            # exact brute fallback
-            kernel=kern, brute_fallback=False,
-        ).collect()
-        out[kern] = {(r.query_id, r.rank): r.vec_id for r in rows}
-    enc.unpersist()
-    assert out["column"] == out["matrix"]
+    try:
+        adc = {
+            (r.query_id, r.rank): r.vec_id
+            for r in S.pq_topk(enc, queries, books, k=5).collect()
+        }
+        rr = {
+            (r.query_id, r.rank): r.vec_id
+            for r in S.pq_topk(
+                enc, queries, books, k=5, rerank=corpus, rerank_factor=4,
+                # pin the ADC path so a cache-resident corpus (any test
+                # caching a plan-identical read) can't swap it to the
+                # exact brute fallback
+                brute_fallback=False,
+            ).collect()
+        }
+    finally:
+        enc.unpersist()
+
+    con, u = _duckdb_embeddings(sf_dir)
+    chain = u + pq_ctes(
+        m=2, n_codes=4, iters=2, k=5, n_queries=4, rerank_factor=4
+    )
+
+    def ranked(cte, col):
+        return {
+            (q, rn): v
+            for q, v, rn in con.execute(
+                chain
+                + f"""
+SELECT query_id, vec_id,
+       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY {col} DESC, vec_id) AS rn
+FROM {cte} QUALIFY rn <= 5"""
+            ).fetchall()
+        }
+
+    assert adc == ranked("pq_score", "score")
+    assert rr == ranked("pq_rr", "cos")
 
 
 def test_pq_dim_mismatch_raises(spark):
     """A corpus/query vector whose dimension does not match the
-    codebooks' m*sd must fail LOUDLY in every kernel (round-10 review:
-    the column kernel's slice() on a short vector silently produced
-    null sub-distances and an arbitrary argmin code)."""
+    codebooks' m*sd must fail LOUDLY (round-10 review: a slice() on a
+    short vector silently produced null sub-distances and an arbitrary
+    argmin code)."""
     from imcs_spark.pipeline import similarity as S
 
     # m=2 subspaces x sd=4 -> codebook dim 8; vectors are 6-dim
@@ -1851,8 +1926,6 @@ def test_pq_dim_mismatch_raises(spark):
     )
     with pytest.raises(Exception, match="pq_encode.*dim"):
         S.pq_encode(short, books).collect()
-    with pytest.raises(Exception, match="pq_encode.*dim"):
-        S.pq_encode(short, books, kernel="matrix").collect()
 
     ok = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 1.0])],
@@ -1860,27 +1933,22 @@ def test_pq_dim_mismatch_raises(spark):
     )
     enc = S.pq_encode(ok, books)
     short_q = short.selectExpr("vec_id AS query_id", "embedding")
-    with pytest.raises(Exception, match="pq_topk.*dim"):
-        S.pq_topk(enc, short_q, books, k=1).collect()
     with pytest.raises(ValueError, match="pq_topk.*dim"):
-        S.pq_topk(enc, short_q, books, k=1, kernel="matrix")
+        S.pq_topk(enc, short_q, books, k=1)
 
     # corpus-side guard (second review pass): codes whose length does
     # not match the codebook count — LONGER codes would otherwise
     # silently score the first m entries against the wrong codebooks
-    # (matrix) or element_at past the end into all-NULL scores (column)
     ok_q = ok.selectExpr("vec_id AS query_id", "embedding")
     bad_codes = spark.createDataFrame(
         [(1, [0, 1, 0, 1])], "vec_id long, codes array<int>"
     )
     with pytest.raises(Exception, match="codes length"):
         S.pq_topk(bad_codes, ok_q, books, k=1).collect()
-    with pytest.raises(Exception, match="codes length"):
-        S.pq_topk(bad_codes, ok_q, books, k=1, kernel="matrix").collect()
 
 
 def test_matrix_kernels_query_batch_cap(spark, sf_dir):
-    """Round-13 verdict item 4: the three matrix kernels COLLECT the
+    """Round-13 verdict item 4: the three matrix serves COLLECT the
     query batch to the driver under a documented bounded-queries
     contract — the docstring used to be the only guard, and a
     corpus-scale query side would OOM the driver instead of raising.
@@ -1892,21 +1960,18 @@ def test_matrix_kernels_query_batch_cap(spark, sf_dir):
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = corpus.limit(5).selectExpr("vec_id AS query_id", "embedding")
     cents = [[1.0] + [0.0] * 63, [0.0, 1.0] + [0.0] * 62]
-    idx = S.ivf_index(corpus, centroids=cents, kernel="matrix")
+    idx = S.ivf_index(corpus, centroids=cents)
     books = [[[0.0] * 4, [1.0] * 4] for _ in range(16)]
-    enc = S.pq_encode(corpus, books, kernel="matrix")
+    enc = S.pq_encode(corpus, books)
     try:
         for call in (
             lambda q, cap: S.brute_force_topk_matrix(
                 corpus, q, k=3, max_query_batch=cap
             ),
             lambda q, cap: S.ivf_topk(
-                corpus, q, k=3, n_probe=1, index=idx, kernel="matrix",
-                max_query_batch=cap,
+                corpus, q, k=3, n_probe=1, index=idx, max_query_batch=cap
             ),
-            lambda q, cap: S.pq_topk(
-                enc, q, books, k=3, kernel="matrix", max_query_batch=cap
-            ),
+            lambda q, cap: S.pq_topk(enc, q, books, k=3, max_query_batch=cap),
         ):
             with pytest.raises(ValueError, match="max_query_batch=3"):
                 call(queries, 3)
@@ -1917,28 +1982,88 @@ def test_matrix_kernels_query_batch_cap(spark, sf_dir):
         idx[1].unpersist()
 
 
-def test_ivf_full_coverage_brute_fallback(spark, sf_dir):
+def test_ann_serves_keep_string_ids(spark):
+    """The collected-query kernels keep the callers' id types: string
+    corpus and query ids flow through ivf_index/ivf_topk (masked and
+    full-coverage fallback), pq_encode/pq_topk and
+    brute_force_topk_matrix, and the exact forms rank like
+    brute_force_topk."""
+    import numpy as np
+
+    from imcs_spark.pipeline import similarity as S
+
+    rng = np.random.RandomState(7)
+    X = rng.randn(40, 8)
+    corpus = spark.createDataFrame(
+        [(f"v{i}", X[i].tolist()) for i in range(40)],
+        "vec_id string, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(f"q{i}", X[i].tolist()) for i in range(3)],
+        "query_id string, embedding array<double>",
+    )
+
+    def ranked(df):
+        rows = df.collect()
+        assert all(isinstance(r.vec_id, str) for r in rows)
+        return {(r.query_id, r.rank): r.vec_id for r in rows}
+
+    exact = ranked(S.brute_force_topk(corpus, queries, k=3))
+    assert ranked(S.brute_force_topk_matrix(corpus, queries, k=3)) == exact
+    idx = S.ivf_index(corpus, n_centroids=4, iters=1)
+    books = S.train_pq_codebooks(corpus, m=2, n_codes=4, iters=1)
+    try:
+        # 3 queries x 4 probes cover all 4 cells: exact fallback
+        assert ranked(S.ivf_topk(corpus, queries, k=3, n_probe=4, index=idx)) == exact
+        masked = ranked(
+            S.ivf_topk(
+                corpus, queries, k=3, n_probe=1, index=idx,
+                brute_fallback_coverage=None,
+            )
+        )
+        # each query's own vector sits in its nearest cell
+        assert all(masked[(f"q{i}", 1)] == f"v{i}" for i in range(3))
+        pq = ranked(
+            S.pq_topk(
+                S.pq_encode(corpus, books), queries, books, k=3,
+                rerank=corpus, rerank_factor=14, brute_fallback=False,
+            )
+        )
+        # 42 candidates >= 40 rows: the rerank sees the whole corpus
+        assert pq == exact
+    finally:
+        idx[1].unpersist()
+
+
+def test_ivf_full_coverage_brute_fallback(spark, sf_dir, monkeypatch):
     """Round-13 verdict item 2: when a query batch's union-of-probes
     covers every cell, the masked matrix serve decodes the whole corpus
     like brute while paying per-cell grouping overhead (0.74x of brute
     recorded at 10M — BENCH_r12), so the default serve falls back to an
     EXACT full matmul over the cached index. Pin: (a) at full coverage
-    the default answer equals exact brute force; (b) a point query
+    the default answer equals exact brute force, and the query batch
+    is collected once (the fallback reuses it); (b) a point query
     stays on the masked path (results equal the fallback-disabled
     serve); (c) fallback results are never worse — exact recall."""
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    idx = S.ivf_index(corpus, n_centroids=8, iters=2, kernel="matrix")
+    idx = S.ivf_index(corpus, n_centroids=8, iters=2)
+    collects = []
+    collect = S._collect_query_batch
+
+    def counting_collect(*a, **kw):
+        collects.append(a[3])
+        return collect(*a, **kw)
+
     try:
         # 12 queries x 3 probes over 8 cells: union covers all 8
         broad = corpus.limit(12).selectExpr("vec_id AS query_id", "embedding")
-        got = {
-            (r.query_id, r.rank): r.vec_id
-            for r in S.ivf_topk(
-                corpus, broad, k=5, n_probe=3, index=idx, kernel="matrix"
-            ).collect()
-        }
+        monkeypatch.setattr(S, "_collect_query_batch", counting_collect)
+        served = S.ivf_topk(corpus, broad, k=5, n_probe=3, index=idx)
+        monkeypatch.undo()
+        assert collects == ["ivf_topk"]
+        got = {(r.query_id, r.rank): r.vec_id for r in served.collect()}
         exact = {
             (r.query_id, r.rank): r.vec_id
             for r in S.brute_force_topk_matrix(corpus, broad, k=5).collect()
@@ -1951,7 +2076,7 @@ def test_ivf_full_coverage_brute_fallback(spark, sf_dir):
         masked = lambda cov: {
             (r.query_id, r.rank): r.vec_id
             for r in S.ivf_topk(
-                corpus, q1, k=5, n_probe=3, index=idx, kernel="matrix",
+                corpus, q1, k=5, n_probe=3, index=idx,
                 brute_fallback_coverage=cov,
             ).collect()
         }
@@ -1963,7 +2088,7 @@ def test_ivf_full_coverage_brute_fallback(spark, sf_dir):
 def test_pq_ram_resident_brute_fallback(spark, sf_dir):
     """Round-13 verdict item 2 (PQ side): ADC's serve economics are a
     byte lever that cannot pay when the exact vectors are RAM-resident
-    (0.35x of brute recorded at 10M — BENCH_r12), so kernel='matrix'
+    (0.35x of brute recorded at 10M — BENCH_r12), so pq_topk
     with a memory-cached rerank corpus serves exact brute top-k under
     brute_fallback='auto'. Pin: uncached rerank -> 'auto' stays on the
     real ADC+rerank path; cached rerank -> exact answer;
@@ -1988,7 +2113,7 @@ def test_pq_ram_resident_brute_fallback(spark, sf_dir):
             (r.query_id, r.rank): r.vec_id
             for r in S.pq_topk(
                 enc, queries, books, k=5, rerank=corpus, rerank_factor=4,
-                kernel="matrix", **kw,
+                **kw,
             ).collect()
         }
 
@@ -2005,49 +2130,6 @@ def test_pq_ram_resident_brute_fallback(spark, sf_dir):
     finally:
         enc.unpersist()
         corpus.unpersist()
-
-
-def test_pq_wide_codes_layout_matches_array(spark, sf_dir):
-    """pq_widen (round 13): columnar code_<s> smallint columns are the
-    PQ-at-rest layout — the matrix ADC scan reads them as flat arrays
-    (no per-row list->ndarray stack, the measured cold-serve decode
-    wall). Pin: identical ranked output to the array layout with and
-    without rerank; pq_widen rejects non-encoded frames; the column
-    kernel rejects wide frames."""
-    from imcs_spark.pipeline import similarity as S
-
-    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = S.train_pq_codebooks(corpus, m=4, n_codes=8, iters=2)
-    enc = S.pq_encode(corpus, books, kernel="matrix").persist()
-    wideframe = S.pq_widen(enc)
-    queries = corpus.limit(4).selectExpr("vec_id AS query_id", "embedding")
-
-    def rankmap(e, **kw):
-        return {
-            (r.query_id, r.rank): r.vec_id
-            for r in S.pq_topk(
-                e, queries, books, k=5, kernel="matrix",
-                brute_fallback=False, **kw,
-            ).collect()
-        }
-
-    try:
-        assert rankmap(enc) == rankmap(wideframe)
-        assert rankmap(enc, rerank=corpus, rerank_factor=4) == rankmap(
-            wideframe, rerank=corpus, rerank_factor=4
-        )
-        with pytest.raises(ValueError, match="no 'codes' column"):
-            S.pq_widen(wideframe)
-        with pytest.raises(ValueError, match="matrix-kernel only"):
-            S.pq_topk(wideframe, queries, books, k=5)
-        # incomplete wide layout: a missing code column fails loudly
-        with pytest.raises(ValueError, match="code_0..code_3"):
-            S.pq_topk(
-                wideframe.drop("code_3"), queries, books, k=5,
-                kernel="matrix",
-            )
-    finally:
-        enc.unpersist()
 
 
 def test_pii_screens_are_necessary_conditions():

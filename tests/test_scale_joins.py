@@ -519,7 +519,7 @@ def test_forward_carry_equals_following_frame(spark):
 
 
 def test_ivf_matrix_serve_has_no_pair_join(spark, sf_dir):
-    """Round-12 plan pin: the kernel='matrix' IVF serve must be the
+    """Round-12 plan pin: the IVF serve must be the
     scan-once shape — a Filter on cell over the cached index feeding
     mapInPandas — with NO join between the corpus-scale index and the
     probe set (the pair join materialized corpus x probes candidate
@@ -527,13 +527,13 @@ def test_ivf_matrix_serve_has_no_pair_join(spark, sf_dir):
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    idx = S.ivf_index(corpus, n_centroids=8, iters=2, kernel="matrix")
+    idx = S.ivf_index(corpus, n_centroids=8, iters=2)
     queries = corpus.limit(3).selectExpr("vec_id AS query_id", "embedding")
     # brute_fallback_coverage=None: this pins the MASKED serve's plan;
     # at full union-of-probes coverage the default would (correctly)
     # serve the exact full-scan shape instead
     out = S.ivf_topk(
-        corpus, queries, k=5, n_probe=3, index=idx, kernel="matrix",
+        corpus, queries, k=5, n_probe=3, index=idx,
         brute_fallback_coverage=None,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
