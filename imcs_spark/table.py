@@ -368,7 +368,9 @@ class Engine:
         columnar format Spark reads natively, with pushdown/pruning —
         fine to query in place), 'csv' (header inferred unless a
         ``schema`` DDL string is given; pass reader options like
-        ``delimiter`` through), or 'json' (JSON-lines). Ingest
+        ``delimiter`` through), or 'json' (JSON-lines). ``schema``
+        and reader options (e.g. ``mergeSchema``) apply to every
+        format. Ingest
         from text formats is a one-time scan — call ``.save()`` on the
         result to land the versioned sorted parquet layout every later
         query should read (text formats carry no column pruning, no
@@ -379,17 +381,7 @@ class Engine:
             path = None
         else:
             path = source
-            if format == "parquet":
-                df = self.spark.read.parquet(source)
-            elif format == "orc":
-                reader = self.spark.read
-                if schema:
-                    # honored like the csv/json branches (round-10
-                    # review finding: silently ignoring it would hand
-                    # back file-embedded types a caller asked to cast)
-                    reader = reader.schema(schema)
-                df = reader.options(**reader_options).orc(source)
-            elif format in ("csv", "json"):
+            if format in ("parquet", "orc", "csv", "json"):
                 reader = self.spark.read
                 if schema:
                     reader = reader.schema(schema)
@@ -465,8 +457,12 @@ class Engine:
         """cs_used_memory analog (reference imcs.c:5275-5279
         walks the shared-memory allocator). Spark's equivalent truth
         lives in the BlockManager: report cached-RDD memory/disk
-        footprints plus the registered-table catalog. Purely
-        introspective — no jobs run."""
+        footprints, the registered-table catalog and the generated-code
+        cache: compiles so far, and the capacity this session's conf
+        asks for. The cache is JVM-wide and sized by the first codegen
+        in the JVM, so a session started later in the same JVM can
+        report a capacity the cache does not have; the compile count
+        is the real measure. Purely introspective — no jobs run."""
         sc = self.spark.sparkContext
         cached = []
         mem_total = 0
@@ -483,10 +479,19 @@ class Engine:
                     "total_partitions": info.numPartitions(),
                 }
             )
+        # Janino compiles are codegen-cache misses; the count is
+        # JVM-wide and cumulative, so callers diff two readings
+        codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
         return {
             "used_memory_bytes": mem_total,
             "used_disk_bytes": disk_total,
             "cached_rdds": cached,
+            "codegen": {
+                "compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+                "configured_cache_max_entries": int(
+                    self.spark.conf.get("spark.sql.codegen.cache.maxEntries")
+                ),
+            },
             "tables": {
                 name: {
                     "columns": len(t.df().columns),

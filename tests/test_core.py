@@ -272,6 +272,25 @@ def test_engine_create_csv_json_sources(spark, tmp_path):
     t4 = eng.create("o1", str(orc), "ts", "id", format="orc")
     assert t4.count() == 3 and t4.count("a") == 2
     assert [r.ts for r in t4.get("b").collect()] == [1]
+    # parquet honors a DDL schema (here widening int to bigint), like
+    # the other formats
+    pq = tmp_path / "t.parquet"
+    t1.df().selectExpr("id", "CAST(ts AS INT) AS ts", "value").write.parquet(str(pq))
+    t5 = eng.create(
+        "p1", str(pq), "ts", "id",
+        schema="id string, ts bigint, value double",
+    )
+    assert dict(t5.df().dtypes)["ts"] == "bigint"
+    assert sorted(r.ts for r in t5.df().collect()) == [1, 1, 2]
+    # ...and reader options without a schema: mergeSchema unions the
+    # columns of two parts written with different ones
+    merged = tmp_path / "merged"
+    t1.df().select("id", "ts").write.parquet(str(merged / "part=a"))
+    t1.df().select("id", "ts", "value").write.parquet(str(merged / "part=b"))
+    t6 = eng.create("p2", str(merged), "ts", "id", mergeSchema="true")
+    assert "value" in t6.df().columns
+    assert t6.count() == 6
+    assert t6.df().where("value IS NOT NULL").count() == 3
     with pytest.raises(ValueError, match="unsupported format"):
         eng.create("x", str(csv), "ts", format="xml")
     with pytest.raises(ValueError, match="not in source columns"):

@@ -24,8 +24,34 @@ def test_engine_stats_reports_cached_memory(spark, sf_dir):
         assert st["tables"]["events"]["ts_col"] == "ts"
         assert st["tables"]["events"]["id_col"] == "user_id"
         assert st["tables"]["events"]["columns"] == len(df.columns)
+        assert st["codegen"]["compiles"] > 0
+        assert st["codegen"]["configured_cache_max_entries"] == 2000  # session default
+        # introspection compiles and runs nothing
+        assert eng.stats()["codegen"]["compiles"] == st["codegen"]["compiles"]
     finally:
         df.unpersist()
+
+
+def test_codegen_cache_holds_a_cycled_working_set(spark):
+    """A session cycling more distinct generated classes than Spark's
+    default cache holds (100, LRU) must not recompile them on the next
+    cycle: the session default sizes the cache to the engine's working
+    set. Each long literal is inlined into the generated code, so every
+    statement is its own class."""
+    eng = Engine(spark)
+    stmts = [
+        spark.range(0, 8, 1, 1).selectExpr(f"id * {i + 2} AS v")
+        for i in range(150)
+    ]
+
+    def cycle():
+        before = eng.stats()["codegen"]["compiles"]
+        for df in stmts:
+            df.collect()
+        return eng.stats()["codegen"]["compiles"] - before
+
+    assert cycle() > 100  # the working set really exceeds the old cache
+    assert cycle() == 0
 
 
 def test_money_load_conversion_golden(spark):
