@@ -26,6 +26,13 @@ once under <repo>/benchdata and reused across runs; generation is pure
 Column expressions seeded by xxhash64, so every run of every round
 produces bit-identical tables.
 
+This is bench.py's scale half and lives beside it, outside the engine
+package: `python bench.py` runs it (SPARK_GRAFT_SCALE=0 skips it), and
+`run_scale` can be called directly with a session and a data directory.
+Every timing goes through one of two helpers: `_min_of` (min-of-N
+trials, optionally round-robin with a floor probe) and `_stopwatch`
+(one single-shot stage).
+
 Divergences from the reference setup, documented rather than hidden:
 - Synthetic OHLCV (hash-uniform), not the actual 2003-2013 NYSE file;
   row count, symbol count (2200) and per-symbol series length (2728)
@@ -40,7 +47,10 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import time
+from contextlib import contextmanager
+from typing import NamedTuple
 
 import numpy as np
 
@@ -130,6 +140,28 @@ def gen_dbitem(spark: SparkSession, path: str, parallelism: int = 32) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
+@contextmanager
+def _scaled(**sizes):
+    """Override module size constants (N_SYMBOLS, ANN_ROWS, ...) for the
+    ``with`` body: the 10x tables come from the same generators."""
+    saved = {k: globals()[k] for k in sizes}
+    globals().update(sizes)
+    try:
+        yield
+    finally:
+        globals().update(saved)
+
+
+def _dir_bytes(*paths: str) -> int:
+    """Total size of the files under ``paths``."""
+    return sum(
+        os.path.getsize(os.path.join(r, f))
+        for p in paths
+        for r, _d, fs in os.walk(p)
+        for f in fs
+    )
+
+
 def _ensure(spark: SparkSession, path: str, gen) -> bool:
     """Generate the table once; reuse the on-disk copy afterwards.
     Returns True if generation ran (so callers can report it)."""
@@ -139,97 +171,191 @@ def _ensure(spark: SparkSession, path: str, gen) -> bool:
     return True
 
 
-def _best(fn, runs: int) -> float:
-    best = None
+class Timing(NamedTuple):
+    sec: float  # min over the trials
+    med: float  # median over the trials
+    floor_sec: float | None  # min of the interleaved floor collects
+    last: object  # fn's result on the last trial
+
+
+def _min_of(fn, runs: int, floor_df=None, before=None) -> Timing:
+    """Time ``fn()`` over ``runs`` trials; seconds are rounded to 4 dp.
+
+    ``floor_df`` (a prepared `_floor_df` aggregate) is collected and
+    timed right after every trial, round-robin, so the row carries a
+    floor taken in its own drift window: a contended row then reads
+    high NET of its own floor, which one section-level floor snapshot
+    could not show (round 9 recorded dbitem 618.8 ms where a quiet box
+    measured 136.6 ms). ``before`` runs untimed ahead of every trial
+    and gets the previous trial's result (None for the first) — a load
+    unpersists its last handle there, a cold serve evicts page cache."""
+    times, floors, last = [], [], None
     for _ in range(runs):
+        if before is not None:
+            before(last)
         t0 = time.time()
-        fn()
-        el = time.time() - t0
-        best = el if best is None else min(best, el)
-    return round(best, 4)
-
-
-def _time_row(out: dict, name: str, build, runs: int, floor_df=None) -> None:
-    """Time one baseline row BOTH ways and record both keys:
-
-    - ``name``: per-statement latency — the DataFrame is rebuilt and
-      re-planned inside the timed region, matching what psql's \\timing
-      measured for the reference (parse + plan + execute + fetch). On
-      this engine Catalyst compilation is a fixed ~60-110 ms per
-      statement regardless of data size (measured: tools/probe_floor.py),
-      so for the sub-100 ms reference rows this is mostly compile time.
-    - ``name + "_exec"``: prepared-plan execution — the DataFrame is
-      built and warmed once, then only ``.collect()`` is timed. This is
-      the closest analog of what the reference's published number
-      actually measures: `cs_count(...)` over an already-loaded store is
-      a C function call behind a PostgreSQL planner whose planning cost
-      is ~0.3 ms, i.e. effectively pure execution. Any resident service
-      (Thrift server, notebook, dashboard) reuses plans the same way.
-
-    With ``floor_df`` (a prepared 32-task no-data aggregate), a floor
-    probe is interleaved ROUND-ROBIN with the _exec trials in the same
-    drift window and recorded as ``name + "_exec_floor"`` — round 9's
-    recorded gate was taken on a contended box (dbitem 618.8 ms where
-    a quiet box measures 136.6 ms) and a single section-level floor
-    snapshot could not exonerate individual rows; a per-row adjacent
-    floor can (read the row NET of ITS OWN floor, not the section's).
-
-    All keys are recorded so the comparison can be read either way;
-    see BENCH_SCALE.md for the decomposition.
-    """
-    out[name] = _best(lambda: build().collect(), runs)
-    df = build()
-    df.collect()  # warm: physical planning + codegen for the reused plan
-    if floor_df is None:
-        out[name + "_exec"] = _best(lambda: df.collect(), runs)
-        return
-    best = fbest = None
-    for _ in range(runs):
-        t0 = time.time()
-        df.collect()
-        el = time.time() - t0
-        best = el if best is None else min(best, el)
-        t0 = time.time()
-        floor_df.collect()
-        fl = time.time() - t0
-        fbest = fl if fbest is None else min(fbest, fl)
-    out[name + "_exec"] = round(best, 4)
-    out[name + "_exec_floor"] = round(fbest, 4)
-
-
-def _loads(fn, n: int) -> tuple[float, float, object]:
-    """Time a LOAD (cold build -> persisted + counted) min-of-n with a
-    median alongside. The load rows are the bench's most
-    contention-sensitive (r9 recorded load_quotes 16.2 s where the
-    judge's quiet rerun measured 1.16 s): each trial unpersists and
-    rebuilds, the LAST trial's handle is returned still persisted for
-    the query rows that follow."""
-    times, handle = [], None
-    for i in range(n):
-        if handle is not None:
-            handle.unpersist()
-        t0 = time.time()
-        handle = fn()
+        last = fn()
         times.append(time.time() - t0)
-    times_sorted = sorted(times)
-    m = len(times_sorted)
-    med = (
-        times_sorted[m // 2]
-        if m % 2
-        else (times_sorted[m // 2 - 1] + times_sorted[m // 2]) / 2
+        if floor_df is not None:
+            t0 = time.time()
+            floor_df.collect()
+            floors.append(time.time() - t0)
+    return Timing(
+        round(min(times), 4),
+        round(statistics.median(times), 4),
+        round(min(floors), 4) if floors else None,
+        last,
     )
-    return round(times_sorted[0], 4), round(med, 4), handle
 
 
-def _floor_probe(spark: SparkSession, runs: int = 5) -> tuple[float, object]:
-    """One 32-task prepared-collect floor measurement (min-of-runs) and
-    the prepared DataFrame for later interleaved probes. Stamped at the
-    head of each soak section so a stage-wall swing self-classifies as
-    contention vs code (round-9 Wrong #3: cur2m stage walls moved 2-4x
-    on untouched code with no adjacent floor to prove it)."""
+@contextmanager
+def _stopwatch(out: dict, key: str):
+    """Record the wall seconds of the ``with`` body as ``out[key]``
+    (single-shot stages: soak stages are multi-second scans whose
+    run-to-run spread is small against the signal)."""
+    t0 = time.time()
+    yield
+    out[key] = round(time.time() - t0, 4)
+
+
+def _floor_df(spark: SparkSession) -> DataFrame:
+    """The 32-task no-data aggregate every floor probe times, planned
+    and warmed: one definition, so the section floors and the
+    interleaved row floors stay comparable. Stamped at the head of each
+    soak section so a stage-wall swing self-classifies as contention vs
+    code (round-9 Wrong #3: cur2m stage walls moved 2-4x on untouched
+    code with no adjacent floor to prove it)."""
     df = spark.range(0, 32, 1, 32).selectExpr("sum(id) AS s")
     df.collect()
-    return _best(lambda: df.collect(), runs), df
+    return df
+
+
+def _shuffle_floor_df(spark: SparkSession) -> DataFrame:
+    """The frozen shuffle-aggregate floor probe, planned and warmed: the
+    fixed cost of exchange write/fetch machinery that the narrow probes
+    miss."""
+    df = (
+        spark.range(0, 1_000_000, 1, 32)
+        .groupBy((F.col("id") % 32).alias("k"))
+        .count()
+    )
+    df.collect()
+    return df
+
+
+def root_cause(msg: str) -> str:
+    """The line of an exception message that names its cause: the last
+    ``Caused by:`` line of a JVM trace (the py4j wrapper and the stack
+    frames below it say nothing), else the first non-empty line."""
+    lines = [ln.strip() for ln in msg.splitlines() if ln.strip()]
+    caused = [ln for ln in lines if ln.startswith("Caused by:")]
+    if caused:
+        return caused[-1]
+    return lines[0] if lines else msg
+
+
+def _quote_rows(q: DataFrame) -> dict:
+    """The BASELINE.md Quote rows as statement builders over the loaded
+    store ``q`` (reference IMCS / SQL times at 6M in the comments)."""
+    vwap = (F.sum(F.col("close") * F.col("volume")) / F.sum("volume")).alias("vwap")
+    return {
+        # VWAP all symbols (386.5 ms / 2243 ms)
+        "vwap_all": lambda: q.groupBy("symbol").agg(vwap),
+        # VWAP one symbol, 3-year slice (10 ms / 750 ms)
+        "vwap_one": lambda: q.filter(
+            (F.col("symbol") == "S0100")
+            & F.col("day").between("2010-01-01", "2012-12-31")
+        ).agg(vwap),
+        # filter+project, 1 symbol 1 quarter, Close > Open*1.01
+        # (12 ms / 640 ms)
+        "filter_project": lambda: q.filter(
+            (F.col("symbol") == "S0042")
+            & F.col("day").between("2010-01-01", "2010-03-31")
+            & (F.col("close") > F.col("open") * 1.01)
+        ).select("day", "close"),
+        # filtered count over the whole series (6.274 ms / 768 ms)
+        "filtered_count": lambda: q.filter(
+            F.col("close") > F.col("open") * 1.1
+        ).agg(F.count(F.lit(1)).alias("n")),
+        # cs_sum(Close) over the concat of all symbols (76.2 ms)
+        "sum_close": lambda: q.agg(F.sum("close").alias("s")),
+    }
+
+
+def _encode_dbitem(spark: SparkSession, path: str):
+    """Read DbItem and DICTIONARY-ENCODE its three varchar keys to int
+    codes, exactly what the reference's columnar store does at load
+    (imcs.c:2281-2309: varchar columns live as dictionary codes; its
+    published 144 ms 3-key hash agg hashes int codes, never strings).
+    Each column's dict is tiny (100/20/10 values): its values are
+    collected once (bounded by dict cardinality) both to build the
+    encode map and to decode result rows via a literal array lookup —
+    no join stages in the query.
+
+    The three codes are then packed into ONE int group key (round 10):
+    100 x 20 x 10 = 20k combinations << 2^31, so the composite key is a
+    load-time arithmetic pack — the hash aggregate hashes/compares one
+    int instead of three (measured 114 -> 96 ms at 10M on a quiet box)
+    and the result decodes back through integer div/mod + the same
+    literal-array lookups.
+
+    Returns (packed frame, un-packed 3-code frame for the shuffle twin,
+    {column: sorted dictionary values})."""
+    d_raw = spark.read.parquet(path)
+    dict_vals: dict[str, list] = {}
+    enc = d_raw
+    for c in ("trader", "desk", "office"):
+        vals = [r[0] for r in d_raw.select(c).distinct().orderBy(c).collect()]
+        dict_vals[c] = vals
+        dc = spark.createDataFrame(
+            [(v, i) for i, v in enumerate(vals)], f"{c} string, {c}_code int"
+        )
+        enc = enc.join(F.broadcast(dc), c).drop(c)
+    n_desk, n_office = len(dict_vals["desk"]), len(dict_vals["office"])
+    packed = enc.withColumn(
+        "gkey",
+        (
+            (F.col("trader_code") * n_desk + F.col("desk_code")) * n_office
+            + F.col("office_code")
+        ).cast("int"),
+    ).drop("trader_code", "desk_code", "office_code")
+    return packed, enc, dict_vals
+
+
+def _dbitem_query(df: DataFrame, dict_vals: dict) -> DataFrame:
+    """3-key weighted average over the packed key, decoded to the same
+    (trader, desk, office, wavg) strings (~20k result rows)."""
+    r = df.groupBy("gkey").agg(
+        F.sum(F.col("price") * F.col("volume")).alias("_pv"),
+        F.sum("volume").alias("_v"),
+    )
+    n_desk, n_office = len(dict_vals["desk"]), len(dict_vals["office"])
+    codes = {
+        "trader": F.floor(F.col("gkey") / (n_desk * n_office)),
+        "desk": F.floor(F.col("gkey") / n_office) % n_desk,
+        "office": F.col("gkey") % n_office,
+    }
+    for c in ("trader", "desk", "office"):
+        arr = F.array(*[F.lit(s) for s in dict_vals[c]])
+        r = r.withColumn(c, F.element_at(arr, (codes[c] + 1).cast("int")))
+    return r.select(
+        "trader", "desk", "office", (F.col("_pv") / F.col("_v")).alias("wavg")
+    )
+
+
+def _dbitem_query3(df: DataFrame, dict_vals: dict) -> DataFrame:
+    """The UN-PACKED twin: groups by the original three int codes — the
+    transparency control the packed-key row is read against."""
+    r = df.groupBy("trader_code", "desk_code", "office_code").agg(
+        F.sum(F.col("price") * F.col("volume")).alias("_pv"),
+        F.sum("volume").alias("_v"),
+    )
+    for c in ("trader", "desk", "office"):
+        arr = F.array(*[F.lit(s) for s in dict_vals[c]])
+        r = r.withColumn(c, F.element_at(arr, F.col(f"{c}_code") + 1))
+    return r.select(
+        "trader", "desk", "office", (F.col("_pv") / F.col("_v")).alias("wavg")
+    )
 
 
 def run_scale(
@@ -244,12 +370,11 @@ def run_scale(
     runs this FIRST, on a box not yet heated by the registry queries
     or the 2M/1M soaks, so the recorded gate stops needing a judge
     rerun to exonerate (r9 recorded dbitem 618.8 ms vs 136.6 ms on a
-    quiet box). "rest" = the adversarial skew/big/lsh/curation/ann/
-    ndstream sections, each stamped with its own adjacent floor probe.
-    "all" preserves the old single-call behavior.
-
-    Set SPARK_GRAFT_SCALE_BIG=1 to additionally run the 60M-row (10x
-    reference scale) throughput variant reported in BENCH_SCALE.md."""
+    quiet box). "rest" = the adversarial and soak sections (skew, the
+    60M-row gate twins, LSH, curation, ANN, streaming near-dedup,
+    joins, recurrence, stream floor), each stamped with its own
+    adjacent floor probe; every section always runs. "all" runs both
+    in one call."""
     os.makedirs(data_dir, exist_ok=True)
     # Larger cached batches amortize per-batch scan overhead (~10-15%
     # on full-scan aggregates at 60M rows). Uncompressed cache: the
@@ -301,30 +426,20 @@ def _run_scale_inner(
     # same code). Recording the floor alongside the rows lets any
     # reader separate code regressions from environment drift: read
     # the gated rows NET of floor_select1_exec. min-of-7 prepared-plan
-    # collects, same convention as the *_exec keys.
+    # collects, same convention as the *_exec keys. The 4th probe
+    # (round 12, VERDICT item 2) is a frozen SHUFFLE agg: together the
+    # four let any cross-round gate/headline delta self-classify as
+    # code vs environment drift (bench.py emits the normalized
+    # comparison line).
     _sel1 = spark.sql("SELECT 1 AS x")
     _sel1.collect()
-    out["floor_select1_exec"] = _best(lambda: _sel1.collect(), 7)
+    out["floor_select1_exec"] = _min_of(_sel1.collect, 7).sec
     _t1 = spark.range(0, 1, 1, 1).selectExpr("sum(id) AS s")
     _t1.collect()
-    out["floor_1task_agg_exec"] = _best(lambda: _t1.collect(), 7)
-    # same probe definition as every per-row/per-section floor — one
-    # definition, so the section floor and the interleaved row floors
-    # stay comparable (round-10 review: an inline copy here could
-    # drift from _floor_probe)
-    out["floor_32task_agg_exec"], _t32 = _floor_probe(spark, 7)
-    # 4th drift probe (round 12, VERDICT item 2): a frozen SHUFFLE agg —
-    # the other fixed-cost regime the 3 narrow probes miss (exchange
-    # write/fetch machinery). Together the four let any cross-round
-    # gate/headline delta self-classify as code vs environment drift
-    # (bench.py emits the normalized comparison line).
-    _shf = (
-        spark.range(0, 1_000_000, 1, 32)
-        .groupBy((F.col("id") % 32).alias("k"))
-        .count()
-    )
-    _shf.collect()
-    out["floor_shuffle_agg_exec"] = _best(lambda: _shf.collect(), 7)
+    out["floor_1task_agg_exec"] = _min_of(_t1.collect, 7).sec
+    _t32 = _floor_df(spark)
+    out["floor_32task_agg_exec"] = _min_of(_t32.collect, 7).sec
+    out["floor_shuffle_agg_exec"] = _min_of(_shuffle_floor_df(spark).collect, 7).sec
 
     # Pre-touch the parquet bytes into the OS page cache: the
     # reference's published Quote_load reads a PostgreSQL heap table
@@ -343,75 +458,42 @@ def _run_scale_inner(
     # min-of-5+ with a median alongside (round-10: the load rows are
     # the most contention-sensitive in the payload — r9 recorded
     # 16.2 s where the judge's quiet rerun measured 1.16 s; a single
-    # shot cannot tell those apart, min+median can)
+    # shot cannot tell those apart, min+median can). The LAST trial's
+    # frame stays persisted for the query rows that follow.
     lruns = max(runs, 5)
+
+    # each load returns (cached frame, ...); the previous trial's frame
+    # is unpersisted ahead of the next trial, outside the timed region
+    def _unpersist(prev):
+        if prev is not None:
+            prev[0].unpersist()
 
     def _load_q():
         df = spark.read.parquet(qpath).persist()
         df.count()
-        return df
+        return (df,)
 
-    out["load_quotes"], out["load_quotes_med"], q = _loads(_load_q, lruns)
+    t = _min_of(_load_q, lruns, before=_unpersist)
+    out["load_quotes"], out["load_quotes_med"], (q,) = t.sec, t.med, t.last
     q_rows = q.count()
 
-    # DbItem load = read + DICTIONARY-ENCODE the three varchar keys to
-    # int codes, exactly what the reference's columnar store does at
-    # load (imcs.c:2281-2309: varchar columns live as dictionary codes;
-    # its published 144 ms 3-key hash agg hashes int codes, never
-    # strings). Each column's dict is tiny (100/20/10 values): its
-    # values are collected once (bounded by dict cardinality) both to
-    # build the encode map and to decode result rows via a literal
-    # array lookup — no join stages in the query. The encoded fact
-    # table is cached hash-distributed on the three code columns: the
-    # engine's standard bucketed-layout lever (Engine.save_bucketed is
-    # the same idea) for a fact table whose hot query groups on those
-    # keys — the group-by then runs as ONE stage with no exchange. The
-    # un-co-located path is reported separately (dbitem_hash_agg_shuffle)
-    # for transparency.
-    dict_vals: dict[str, list] = {}
-    enc_holder: dict[str, DataFrame] = {}
-
+    # DbItem load = read + DICTIONARY-ENCODE the three varchar keys (see
+    # _encode_dbitem). The encoded fact table is cached hash-distributed
+    # on the packed key: the engine's standard bucketed-layout lever
+    # (Engine.save_bucketed is the same idea) for a fact table whose hot
+    # query groups on those keys — the group-by then runs as ONE stage
+    # with no exchange. The un-co-located path is reported separately
+    # (dbitem_hash_agg_shuffle) for transparency.
     def _load_d():
-        d_raw = spark.read.parquet(dpath)
-        dict_vals.clear()
-        enc = d_raw
-        for c in ("trader", "desk", "office"):
-            vals = [r[0] for r in d_raw.select(c).distinct().orderBy(c).collect()]
-            dict_vals[c] = vals
-            dc = spark.createDataFrame(
-                [(v, i) for i, v in enumerate(vals)], f"{c} string, {c}_code int"
-            )
-            enc = enc.join(F.broadcast(dc), c).drop(c)
-        # pack the three dictionary codes into ONE int group key at
-        # load (round 10): the per-column dictionaries are known and
-        # tiny (100 x 20 x 10 = 20k combinations << 2^31), so the
-        # composite key is a load-time arithmetic pack — the hash
-        # aggregate then hashes/compares one int instead of three
-        # (measured 114 -> 96 ms at 10M on a quiet box), and the
-        # result decodes back to the three string columns via integer
-        # div/mod + the same literal-array lookups. The same lever a
-        # columnar engine's dictionary codes already are, one step
-        # further; the un-packed un-co-located 3-key twin is timed
-        # below (dbitem_hash_agg_shuffle, via _dbitem_query3 over the
-        # pre-pack frame) for transparency.
-        n_desk, n_office = len(dict_vals["desk"]), len(dict_vals["office"])
-        enc3 = enc  # un-packed 3-code frame, kept for the shuffle twin
-        enc = enc.withColumn(
-            "gkey",
-            (
-                (F.col("trader_code") * n_desk + F.col("desk_code")) * n_office
-                + F.col("office_code")
-            ).cast("int"),
-        ).drop("trader_code", "desk_code", "office_code")
-        enc_holder["enc3"] = enc3
-        enc_holder["enc"] = enc
+        enc, enc3, dict_vals = _encode_dbitem(spark, dpath)
         df = enc.repartition(32, "gkey").persist()
         df.count()
-        return df
+        return df, enc3, dict_vals
 
-    out["load_dbitem"], out["load_dbitem_med"], d = _loads(_load_d, lruns)
+    t = _min_of(_load_d, lruns, before=_unpersist)
+    out["load_dbitem"], out["load_dbitem_med"] = t.sec, t.med
+    d, enc3, dict_vals = t.last
     d_rows = d.count()
-    enc3 = enc_holder["enc3"]
     # transparency copy: same encoded rows, NOT co-located with the
     # group keys (round-robin layout) — its agg pays the partial-row
     # shuffle. Cache build excluded from the load row (bench-infra
@@ -422,143 +504,56 @@ def _run_scale_inner(
     # Micro-latency rows: their whole cost is the fixed job floor, and
     # AQE's stage-by-stage re-planning adds one scheduler round-trip a
     # sub-300ms query can't amortize (measured ~-27% on vwap_one with
-    # AQE off; no effect on the scan-bound queries). Runtime re-planning
-    # has nothing to decide here: single cached table, no join, tiny
-    # shuffle. Restored right after. Sub-second queries also get two
-    # extra timing passes (min over more trials) because at this
-    # latency one scheduler hiccup is a 2x outlier.
+    # AQE off, ~20% on the dbitem rows; no effect on the scan-bound
+    # queries). Runtime re-planning has nothing to decide here: single
+    # cached table, no join, tiny shuffle. Restored right after.
+    # Sub-second queries also get two extra timing passes (min over
+    # more trials) because at this latency one scheduler hiccup is a
+    # 2x outlier.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     mruns = max(runs, 5)
-
-    # --- VWAP all symbols (vs IMCS 386.5 ms / SQL 2243 ms @ 6M)
-    # The partial aggregate leaves 32 partitions x 100 groups = 3,200
-    # tiny rows; the right reduce side for a 100-group result is ONE
-    # task (AQE's coalescing reaches the same shape, but its extra
-    # re-plan round-trip costs more than it saves at this latency —
-    # measured 0.65 s AQE/32-reduce vs 0.15 s one-task reduce). At
-    # cluster scale this is the same rule applied by AQE: size the
-    # reduce side by output cardinality, not the session default.
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    _time_row(
-        out,
-        "vwap_all",
-        lambda: q.groupBy("symbol").agg(
-            (
-                F.sum(F.col("close") * F.col("volume")) / F.sum("volume")
-            ).alias("vwap")
-        ),
-        mruns,
-        floor_df=_t32,
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    # --- VWAP one symbol, 3-year slice (vs IMCS 10 ms / SQL 750 ms)
-    _time_row(
-        out,
-        "vwap_one",
-        lambda: q.filter(
-            (F.col("symbol") == "S0100")
-            & F.col("day").between("2010-01-01", "2012-12-31")
-        ).agg(
-            (
-                F.sum(F.col("close") * F.col("volume")) / F.sum("volume")
-            ).alias("vwap")
-        ),
-        mruns,
-        floor_df=_t32,
-    )
-
-    # --- filter+project, 1 symbol 1 quarter, Close > Open*1.01
-    #     (vs IMCS 12 ms / SQL 640 ms)
-    _time_row(
-        out,
-        "filter_project",
-        lambda: q.filter(
-            (F.col("symbol") == "S0042")
-            & F.col("day").between("2010-01-01", "2010-03-31")
-            & (F.col("close") > F.col("open") * 1.01)
-        ).select("day", "close"),
-        mruns,
-        floor_df=_t32,
-    )
-
-    # --- filtered count over the whole 6M series
-    #     (vs IMCS 6.274 ms / SQL 768 ms)
-    _time_row(
-        out,
-        "filtered_count",
-        lambda: q.filter(F.col("close") > F.col("open") * 1.1).agg(
-            F.count(F.lit(1)).alias("n")
-        ),
-        mruns,
-        floor_df=_t32,
-    )
-
-    # --- cs_sum(Close) over the concat of all symbols (vs 76.2 ms)
-    _time_row(
-        out,
-        "sum_close",
-        lambda: q.agg(F.sum("close").alias("s")),
-        mruns,
-        floor_df=_t32,
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-    # --- 3-key hash group-by weighted avg over 10M rows
-    #     (vs IMCS 144 ms / SQL 7-320 s)
-    # Groups on the int dictionary codes (what the reference hashes)
-    # and decodes the ~20k result rows through literal-array lookups,
-    # so the output is the same (trader, desk, office, wavg) strings.
-    # AQE off for the same micro-latency reason as above: there is
-    # nothing to re-plan (one cached table, tiny or no shuffle) and the
-    # extra scheduler round-trip costs ~20% at this latency.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    def _dbitem_query(df):
-        r = df.groupBy("gkey").agg(
-            F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-            F.sum("volume").alias("_v"),
-        )
-        # unpack the composite key and decode through the literal
-        # dictionaries — ~20k result rows, negligible
-        n_desk, n_office = len(dict_vals["desk"]), len(dict_vals["office"])
-        codes = {
-            "trader": F.floor(F.col("gkey") / (n_desk * n_office)),
-            "desk": F.floor(F.col("gkey") / n_office) % n_desk,
-            "office": F.col("gkey") % n_office,
-        }
-        for c in ("trader", "desk", "office"):
-            arr = F.array(*[F.lit(s) for s in dict_vals[c]])
-            r = r.withColumn(c, F.element_at(arr, (codes[c] + 1).cast("int")))
-        return r.select(
-            "trader", "desk", "office", (F.col("_pv") / F.col("_v")).alias("wavg")
-        )
-
-    def _dbitem_query3(df):
-        # the UN-PACKED twin: groups by the original three int codes —
-        # the transparency control the packed-gkey row is read against
-        r = df.groupBy("trader_code", "desk_code", "office_code").agg(
-            F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-            F.sum("volume").alias("_v"),
-        )
-        for c in ("trader", "desk", "office"):
-            arr = F.array(*[F.lit(s) for s in dict_vals[c]])
-            r = r.withColumn(c, F.element_at(arr, F.col(f"{c}_code") + 1))
-        return r.select(
-            "trader", "desk", "office", (F.col("_pv") / F.col("_v")).alias("wavg")
-        )
-
-    _time_row(out, "dbitem_hash_agg", lambda: _dbitem_query(d), mruns, floor_df=_t32)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # 640k partial rows
-    # the transparency twin carries its own interleaved floor too: a
-    # contention spike on the CONTROL row must be tellable from a real
-    # regression of the un-packed path, same as the gated rows
-    _time_row(
-        out, "dbitem_hash_agg_shuffle", lambda: _dbitem_query3(d_flat), mruns,
-        floor_df=_t32,
-    )
+    quote_rows = _quote_rows(q)
+    # (row, reduce-side partitions, build). vwap_all (vs IMCS 386.5 ms)
+    # reduces on ONE task: the partial aggregate leaves 32 partitions x
+    # 100 groups = 3,200 tiny rows, and AQE's coalescing reaches the
+    # same shape but its extra re-plan round-trip costs more than it
+    # saves at this latency (measured 0.65 s AQE/32-reduce vs 0.15 s
+    # one-task reduce) — the same rule AQE applies at cluster scale:
+    # size the reduce side by output cardinality. dbitem_hash_agg (vs
+    # IMCS 144 ms over 10M) groups on the packed int key; its shuffle
+    # twin reduces 640k partial rows on 8 tasks.
+    rows = [
+        ("vwap_all", "1", quote_rows["vwap_all"]),
+        *((n, prev_sp, quote_rows[n]) for n in (
+            "vwap_one", "filter_project", "filtered_count", "sum_close",
+        )),
+        ("dbitem_hash_agg", prev_sp, lambda: _dbitem_query(d, dict_vals)),
+        ("dbitem_hash_agg_shuffle", "8",
+         lambda: _dbitem_query3(d_flat, dict_vals)),
+    ]
+    # Every row is timed BOTH ways (see BENCH_SCALE.md):
+    # - ``name``: per-statement latency — the DataFrame is rebuilt and
+    #   re-planned inside the timed region, matching what psql's \timing
+    #   measured for the reference (parse + plan + execute + fetch). On
+    #   this engine Catalyst compilation is a fixed ~60-110 ms per
+    #   statement regardless of data size, so for the sub-100 ms
+    #   reference rows this is mostly compile time.
+    # - ``name_exec``: prepared-plan execution — the DataFrame is built
+    #   and warmed once, then only ``.collect()`` is timed, with the
+    #   32-task floor interleaved round-robin (``name_exec_floor``).
+    #   This is the closest analog of what the reference's published
+    #   number measures: `cs_count(...)` over a loaded store is a C
+    #   call behind a planner whose planning cost is ~0.3 ms. Any
+    #   resident service (Thrift server, notebook, dashboard) reuses
+    #   plans the same way.
+    for name, sp, build in rows:
+        spark.conf.set("spark.sql.shuffle.partitions", sp)
+        out[name] = _min_of(lambda: build().collect(), mruns).sec
+        df = build()
+        df.collect()  # warm: physical planning + codegen for the reused plan
+        t = _min_of(df.collect, mruns, floor_df=_t32)
+        out[name + "_exec"], out[name + "_exec_floor"] = t.sec, t.floor_sec
     spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -576,88 +571,44 @@ def _run_scale_inner(
 def _run_rest_sections(
     spark: SparkSession, data_dir: str, runs: int, out: dict
 ) -> None:
-    """Adversarial sections, DEFAULT ON since round 5 (opt out with
-    SPARK_GRAFT_SCALE_BIG=0 / SPARK_GRAFT_SCALE_SKEW=0): the uniform
-    gate rows never stress the de-skew rewrites; these do.
-    Each adversarial section is fault-isolated: a lost task deep in
-    one section (the whole bench session has run ~3000 stages by
-    now) must not zero out every other section's keys. The error is
-    recorded per-section with its ROOT cause line (the py4j wrapper
+    """The adversarial and soak sections, all of which always run: the
+    uniform gate rows never stress the de-skew rewrites; these do.
+    Each section is fault-isolated: a lost task deep in one section
+    (the whole bench session has run ~3000 stages by now) must not zero
+    out every other section's keys. The error is recorded per-section
+    as ``<section>_error`` with its root-cause line (the py4j wrapper
     line alone is useless)."""
 
     # drift stamp at the head of the soak half (round 12): the gate
     # half recorded its four floor probes before the registry queries
-    # heated the box; this trio re-times two of them here so a
+    # heated the box; this pair re-times two of them here so a
     # soak-section delta can be classified against the box state the
     # SOAKS actually ran under, not the gate's cooler snapshot
-    out["drift_rest_32task_exec"], _ = _floor_probe(spark)
-    _shf = (
-        spark.range(0, 1_000_000, 1, 32)
-        .groupBy((F.col("id") % 32).alias("k"))
-        .count()
-    )
-    _shf.collect()
-    out["drift_rest_shuffle_exec"] = _best(lambda: _shf.collect(), 5)
+    out["drift_rest_32task_exec"] = _min_of(_floor_df(spark).collect, 5).sec
+    out["drift_rest_shuffle_exec"] = _min_of(
+        _shuffle_floor_df(spark).collect, 5
+    ).sec
 
-    def _section(flag, key, fn):
-        if os.environ.get(flag, "1") != "1":
-            return
+    sections = {
+        "skew": lambda: _run_skew(spark, data_dir, runs),
+        "big": lambda: _run_big(spark, data_dir, runs),
+        "lsh": lambda: _run_lsh_mega(spark),
+        "curation": lambda: _run_curation_soak(spark, data_dir),
+        "ann": lambda: _run_ann_soak(spark, data_dir),
+        "ann_big": lambda: _run_ann_big_soak(spark, data_dir),
+        "ann_cold": lambda: _run_ann_cold_soak(spark, data_dir),
+        "ndstream": lambda: _run_near_dedup_soak(spark, data_dir),
+        "ndttl": lambda: _run_near_dedup_ttl_soak(spark),
+        "joins": lambda: _run_join_soak(spark, data_dir, runs),
+        "ndtrickle": lambda: _run_ndtrickle(spark, data_dir),
+        "recur": lambda: _run_recurrence_soak(spark, data_dir),
+        "streamfloor": lambda: _run_stream_floor(spark),
+    }
+    for key, fn in sections.items():
         try:
             out.update(fn())
         except Exception as e:  # pragma: no cover - safety net
-            msg = str(e)
-            root = [ln for ln in msg.splitlines() if "Caused by" in ln or "Error" in ln]
-            out[key + "_error"] = (root[-1] if root else msg)[:300]
-
-    _section("SPARK_GRAFT_SCALE_SKEW", "skew", lambda: _run_skew(spark, data_dir, runs))
-    _section("SPARK_GRAFT_SCALE_BIG", "big", lambda: _run_big(spark, data_dir, runs))
-    _section("SPARK_GRAFT_SCALE_LSH", "lsh", lambda: _run_lsh_mega(spark))
-    _section(
-        "SPARK_GRAFT_SCALE_CURATION",
-        "curation",
-        lambda: _run_curation_soak(spark, data_dir),
-    )
-    _section("SPARK_GRAFT_SCALE_ANN", "ann", lambda: _run_ann_soak(spark, data_dir))
-    _section(
-        "SPARK_GRAFT_SCALE_ANN_BIG",
-        "ann_big",
-        lambda: _run_ann_big_soak(spark, data_dir),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_ANN_COLD",
-        "ann_cold",
-        lambda: _run_ann_cold_soak(spark, data_dir),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_NDSTREAM",
-        "ndstream",
-        lambda: _run_near_dedup_soak(spark, data_dir),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_NDTTL",
-        "ndttl",
-        lambda: _run_near_dedup_ttl_soak(spark),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_JOINS",
-        "joins",
-        lambda: _run_join_soak(spark, data_dir, runs),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_NDTRICKLE",
-        "ndtrickle",
-        lambda: _run_ndtrickle(spark, data_dir),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_RECUR",
-        "recur",
-        lambda: _run_recurrence_soak(spark, data_dir),
-    )
-    _section(
-        "SPARK_GRAFT_SCALE_STREAMFLOOR",
-        "streamfloor",
-        lambda: _run_stream_floor(spark),
-    )
+            out[key + "_error"] = root_cause(str(e))[:300]
 
     # Combined ANN index-economics gate (round 14, VERDICT item 5): the
     # r13 brute fallback made ann10m_{ivf,pq}_speedup compare two runs
@@ -701,31 +652,30 @@ def _run_stream_floor(spark: SparkSession) -> dict:
     timed trials (reusing a running stream across trials would change
     what the queries measure — a methodology change this bench does not
     make unilaterally)."""
+    import itertools
     import shutil
     import tempfile
 
-    best = None
     tmp = tempfile.mkdtemp(prefix="imcs_streamfloor_")
+    trial = itertools.count()
+
+    def _stream():
+        q = (
+            spark.readStream.schema("id long")
+            .parquet(src)
+            .writeStream.foreachBatch(lambda df, bid: None)
+            .option("checkpointLocation", os.path.join(tmp, f"chk{next(trial)}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
     try:
         src = os.path.join(tmp, "src")
         spark.range(1).write.mode("overwrite").parquet(src)
-        for i in range(3):
-            chk = os.path.join(tmp, f"chk{i}")
-            t0 = time.time()
-            q = (
-                spark.readStream.schema("id long")
-                .parquet(src)
-                .writeStream.foreachBatch(lambda df, bid: None)
-                .option("checkpointLocation", chk)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            el = time.time() - t0
-            best = el if best is None else min(best, el)
+        return {"stream_trial_floor_sec": _min_of(_stream, 3).sec}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return {"stream_trial_floor_sec": round(best, 4)}
 
 
 def gen_quotes_skewed(spark: SparkSession, path: str, parallelism: int = 32) -> None:
@@ -790,42 +740,40 @@ def _run_skew(spark: SparkSession, data_dir: str, runs: int) -> dict:
         .persist()
     )
     un.count()
+    vwap = (F.sum(F.col("close") * F.col("volume")) / F.sum("volume")).alias("v")
     for tag, t in (("uniform", un), ("skew", sk)):
-        vwap = lambda: t.groupBy("symbol").agg(  # noqa: E731
-            (F.sum(F.col("close") * F.col("volume")) / F.sum("volume")).alias("v")
-        )
-        out[f"vwap_all_{tag}"] = _best(lambda: vwap().collect(), runs)
+        out[f"vwap_all_{tag}"] = _min_of(
+            lambda: t.groupBy("symbol").agg(vwap).collect(), runs
+        ).sec
         # series (pos, val): val = numeric symbol rank — 20% of rows
         # tie on one value in the skewed table, the exact hazard the
         # two-phase rank / de-skewed desc sort were rewritten for
         ser = t.select("pos", F.col("sid").cast("double").alias("val"))
-        out[f"rank_{tag}"] = _best(
-            lambda: sorting.rank(ser, "val").count(), max(2, runs - 1)
-        )
-        out[f"sort_desc_{tag}"] = _best(
-            lambda: sorting.sort(ser, "desc", "val").count(), max(2, runs - 1)
-        )
         # skewed fact-to-dim equi-join on the symbol key (the hot key
         # would otherwise funnel 1.2M rows through one shuffle task).
         # Timed three ways: plain shuffle-hash join (AQE skew-split
         # active), salted join, and the broadcast a 2200-row dim
         # actually gets (the skew-immune baseline).
         dim = t.groupBy("symbol").agg(F.avg("close").alias("ref_close"))
-        join_count = lambda j: j.filter(  # noqa: E731
-            F.col("close") > F.col("ref_close")
-        ).count()
-        out[f"join_plain_{tag}"] = _best(
-            lambda: join_count(t.join(dim.hint("shuffle_hash"), "symbol")),
-            max(2, runs - 1),
-        )
-        out[f"join_salted_{tag}"] = _best(
-            lambda: join_count(joins.salted_join(t, dim, ["symbol"], salt=8)),
-            max(2, runs - 1),
-        )
-        out[f"join_broadcast_{tag}"] = _best(
-            lambda: join_count(t.join(F.broadcast(dim), "symbol")),
-            max(2, runs - 1),
-        )
+
+        def join_count(j):
+            return j.filter(F.col("close") > F.col("ref_close")).count()
+
+        rows = {
+            "rank": lambda: sorting.rank(ser, "val").count(),
+            "sort_desc": lambda: sorting.sort(ser, "desc", "val").count(),
+            "join_plain": lambda: join_count(
+                t.join(dim.hint("shuffle_hash"), "symbol")
+            ),
+            "join_salted": lambda: join_count(
+                joins.salted_join(t, dim, ["symbol"], salt=8)
+            ),
+            "join_broadcast": lambda: join_count(
+                t.join(F.broadcast(dim), "symbol")
+            ),
+        }
+        for name, fn in rows.items():
+            out[f"{name}_{tag}"] = _min_of(fn, max(2, runs - 1)).sec
     sk.unpersist()
     un.unpersist()
     return out
@@ -846,121 +794,56 @@ def _run_big(spark: SparkSession, data_dir: str, runs: int) -> dict:
     its own round-robin interleaved floor, same discipline as the 6M
     gate. The dbitem row gets a 60M twin table through the identical
     dictionary-encode + packed-int-key load path as the 6M gate row."""
-    global N_SYMBOLS, QUOTE_ROWS, DBITEM_ROWS
     path = os.path.join(data_dir, "quotes_60m.parquet")
-    saved = (N_SYMBOLS, QUOTE_ROWS)
-    N_SYMBOLS, QUOTE_ROWS = 22000, 22000 * N_DAYS
-    try:
+    with _scaled(N_SYMBOLS=22000, QUOTE_ROWS=22000 * N_DAYS):
         _ensure(spark, path, gen_quotes)
-    finally:
-        N_SYMBOLS, QUOTE_ROWS = saved
     dpath = os.path.join(data_dir, "dbitem_60m.parquet")
-    dsaved = DBITEM_ROWS
     # 6x the gate table (10M -> 60M at bench size) rather than a
     # hardcoded 60M: the toy-size contract test monkeypatches
     # DBITEM_ROWS and must not generate a 60M table in CI
-    DBITEM_ROWS = dsaved * 6
-    try:
+    with _scaled(DBITEM_ROWS=DBITEM_ROWS * 6):
         _ensure(spark, dpath, gen_dbitem)
-    finally:
-        DBITEM_ROWS = dsaved
 
     out: dict[str, float] = {}
-    out["floor_60m_exec"], _t32 = _floor_probe(spark)
-    t0 = time.time()
-    q = spark.read.parquet(path).persist()
-    out["rows_quote_60m"] = q.count()
-    out["load_quotes_60m"] = round(time.time() - t0, 4)
-    _time_row(
-        out,
-        "vwap_all_60m",
-        lambda: q.groupBy("symbol").agg(
-            (F.sum(F.col("close") * F.col("volume")) / F.sum("volume")).alias("v")
-        ),
-        runs,
-        floor_df=_t32,
-    )
-    _time_row(
-        out,
-        "filtered_count_60m",
-        lambda: q.filter(F.col("close") > F.col("open") * 1.1).agg(
-            F.count(F.lit(1)).alias("n")
-        ),
-        runs,
-        floor_df=_t32,
-    )
-    _time_row(
-        out, "sum_close_60m", lambda: q.agg(F.sum("close").alias("s")), runs,
-        floor_df=_t32,
-    )
-    _time_row(
-        out,
-        "filter_project_60m",
-        lambda: q.filter(
-            (F.col("symbol") == "S0042")
-            & F.col("day").between("2010-01-01", "2010-03-31")
-            & (F.col("close") > F.col("open") * 1.01)
-        ).select("day", "close"),
-        runs,
-        floor_df=_t32,
-    )
-    _time_row(
-        out,
-        "vwap_one_60m",
-        lambda: q.filter(
-            (F.col("symbol") == "S0100")
-            & F.col("day").between("2010-01-01", "2012-12-31")
-        ).agg((F.sum(F.col("close") * F.col("volume")) / F.sum("volume")).alias("v")),
-        runs,
-        floor_df=_t32,
-    )
-    q.unpersist()
+    _t32 = _floor_df(spark)
+    out["floor_60m_exec"] = _min_of(_t32.collect, 5).sec
 
-    # 60M dbitem: the same load shape as the 6M gate row — broadcast
-    # dictionary encode of the three varchar keys, arithmetic pack into
-    # one int gkey, cache co-located on it (zero-exchange agg)
-    d_raw = spark.read.parquet(dpath)
-    dict_vals: dict[str, list] = {}
-    enc = d_raw
-    for c in ("trader", "desk", "office"):
-        vals = [r[0] for r in d_raw.select(c).distinct().orderBy(c).collect()]
-        dict_vals[c] = vals
-        dc = spark.createDataFrame(
-            [(v, i) for i, v in enumerate(vals)], f"{c} string, {c}_code int"
-        )
-        enc = enc.join(F.broadcast(dc), c).drop(c)
-    n_desk, n_office = len(dict_vals["desk"]), len(dict_vals["office"])
-    enc = enc.withColumn(
-        "gkey",
-        (
-            (F.col("trader_code") * n_desk + F.col("desk_code")) * n_office
-            + F.col("office_code")
-        ).cast("int"),
-    ).drop("trader_code", "desk_code", "office_code")
-    t0 = time.time()
-    d = enc.repartition(32, "gkey").persist()
-    out["rows_dbitem_60m"] = d.count()
-    out["load_dbitem_60m"] = round(time.time() - t0, 4)
-
-    def _dbq():
-        r = d.groupBy("gkey").agg(
-            F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-            F.sum("volume").alias("_v"),
-        )
-        codes = {
-            "trader": F.floor(F.col("gkey") / (n_desk * n_office)),
-            "desk": F.floor(F.col("gkey") / n_office) % n_desk,
-            "office": F.col("gkey") % n_office,
+    def load_quotes():
+        with _stopwatch(out, "load_quotes_60m"):
+            q = spark.read.parquet(path).persist()
+            out["rows_quote_60m"] = q.count()
+        rows = _quote_rows(q)
+        return q, {
+            n: rows[n]
+            for n in (
+                "vwap_all", "filtered_count", "sum_close", "filter_project",
+                "vwap_one",
+            )
         }
-        for c in ("trader", "desk", "office"):
-            arr = F.array(*[F.lit(s) for s in dict_vals[c]])
-            r = r.withColumn(c, F.element_at(arr, (codes[c] + 1).cast("int")))
-        return r.select(
-            "trader", "desk", "office", (F.col("_pv") / F.col("_v")).alias("wavg")
-        )
 
-    _time_row(out, "dbitem_hash_agg_60m", _dbq, runs, floor_df=_t32)
-    d.unpersist()
+    def load_dbitem():
+        # the same load shape as the 6M gate row — broadcast dictionary
+        # encode of the three varchar keys, arithmetic pack into one
+        # int gkey, cache co-located on it (zero-exchange agg); only
+        # the cache build is timed here
+        enc, _enc3, dict_vals = _encode_dbitem(spark, dpath)
+        with _stopwatch(out, "load_dbitem_60m"):
+            d = enc.repartition(32, "gkey").persist()
+            out["rows_dbitem_60m"] = d.count()
+        return d, {"dbitem_hash_agg": lambda: _dbitem_query(d, dict_vals)}
+
+    # one table cached at a time; each row gets the 6M gate's
+    # statement / prepared-plan split with its own interleaved floor
+    for load in (load_quotes, load_dbitem):
+        table, rows = load()
+        for name, build in rows.items():
+            name += "_60m"
+            out[name] = _min_of(lambda: build().collect(), runs).sec
+            df = build()
+            df.collect()  # warm: physical planning + codegen
+            t = _min_of(df.collect, runs, floor_df=_t32)
+            out[name + "_exec"], out[name + "_exec_floor"] = t.sec, t.floor_sec
+        table.unpersist()
     return out
 
 
@@ -975,29 +858,6 @@ def _run_big(spark: SparkSession, data_dir: str, runs: int) -> dict:
 # brute-force slice equality check pinning the 60M output to the
 # oracle-checked sf0.1 semantics.
 # ---------------------------------------------------------------------------
-def _time_built_row(out: dict, name: str, build, runs: int, floor_df) -> None:
-    """min-of-runs over FRESH builds (plan + execute), with the floor
-    probe interleaved round-robin like _time_row. The prepared-plan
-    _exec convention is meaningless for these shuffle-heavy rows: a
-    re-collect of the same DataFrame reuses the materialized shuffle
-    map outputs inside the JVM and measures ~0 ms of real work, so the
-    build-per-trial statement form is the honest number here (Catalyst
-    compile is ~0.1 s against multi-second rows — negligible, unlike
-    the sub-100 ms gate rows where the _exec split exists)."""
-    best = fbest = None
-    for _ in range(max(runs, 2)):
-        t0 = time.time()
-        build().collect()
-        el = time.time() - t0
-        best = el if best is None else min(best, el)
-        t0 = time.time()
-        floor_df.collect()
-        fl = time.time() - t0
-        fbest = fl if fbest is None else min(fbest, fl)
-    out[name] = round(best, 4)
-    out[name + "_floor"] = round(fbest, 4)
-
-
 def _join_hot_sid(n_symbols: int) -> int:
     """Rank 100 = the gate's hot symbol S0100 at bench sizes; falls
     back to the middle rank when the (CI toy) symbol count is smaller."""
@@ -1029,16 +889,24 @@ def _run_join_soak(spark: SparkSession, data_dir: str, runs: int) -> dict:
     from imcs_spark.operators import joins
 
     out: dict[str, float] = {}
-    out["joins_floor_sec"], _t32 = _floor_probe(spark)
+    _t32 = _floor_df(spark)
+    out["joins_floor_sec"] = _min_of(_t32.collect, 5).sec
+
+    def _time_fresh(name, build):
+        # min over FRESH builds (plan + execute), floor interleaved. The
+        # prepared-plan _exec convention is meaningless for these
+        # shuffle-heavy rows: a re-collect of the same DataFrame reuses
+        # the materialized shuffle map outputs inside the JVM and
+        # measures ~0 ms of real work, so the build-per-trial statement
+        # form is the honest number (Catalyst compile is ~0.1 s against
+        # multi-second rows — negligible, unlike the sub-100 ms gate
+        # rows where the _exec split exists)
+        t = _min_of(lambda: build().collect(), max(runs, 2), floor_df=_t32)
+        out[name], out[name + "_floor"] = t.sec, t.floor_sec
 
     q60_path = os.path.join(data_dir, "quotes_60m.parquet")
-    global N_SYMBOLS, QUOTE_ROWS
-    saved = (N_SYMBOLS, QUOTE_ROWS)
-    N_SYMBOLS, QUOTE_ROWS = 22000, 22000 * N_DAYS
-    try:
+    with _scaled(N_SYMBOLS=22000, QUOTE_ROWS=22000 * N_DAYS):
         _ensure(spark, q60_path, gen_quotes)
-    finally:
-        N_SYMBOLS, QUOTE_ROWS = saved
     q6_path = os.path.join(data_dir, "quotes_6m.parquet")
     _ensure(spark, q6_path, gen_quotes)
 
@@ -1071,7 +939,7 @@ def _run_join_soak(spark: SparkSession, data_dir: str, runs: int) -> dict:
                 F.sum("close_nearest").alias("sn"),
             )
 
-        _time_built_row(out, f"asof_{tag}", _asof, runs, _t32)
+        _time_fresh(f"asof_{tag}", _asof)
 
         # --- stretch: series frames (symbol, pos, val); prep (the
         # row_number spine over the right side) is one-time input
@@ -1094,10 +962,11 @@ def _run_join_soak(spark: SparkSession, data_dir: str, runs: int) -> dict:
             .select("symbol", "pos", F.datediff("day", F.lit("2000-01-01")).alias("val"))
             .persist()
         )
-        t0 = time.time()
-        ts2.count(); vals.count(); ts1.count()
-        spine.unpersist()  # children are materialized; the spine's done
-        out[f"stretch{tag}_prep_sec"] = round(time.time() - t0, 4)
+        with _stopwatch(out, f"stretch{tag}_prep_sec"):
+            ts2.count()
+            vals.count()
+            ts1.count()
+            spine.unpersist()  # children are materialized; the spine's done
 
         def _stretch():
             s = joins.stretch(
@@ -1108,7 +977,7 @@ def _run_join_soak(spark: SparkSession, data_dir: str, runs: int) -> dict:
                 F.count(F.lit(1)).alias("n"), F.sum("val").alias("sv")
             )
 
-        _time_built_row(out, f"stretch_{tag}", _stretch, runs, _t32)
+        _time_fresh(f"stretch_{tag}", _stretch)
         if tag == "6m":
             # the 6m frames exist only for their timed rows; only the
             # 60m frames feed the slice-equality checks below
@@ -1177,39 +1046,38 @@ def _run_join_soak(spark: SparkSession, data_dir: str, runs: int) -> dict:
     # running the operator on the sampled subset is exact — and the
     # brute-force twin over the UNSAMPLED 200k-row hot symbol was a
     # 1.1B-row join that dominated the whole section's wall
-    t0 = time.time()
-    t1s = r["ts1"].filter(
-        F.col("symbol").isin(*slice_syms) & (F.col("pos") % slice_mod == 0)
-    )
-    sj = joins.stretch(
-        t1s, r["ts2"].filter(F.col("symbol").isin(*slice_syms)),
-        r["vals"].filter(F.col("symbol").isin(*slice_syms)),
-        filler=-1.0, val_col="val", partition_by=["symbol"],
-    )
-    t2v = (
-        r["ts2"].filter(F.col("symbol").isin(*slice_syms))
-        .withColumnRenamed("val", "qval")
-        .join(
-            r["vals"].filter(F.col("symbol").isin(*slice_syms))
-            .withColumnRenamed("val", "sval"),
-            ["symbol", "pos"],
+    with _stopwatch(out, "joins_slice_sec"):
+        t1s = r["ts1"].filter(
+            F.col("symbol").isin(*slice_syms) & (F.col("pos") % slice_mod == 0)
         )
-        .select("symbol", "qval", "sval")  # ts1's pos must stay unambiguous
-    )
-    bp = t1s.join(t2v, "symbol").filter(F.col("qval") > F.col("val"))
-    wbp = Window.partitionBy("symbol", "pos")
-    bf = (
-        bp.withColumn("_rk", F.row_number().over(wbp.orderBy("qval")))
-        .filter(F.col("_rk") == 1)
-        .select("symbol", "pos", F.col("sval").alias("bf_val"))
-    )
-    scmp = sj.join(bf, ["symbol", "pos"], "left").withColumn(
-        "bf_val", F.coalesce(F.col("bf_val"), F.lit(-1.0))
-    )
-    sbad = scmp.filter(~F.col("val").eqNullSafe(F.col("bf_val"))).count()
-    out["stretch60m_slice_rows"] = scmp.count()
-    out["stretch60m_slice_equal"] = int(sbad == 0)
-    out["joins_slice_sec"] = round(time.time() - t0, 4)
+        sj = joins.stretch(
+            t1s, r["ts2"].filter(F.col("symbol").isin(*slice_syms)),
+            r["vals"].filter(F.col("symbol").isin(*slice_syms)),
+            filler=-1.0, val_col="val", partition_by=["symbol"],
+        )
+        t2v = (
+            r["ts2"].filter(F.col("symbol").isin(*slice_syms))
+            .withColumnRenamed("val", "qval")
+            .join(
+                r["vals"].filter(F.col("symbol").isin(*slice_syms))
+                .withColumnRenamed("val", "sval"),
+                ["symbol", "pos"],
+            )
+            .select("symbol", "qval", "sval")  # ts1's pos must stay unambiguous
+        )
+        bp = t1s.join(t2v, "symbol").filter(F.col("qval") > F.col("val"))
+        wbp = Window.partitionBy("symbol", "pos")
+        bf = (
+            bp.withColumn("_rk", F.row_number().over(wbp.orderBy("qval")))
+            .filter(F.col("_rk") == 1)
+            .select("symbol", "pos", F.col("sval").alias("bf_val"))
+        )
+        scmp = sj.join(bf, ["symbol", "pos"], "left").withColumn(
+            "bf_val", F.coalesce(F.col("bf_val"), F.lit(-1.0))
+        )
+        sbad = scmp.filter(~F.col("val").eqNullSafe(F.col("bf_val"))).count()
+        out["stretch60m_slice_rows"] = scmp.count()
+        out["stretch60m_slice_equal"] = int(sbad == 0)
 
     for fdf in (r["quotes"], r["probe"], r["ts1"], r["ts2"], r["vals"]):
         fdf.unpersist()
@@ -1266,10 +1134,10 @@ def _run_lsh_mega(spark: SparkSession) -> dict:
       wall-clock, the scale leg 'all' mode could not run (it would
       emit ~bands/2 * 10k^2 / 2 ~ 400M pre-distinct pair rows).
     """
-    from .pipeline import dedup
+    from imcs_spark.pipeline import dedup
 
     out: dict[str, float] = {}
-    out["lsh_mega_floor_sec"], _ = _floor_probe(spark)
+    out["lsh_mega_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
     # This section runs LAST in a bench session that has already
     # executed ~3000 stages and cached the 6M/60M tables; on an 8g
@@ -1288,18 +1156,16 @@ def _run_lsh_mega(spark: SparkSession) -> dict:
     docs.count()
     sigs = dedup.minhash_signatures(docs, num_hashes=32).persist()
     sigs.count()
-    t0 = time.time()
-    all_pairs = dedup.minhash_lsh_candidates(
-        sigs, num_hashes=32, bands=16, pair_mode="all"
-    ).persist()
-    out["lsh_mega_pairs_all"] = all_pairs.count()
-    out["lsh_mega_all_sec"] = round(time.time() - t0, 4)
-    t0 = time.time()
-    star_pairs = dedup.minhash_lsh_candidates(
-        sigs, num_hashes=32, bands=16, pair_mode="star", max_bucket=100_000
-    ).persist()
-    out["lsh_mega_pairs_star"] = star_pairs.count()
-    out["lsh_mega_star_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "lsh_mega_all_sec"):
+        all_pairs = dedup.minhash_lsh_candidates(
+            sigs, num_hashes=32, bands=16, pair_mode="all"
+        ).persist()
+        out["lsh_mega_pairs_all"] = all_pairs.count()
+    with _stopwatch(out, "lsh_mega_star_sec"):
+        star_pairs = dedup.minhash_lsh_candidates(
+            sigs, num_hashes=32, bands=16, pair_mode="star", max_bucket=100_000
+        ).persist()
+        out["lsh_mega_pairs_star"] = star_pairs.count()
     out["lsh_mega_pair_ratio"] = round(
         out["lsh_mega_pairs_all"] / max(out["lsh_mega_pairs_star"], 1), 2
     )
@@ -1321,11 +1187,10 @@ def _run_lsh_mega(spark: SparkSession) -> dict:
     docs10.count()
     sigs10 = dedup.minhash_signatures(docs10, num_hashes=32).persist()
     sigs10.count()
-    t0 = time.time()
-    out["lsh_mega10k_pairs_star"] = dedup.minhash_lsh_candidates(
-        sigs10, num_hashes=32, bands=16, pair_mode="star", max_bucket=100_000
-    ).count()
-    out["lsh_mega10k_star_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "lsh_mega10k_star_sec"):
+        out["lsh_mega10k_pairs_star"] = dedup.minhash_lsh_candidates(
+            sigs10, num_hashes=32, bands=16, pair_mode="star", max_bucket=100_000
+        ).count()
     sigs10.unpersist()
     docs10.unpersist()
     return out
@@ -1405,8 +1270,8 @@ def _run_curation_soak(spark: SparkSession, data_dir: str) -> dict:
       boundary-straddling layout guarantees (a doc is assigned to the
       sequence where it STARTS).
     """
-    from .pipeline import curate, dedup
-    from .pipeline import text as T
+    from imcs_spark.pipeline import curate, dedup
+    from imcs_spark.pipeline import text as T
 
     path = os.path.join(data_dir, "docs_2m.parquet")
     _ensure(spark, path, gen_docs_2m)
@@ -1416,18 +1281,16 @@ def _run_curation_soak(spark: SparkSession, data_dir: str) -> dict:
     # adjacent floor stamp: stage-wall swings between rounds must
     # self-classify as contention vs code (r9 Wrong #3: cur2m walls
     # moved 2-4x on untouched code with no floor recorded nearby)
-    out["cur2m_floor_sec"], _ = _floor_probe(spark)
+    out["cur2m_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
-    t0 = time.time()
-    docs = spark.read.parquet(path).persist()
-    out["cur2m_rows"] = docs.count()
-    out["cur2m_load_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_load_sec"):
+        docs = spark.read.parquet(path).persist()
+        out["cur2m_rows"] = docs.count()
 
     # --- stage timings, each from the cached corpus ---
-    t0 = time.time()
-    survivors = dedup.exact_dedup(docs).persist()
-    out["cur2m_dedup_survivors"] = survivors.count()
-    out["cur2m_dedup_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_dedup_sec"):
+        survivors = dedup.exact_dedup(docs).persist()
+        out["cur2m_dedup_survivors"] = survivors.count()
 
     # idempotence on the materialized survivor set (re-running the
     # digest window on already-unique content must change nothing)
@@ -1440,41 +1303,36 @@ def _run_curation_soak(spark: SparkSession, data_dir: str) -> dict:
     bench = docs.filter(
         (F.col("doc_id") % 9973 == 2) & (F.col("doc_id") % 31 != 0)
     ).select("text")
-    t0 = time.time()
-    out["cur2m_decon_clean"] = curate.decontaminate(
-        docs.select("doc_id", "text"), bench, n=8, mode="drop"
-    ).count()
-    out["cur2m_decon_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_decon_sec"):
+        out["cur2m_decon_clean"] = curate.decontaminate(
+            docs.select("doc_id", "text"), bench, n=8, mode="drop"
+        ).count()
 
-    t0 = time.time()
-    out["cur2m_quality_pass"] = (
-        T.quality_score(docs).filter(F.col("quality") >= 0.5).count()
-    )
-    out["cur2m_quality_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_quality_sec"):
+        out["cur2m_quality_pass"] = (
+            T.quality_score(docs).filter(F.col("quality") >= 0.5).count()
+        )
 
     # text-analysis ops at 2M (first-class pipeline components with no
     # other scale evidence): language-ID argmax, whitespace + BPE-ish
     # token counting, winnowing fingerprint (the xxhash64 scale path)
-    t0 = time.time()
-    out["cur2m_langid_langs"] = (
-        docs.select(T.lang_id("text").alias("l")).groupBy("l").count().count()
-    )
-    out["cur2m_langid_sec"] = round(time.time() - t0, 4)
-    t0 = time.time()
-    row = docs.select(
-        F.sum(T.token_count("text")).alias("ws"),
-        F.sum(T.token_count("text", mode="bpe")).alias("bpe"),
-    ).collect()[0]
-    out["cur2m_tokens_ws"] = row["ws"]
-    out["cur2m_tokens_bpe"] = row["bpe"]
-    out["cur2m_tokens_sec"] = round(time.time() - t0, 4)
-    t0 = time.time()
-    out["cur2m_fingerprints"] = (
-        docs.select(T.fingerprint("text").alias("fp"))
-        .agg(F.count_distinct("fp").alias("n"))
-        .collect()[0]["n"]
-    )
-    out["cur2m_fingerprint_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_langid_sec"):
+        out["cur2m_langid_langs"] = (
+            docs.select(T.lang_id("text").alias("l")).groupBy("l").count().count()
+        )
+    with _stopwatch(out, "cur2m_tokens_sec"):
+        row = docs.select(
+            F.sum(T.token_count("text")).alias("ws"),
+            F.sum(T.token_count("text", mode="bpe")).alias("bpe"),
+        ).collect()[0]
+        out["cur2m_tokens_ws"] = row["ws"]
+        out["cur2m_tokens_bpe"] = row["bpe"]
+    with _stopwatch(out, "cur2m_fingerprint_sec"):
+        out["cur2m_fingerprints"] = (
+            docs.select(T.fingerprint("text").alias("fp"))
+            .agg(F.count_distinct("fp").alias("n"))
+            .collect()[0]["n"]
+        )
 
     # redaction: sum(length(...)) forces the full regex chain on every
     # row (count alone would let Catalyst skip the projection). The
@@ -1482,73 +1340,69 @@ def _run_curation_soak(spark: SparkSession, data_dir: str) -> dict:
     # is timed on a 200k slice alongside it so the payload records the
     # row-interleaving penalty each round (measured 18-25x — see
     # curate.redact_pii_batch's note).
-    t0 = time.time()
-    docs.select(
-        F.sum(F.length(curate.redact_pii_batch("text"))).alias("b")
-    ).collect()
-    out["cur2m_redact_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_redact_sec"):
+        docs.select(
+            F.sum(F.length(curate.redact_pii_batch("text"))).alias("b")
+        ).collect()
     slice200k = docs.filter(F.col("doc_id") < 200_000)
-    t0 = time.time()
-    slice200k.select(
-        F.sum(F.length(curate.redact_pii("text"))).alias("b")
-    ).collect()
-    out["cur2m_redact_column_200k_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_redact_column_200k_sec"):
+        slice200k.select(
+            F.sum(F.length(curate.redact_pii("text"))).alias("b")
+        ).collect()
 
     # --- split + pack with invariants ---
-    t0 = time.time()
-    budget = 2048
-    split = curate.dataset_split(docs, key_col="doc_id")
-    packed = curate.pack_sequences(
-        split.withColumn("stream", F.concat_ws("/", "source", "split")),
-        budget=budget,
-        partition_by="stream",
-    ).persist()
-    fr = {
-        r["split"]: r["n"]
-        for r in split.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_all = sum(fr.values())
-    out["cur2m_split_frac_ok"] = int(
-        abs(fr.get("train", 0) / n_all - 0.8) < 0.005
-        and abs(fr.get("val", 0) / n_all - 0.1) < 0.005
-        and abs(fr.get("test", 0) / n_all - 0.1) < 0.005
-    )
-    seq_tok = packed.groupBy("stream", "seq_id").agg(
-        F.sum("n_tokens").alias("t")
-    )
-    row = seq_tok.agg(F.max("t").alias("mx")).collect()[0]
-    max_doc = packed.agg(F.max("n_tokens").alias("m")).collect()[0]["m"]
-    out["cur2m_pack_max_seq_tokens"] = row["mx"]
-    out["cur2m_pack_budget_ok"] = int(row["mx"] <= budget + max_doc)
-    out["cur2m_seqs"] = seq_tok.count()
-    out["cur2m_split_pack_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_split_pack_sec"):
+        budget = 2048
+        split = curate.dataset_split(docs, key_col="doc_id")
+        packed = curate.pack_sequences(
+            split.withColumn("stream", F.concat_ws("/", "source", "split")),
+            budget=budget,
+            partition_by="stream",
+        ).persist()
+        fr = {
+            r["split"]: r["n"]
+            for r in split.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        n_all = sum(fr.values())
+        out["cur2m_split_frac_ok"] = int(
+            abs(fr.get("train", 0) / n_all - 0.8) < 0.005
+            and abs(fr.get("val", 0) / n_all - 0.1) < 0.005
+            and abs(fr.get("test", 0) / n_all - 0.1) < 0.005
+        )
+        seq_tok = packed.groupBy("stream", "seq_id").agg(
+            F.sum("n_tokens").alias("t")
+        )
+        row = seq_tok.agg(F.max("t").alias("mx")).collect()[0]
+        max_doc = packed.agg(F.max("n_tokens").alias("m")).collect()[0]["m"]
+        out["cur2m_pack_max_seq_tokens"] = row["mx"]
+        out["cur2m_pack_budget_ok"] = int(row["mx"] <= budget + max_doc)
+        out["cur2m_seqs"] = seq_tok.count()
     packed.unpersist()
 
     # --- full chained pipeline, same stage order as curation_e2e ---
-    t0 = time.time()
-    clean = curate.decontaminate(
-        docs.select("doc_id", "source", "text"), bench, n=8, mode="drop"
-    )
-    d2 = dedup.exact_dedup(clean)
-    d3 = (
-        T.quality_score(d2)
-        .filter(F.col("quality") >= 0.5)
-        .select("doc_id", "source", "text")
-    )
-    d4 = d3.withColumn("text", curate.redact_pii_batch("text"))
-    d5 = curate.dataset_split(d4, key_col="doc_id")
-    packed = curate.pack_sequences(
-        d5.withColumn("stream", F.concat_ws("/", "source", "split")),
-        budget=budget,
-        partition_by="stream",
-    )
-    row = packed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_tokens").alias("tok"),
-    ).collect()[0]
-    out["cur2m_e2e_docs"] = row["n"]
-    out["cur2m_e2e_tokens"] = row["tok"]
-    out["cur2m_e2e_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "cur2m_e2e_sec"):
+        clean = curate.decontaminate(
+            docs.select("doc_id", "source", "text"), bench, n=8, mode="drop"
+        )
+        d2 = dedup.exact_dedup(clean)
+        d3 = (
+            T.quality_score(d2)
+            .filter(F.col("quality") >= 0.5)
+            .select("doc_id", "source", "text")
+        )
+        d4 = d3.withColumn("text", curate.redact_pii_batch("text"))
+        d5 = curate.dataset_split(d4, key_col="doc_id")
+        packed = curate.pack_sequences(
+            d5.withColumn("stream", F.concat_ws("/", "source", "split")),
+            budget=budget,
+            partition_by="stream",
+        )
+        row = packed.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("n_tokens").alias("tok"),
+        ).collect()[0]
+        out["cur2m_e2e_docs"] = row["n"]
+        out["cur2m_e2e_tokens"] = row["tok"]
 
     docs.unpersist()
     return out
@@ -1604,6 +1458,19 @@ def gen_embeddings_1m(spark: SparkSession, path: str, parallelism: int = 32) -> 
     df.write.mode("overwrite").parquet(path)
 
 
+def _ann_queries(corpus: DataFrame, stride: int, residue: int, n: int) -> DataFrame:
+    """``n`` perturbed copies (hash noise, amplitude 0.1) of the corpus
+    rows with vec_id % stride == residue, so ground truth is
+    non-trivial: each query's true neighbour set concentrates in its
+    source cluster but is not a single planted point."""
+    return corpus.filter(F.col("vec_id") % stride == residue).limit(n).selectExpr(
+        "vec_id AS query_id",
+        "transform(embedding, (x, d) -> x + cast(0.1 * "
+        "(shiftrightunsigned(xxhash64(vec_id, d + 31), 11) / 9007199254740992.0"
+        " - 0.5) AS float)) AS embedding",
+    )
+
+
 def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     """Wall times + recall for brute-force vs IVF at 1M x 64. Queries
     are perturbed corpus rows (hash noise, amplitude 0.1), so ground
@@ -1614,62 +1481,48 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     top-10 the IVF probe recovers (n_probe=8 of 64 cells; expected
     well above 0.9 on clustered data — a collapse flags an assignment
     or probe-ranking defect, the thing unit tests at 2k rows miss)."""
-    from .pipeline import similarity as S
+    from imcs_spark.pipeline import similarity as S
 
     path = os.path.join(data_dir, "embeddings_1m.parquet")
     _ensure(spark, path, gen_embeddings_1m)
 
     out: dict[str, float] = {}
     spark.catalog.clearCache()
-    out["ann1m_floor_sec"], _ = _floor_probe(spark)
+    out["ann1m_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
-    t0 = time.time()
-    corpus = spark.read.parquet(path).persist()
-    out["ann1m_rows"] = corpus.count()
-    out["ann1m_load_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann1m_load_sec"):
+        corpus = spark.read.parquet(path).persist()
+        out["ann1m_rows"] = corpus.count()
 
     # queries: perturbed copies of every (ANN_ROWS // ANN_QUERIES)-th row
     stride = ANN_ROWS // ANN_QUERIES
-    queries = (
-        corpus.filter(F.col("vec_id") % stride == 17)
-        .limit(ANN_QUERIES)
-        .selectExpr(
-            "vec_id AS query_id",
-            f"transform(embedding, (x, d) -> x + cast(0.1 * "
-            f"(shiftrightunsigned(xxhash64(vec_id, d + 31), 11) / 9007199254740992.0 - 0.5) AS float)) AS embedding",
-        )
-        .persist()
-    )
+    queries = _ann_queries(corpus, stride, 17, ANN_QUERIES).persist()
     queries.count()
 
     # ground truth via the batched matrix kernel; the Column-fold
     # kernel is timed alongside so the payload records the batching
     # win each round (round-8 finding, BENCH_SCALE.md — measured 47 s
     # vs ~3 s at 1M x 50)
-    t0 = time.time()
-    truth = S.brute_force_topk_matrix(corpus, queries, k=10).persist()
-    n_truth = truth.count()
-    out["ann1m_brute_sec"] = round(time.time() - t0, 4)
-    t0 = time.time()
-    S.brute_force_topk(corpus, queries, k=10).count()
-    out["ann1m_brute_column_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann1m_brute_sec"):
+        truth = S.brute_force_topk_matrix(corpus, queries, k=10).persist()
+        n_truth = truth.count()
+    with _stopwatch(out, "ann1m_brute_column_sec"):
+        S.brute_force_topk(corpus, queries, k=10).count()
 
-    t0 = time.time()
-    index = S.ivf_index(corpus, n_centroids=64, iters=3)
-    index[1].count()  # materialize the persisted assignment
-    out["ann1m_ivf_build_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann1m_ivf_build_sec"):
+        index = S.ivf_index(corpus, n_centroids=64, iters=3)
+        index[1].count()  # materialize the persisted assignment
 
     # brute_fallback_coverage=None: this section measures the INDEX
     # machinery (masked serve + recall invariant); the round-13
     # full-coverage fallback would otherwise serve this 50-query batch
     # exact and recall would read 1.0 by construction
-    t0 = time.time()
-    approx = S.ivf_topk(
-        corpus, queries, k=10, n_probe=8, index=index,
-        brute_fallback_coverage=None,
-    ).persist()
-    approx.count()
-    out["ann1m_ivf_query_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann1m_ivf_query_sec"):
+        approx = S.ivf_topk(
+            corpus, queries, k=10, n_probe=8, index=index,
+            brute_fallback_coverage=None,
+        ).persist()
+        approx.count()
 
     hits = truth.select("query_id", "vec_id").intersect(
         approx.select("query_id", "vec_id")
@@ -1696,13 +1549,12 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     # separated by more than the quantization error (near-dup
     # retrieval: the planted source sits ~0.05 above rank 2) ranks
     # fine at small budgets.
-    t0 = time.time()
-    books = S.train_pq_codebooks(
-        corpus, m=16, n_codes=256, iters=3, kernel="column"
-    )
-    enc = S.pq_encode(corpus, books).persist()
-    enc.count()
-    out["ann1m_pq_build_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann1m_pq_build_sec"):
+        books = S.train_pq_codebooks(
+            corpus, m=16, n_codes=256, iters=3, kernel="column"
+        )
+        enc = S.pq_encode(corpus, books).persist()
+        enc.count()
 
     # the compression claim, measured not asserted: encoded codes
     # parquet vs the float32 embedding parquet (at 100 TB the
@@ -1713,16 +1565,8 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     _pq_dir = _tf.mkdtemp(prefix="imcs_pq_bytes_")
     try:
         enc.write.mode("overwrite").parquet(os.path.join(_pq_dir, "enc"))
-        out["ann1m_pq_bytes"] = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(os.path.join(_pq_dir, "enc"))
-            for f in fs
-        )
-        out["ann1m_emb_bytes"] = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(path)
-            for f in fs
-        )
+        out["ann1m_pq_bytes"] = _dir_bytes(os.path.join(_pq_dir, "enc"))
+        out["ann1m_emb_bytes"] = _dir_bytes(path)
         out["ann1m_pq_compression"] = round(
             out["ann1m_emb_bytes"] / max(out["ann1m_pq_bytes"], 1), 2
         )
@@ -1731,13 +1575,12 @@ def _run_ann_soak(spark: SparkSession, data_dir: str) -> dict:
     # brute_fallback=False: corpus is RAM-persisted here, so the
     # round-13 'auto' default would serve exact brute — this key
     # records the real ADC + rerank path the recall invariant pins
-    t0 = time.time()
-    pq = S.pq_topk(
-        enc, queries, books, k=10, rerank=corpus, rerank_factor=300,
-        brute_fallback=False,
-    ).persist()
-    pq.count()
-    out["ann1m_pq_query_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann1m_pq_query_sec"):
+        pq = S.pq_topk(
+            enc, queries, books, k=10, rerank=corpus, rerank_factor=300,
+            brute_fallback=False,
+        ).persist()
+        pq.count()
     hits = truth.select("query_id", "vec_id").intersect(
         pq.select("query_id", "vec_id")
     ).count()
@@ -1767,10 +1610,10 @@ NDTRICKLE_CELLS = 160_000_000
 
 
 def _run_ndtrickle(spark: SparkSession, data_dir: str) -> dict:
-    from .streaming import _write_state, _snapshot_ok
+    from imcs_spark.streaming import _write_state, _snapshot_ok
 
     out: dict[str, float] = {}
-    out["ndtrickle_floor_sec"], _ = _floor_probe(spark)
+    out["ndtrickle_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
     state = os.path.join(data_dir, "ndtrickle_state", "v0")
     if not _snapshot_ok(spark, state):
@@ -1784,16 +1627,12 @@ def _run_ndtrickle(spark: SparkSession, data_dir: str) -> dict:
             F.col("id").alias("hub_id"),
             *[F.col("id").alias(f"mh_{k}") for k in range(16)],
         )
-        t0 = time.time()
-        _write_state(spark, cells, sigs, state, sort=True)
-        out["ndtrickle_gen_sec"] = round(time.time() - t0, 4)
+        with _stopwatch(out, "ndtrickle_gen_sec"):
+            _write_state(spark, cells, sigs, state, sort=True)
     cpath = f"{state}/cells"
     schema = "band int, bucket bigint, hub_id bigint, _v int"
     out["ndtrickle_state_rows"] = spark.read.schema(schema).parquet(cpath).count()
-    out["ndtrickle_state_bytes"] = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _d, fs in os.walk(cpath) for f in fs
-    )
+    out["ndtrickle_state_bytes"] = _dir_bytes(cpath)
 
     # 256 bucket values actually present — a trickle batch's IN set
     vals = [
@@ -1816,11 +1655,11 @@ def _run_ndtrickle(spark: SparkSession, data_dir: str) -> dict:
         # (a) pushed IN — the trickle fast path's plan
         spark.conf.set(key, "1024")
         out["ndtrickle_pushed_rows"] = _probe().collect()[0]["n"]
-        out["ndtrickle_pushed_sec"] = _best(lambda: _probe().collect(), 3)
+        out["ndtrickle_pushed_sec"] = _min_of(lambda: _probe().collect(), 3).sec
         # (b) degraded IN — default threshold folds 256 values to a
         # min/max range over uniform hashes: full decode
         spark.conf.set(key, prev)
-        out["ndtrickle_fullscan_sec"] = _best(lambda: _probe().collect(), 3)
+        out["ndtrickle_fullscan_sec"] = _min_of(lambda: _probe().collect(), 3).sec
     finally:
         spark.conf.set(key, prev)
 
@@ -1836,7 +1675,7 @@ def _run_ndtrickle(spark: SparkSession, data_dir: str) -> dict:
             .agg(F.count(F.lit(1)).alias("n"), F.sum("hub_id").alias("s"))
         )
 
-    out["ndtrickle_join_sec"] = _best(lambda: _join().collect(), 3)
+    out["ndtrickle_join_sec"] = _min_of(lambda: _join().collect(), 3).sec
     out["ndtrickle_skip_ratio"] = round(
         out["ndtrickle_fullscan_sec"] / max(out["ndtrickle_pushed_sec"], 1e-9), 2
     )
@@ -1855,52 +1694,35 @@ def _run_ndtrickle(spark: SparkSession, data_dir: str) -> dict:
 # and ivf/pq serve time <= brute/5.
 # ---------------------------------------------------------------------------
 def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
-    from .pipeline import similarity as S
+    from imcs_spark.pipeline import similarity as S
 
-    global ANN_ROWS
     rows10 = ANN_ROWS * 10
     path = os.path.join(data_dir, "embeddings_10m.parquet")
-    saved = ANN_ROWS
-    ANN_ROWS = rows10
-    try:
+    with _scaled(ANN_ROWS=rows10):
         _ensure(spark, path, gen_embeddings_1m)
-    finally:
-        ANN_ROWS = saved
 
     out: dict[str, float] = {}
     spark.catalog.clearCache()
-    out["ann10m_floor_sec"], _ = _floor_probe(spark)
+    out["ann10m_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
-    t0 = time.time()
-    corpus = spark.read.parquet(path).persist()
-    out["ann10m_rows"] = corpus.count()
-    out["ann10m_load_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_load_sec"):
+        corpus = spark.read.parquet(path).persist()
+        out["ann10m_rows"] = corpus.count()
 
     stride = rows10 // ANN_QUERIES
-    queries = (
-        corpus.filter(F.col("vec_id") % stride == 17)
-        .limit(ANN_QUERIES)
-        .selectExpr(
-            "vec_id AS query_id",
-            "transform(embedding, (x, d) -> x + cast(0.1 * "
-            "(shiftrightunsigned(xxhash64(vec_id, d + 31), 11) / 9007199254740992.0 - 0.5) AS float)) AS embedding",
-        )
-        .persist()
-    )
+    queries = _ann_queries(corpus, stride, 17, ANN_QUERIES).persist()
     queries.count()
 
-    t0 = time.time()
-    truth = S.brute_force_topk_matrix(corpus, queries, k=10).persist()
-    n_truth = truth.count()
-    out["ann10m_brute_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_brute_sec"):
+        truth = S.brute_force_topk_matrix(corpus, queries, k=10).persist()
+        n_truth = truth.count()
 
     # train on a 10% sample (1M at bench size), assign the full corpus
     sample = corpus.filter(F.col("vec_id") % 10 == 3)
-    t0 = time.time()
-    cents = S.train_ivf_centroids(sample, n_centroids=64, iters=3)
-    index = S.ivf_index(corpus, centroids=cents)
-    index[1].count()
-    out["ann10m_ivf_build_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_ivf_build_sec"):
+        cents = S.train_ivf_centroids(sample, n_centroids=64, iters=3)
+        index = S.ivf_index(corpus, centroids=cents)
+        index[1].count()
 
     # masked serve (brute_fallback_coverage=None): the real IVF index
     # path, and the serve the recall invariant pins. Recorded
@@ -1908,13 +1730,12 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # batch's union-of-probes covers all 64 cells — the regime where
     # masked serve decodes the whole corpus like brute while paying
     # per-cell grouping overhead (0.74x of brute recorded in r12).
-    t0 = time.time()
-    approx = S.ivf_topk(
-        corpus, queries, k=10, n_probe=8, index=index,
-        brute_fallback_coverage=None,
-    ).persist()
-    approx.count()
-    out["ann10m_ivf_masked_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_ivf_masked_sec"):
+        approx = S.ivf_topk(
+            corpus, queries, k=10, n_probe=8, index=index,
+            brute_fallback_coverage=None,
+        ).persist()
+        approx.count()
     hits = truth.select("query_id", "vec_id").intersect(
         approx.select("query_id", "vec_id")
     ).count()
@@ -1928,16 +1749,7 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # cached result (first observed here: a 15.3 s brute "re-run" read
     # 0.25 s). Different query rows → different closure bytes → the
     # rebuilt plans really execute.
-    queries_b = (
-        corpus.filter(F.col("vec_id") % stride == 29)
-        .limit(ANN_QUERIES)
-        .selectExpr(
-            "vec_id AS query_id",
-            "transform(embedding, (x, d) -> x + cast(0.1 * "
-            "(shiftrightunsigned(xxhash64(vec_id, d + 31), 11) / 9007199254740992.0 - 0.5) AS float)) AS embedding",
-        )
-        .persist()
-    )
+    queries_b = _ann_queries(corpus, stride, 29, ANN_QUERIES).persist()
     queries_b.count()
 
     # DEFAULT serve (round-13 verdict item 2): at full union-of-probes
@@ -1945,9 +1757,8 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # cached index instead of the slower-than-brute masked plan — the
     # "batch serve is never slower than brute" wiring. This is the
     # gate row ann10m_ivf_speedup divides into.
-    t0 = time.time()
-    S.ivf_topk(corpus, queries_b, k=10, n_probe=8, index=index).count()
-    out["ann10m_ivf_query_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_ivf_query_sec"):
+        S.ivf_topk(corpus, queries_b, k=10, n_probe=8, index=index).count()
 
     # single-query serve twin — the regime the corpus-fraction thesis
     # lives in: a 50-query batch probes every one of the 64 cells
@@ -1957,12 +1768,10 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # never decode. Recorded as the *_q1 keys (gate: ivf_q1 <= brute/5).
     q1 = queries.limit(1).persist()
     q1.count()
-    t0 = time.time()
-    S.brute_force_topk_matrix(corpus, q1, k=10).count()
-    out["ann10m_brute_q1_sec"] = round(time.time() - t0, 4)
-    t0 = time.time()
-    S.ivf_topk(corpus, q1, k=10, n_probe=8, index=index).count()
-    out["ann10m_ivf_q1_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_brute_q1_sec"):
+        S.brute_force_topk_matrix(corpus, q1, k=10).count()
+    with _stopwatch(out, "ann10m_ivf_q1_sec"):
+        S.ivf_topk(corpus, q1, k=10, n_probe=8, index=index).count()
     out["ann10m_ivf_q1_speedup"] = round(
         out["ann10m_brute_q1_sec"] / max(out["ann10m_ivf_q1_sec"], 1e-9), 2
     )
@@ -1980,16 +1789,16 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     for xn in (5, 15, 50):
         qx = queries_b.limit(xn).persist()
         qx.count()
-        masked = _best(
+        masked = _min_of(
             lambda: S.ivf_topk(
                 corpus, qx, k=10, n_probe=8, index=index,
                 brute_fallback_coverage=None,
             ).count(),
             2,
-        )
-        brute = _best(
+        ).sec
+        brute = _min_of(
             lambda: S.brute_force_topk_matrix(corpus, qx, k=10).count(), 2
-        )
+        ).sec
         out[f"ann10m_xn{xn}_masked_sec"] = masked
         out[f"ann10m_xn{xn}_brute_sec"] = brute
         if masked < brute:
@@ -1997,13 +1806,12 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
         qx.unpersist()
     out["ann10m_batch_crossover"] = xn_last
 
-    t0 = time.time()
-    books = S.train_pq_codebooks(
-        sample, m=16, n_codes=256, iters=3, kernel="column"
-    )
-    enc = S.pq_encode(corpus, books).persist()
-    enc.count()
-    out["ann10m_pq_build_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_pq_build_sec"):
+        books = S.train_pq_codebooks(
+            sample, m=16, n_codes=256, iters=3, kernel="column"
+        )
+        enc = S.pq_encode(corpus, books).persist()
+        enc.count()
 
     # rerank_factor scales with cluster density: the ADC noise floor
     # (~0.027 mean |adc-cos| at m=16x256) is unchanged but each
@@ -2017,13 +1825,12 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # recall invariant pins, recorded as its own key (0.35x of brute
     # in r12: the code-scan byte lever cannot pay against RAM-resident
     # vectors; see the ann_cold section for its claimed regime)
-    t0 = time.time()
-    pq = S.pq_topk(
-        enc, queries, books, k=10, rerank=corpus, rerank_factor=1500,
-        brute_fallback=False,
-    ).persist()
-    pq.count()
-    out["ann10m_pq_adc_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_pq_adc_sec"):
+        pq = S.pq_topk(
+            enc, queries, books, k=10, rerank=corpus, rerank_factor=1500,
+            brute_fallback=False,
+        ).persist()
+        pq.count()
     out["ann10m_pq_rerank_factor"] = 1500
     hits = truth.select("query_id", "vec_id").intersect(
         pq.select("query_id", "vec_id")
@@ -2035,11 +1842,10 @@ def _run_ann_big_soak(spark: SparkSession, data_dir: str) -> dict:
     # — never slower than brute, by construction. Gate row; on the
     # disjoint queries_b batch (plan-cache trap above — this serve's
     # fallback is plan-identical to the persisted truth otherwise).
-    t0 = time.time()
-    S.pq_topk(
-        enc, queries_b, books, k=10, rerank=corpus, rerank_factor=1500,
-    ).count()
-    out["ann10m_pq_query_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_pq_query_sec"):
+        S.pq_topk(
+            enc, queries_b, books, k=10, rerank=corpus, rerank_factor=1500,
+        ).count()
 
     # the thesis, as recorded ratios (gate: default serve never slower
     # than brute, i.e. speedup >= ~1.0; the index-path economics live
@@ -2077,11 +1883,11 @@ def _run_recurrence_soak(spark: SparkSession, data_dir: str) -> dict:
     driver-side numpy recurrence over the final 1000 rows (with
     α = 2/21, prefix influence decays by (1-α)^1000 ≈ 1e-44, so the
     truncated recurrence is exact to double precision)."""
-    from .operators import windows
+    from imcs_spark.operators import windows
 
     out: dict[str, float] = {}
     spark.catalog.clearCache()
-    out["recur_floor_sec"], _ = _floor_probe(spark)
+    out["recur_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
     n6 = QUOTE_ROWS
     n60 = 22000 * N_DAYS
@@ -2115,14 +1921,8 @@ def _run_recurrence_soak(spark: SparkSession, data_dir: str) -> dict:
     tails = {}
     for label, n_rows in (("6m", n6), ("60m", n60)):
         for op, fn in (("ema", run_ema), ("cum", run_cum)):
-            best, tail = None, None
-            for _ in range(2):
-                t0 = time.time()
-                tail = fn(n_rows)
-                el = time.time() - t0
-                best = el if best is None else min(best, el)
-            out[f"recur{label}_{op}_sec"] = round(best, 4)
-            tails[(label, op)] = tail
+            t = _min_of(lambda: fn(n_rows), 2)
+            out[f"recur{label}_{op}_sec"], tails[(label, op)] = t.sec, t.last
     for op in ("ema", "cum"):
         out[f"recur60m_{op}_linear_ratio"] = round(
             (out[f"recur60m_{op}_sec"] / max(out[f"recur6m_{op}_sec"], 1e-9))
@@ -2194,10 +1994,9 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     indexes live AT REST like a real 100-TB deployment's would —
     corpus parquet, cell-PARTITIONED IVF assignment (partition pruning
     = the physical probed-cells scan), codes parquet — and every timed
-    serve starts page-cache-cold via _evict_pages, alternating paths
-    across trials so device/hypervisor cache drift cannot favor one
-    side. Point query (n_probe 8/64), the shape the corpus-fraction
-    thesis lives in; min of 2 evicted trials per path.
+    serve starts page-cache-cold via _evict_pages. Point query
+    (n_probe 8/64), the shape the corpus-fraction thesis lives in; min
+    of 2 evicted trials per path, the paths one after another.
 
     Keys: ann10m_cold_{brute,ivf,pq_adc,pq}_q1_sec (+ _q1_recall10 for
     approximate paths), ann10m_cold_ivf_q1_speedup (gate: >= 5x brute
@@ -2205,17 +2004,12 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     same serves page-cache-hot — the regime delta in one line), and
     ann10m_cold_bytes_{corpus,ivf_probed,codes} (the byte lever as
     written)."""
-    from .pipeline import similarity as S
+    from imcs_spark.pipeline import similarity as S
 
-    global ANN_ROWS
     rows10 = ANN_ROWS * 10
     corpus_path = os.path.join(data_dir, "embeddings_10m.parquet")
-    saved = ANN_ROWS
-    ANN_ROWS = rows10
-    try:
+    with _scaled(ANN_ROWS=rows10):
         _ensure(spark, corpus_path, gen_embeddings_1m)
-    finally:
-        ANN_ROWS = saved
 
     ivf_dir = os.path.join(data_dir, "ann10m_cold_ivf")
     # array layout, deliberately: a one-smallint-column-per-subspace
@@ -2228,84 +2022,78 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     out: dict[str, float] = {}
     spark.catalog.clearCache()
 
-    t0 = time.time()
-    if not (os.path.exists(meta_path) and os.path.isdir(ivf_dir)):
-        # one-time at-rest index build (amortized across rounds, like
-        # any index-at-rest): same train config as the ann_big soak
-        corpus = spark.read.parquet(corpus_path)
-        sample = corpus.filter(F.col("vec_id") % 10 == 3)
-        cents = S.train_ivf_centroids(sample, n_centroids=64, iters=3)
-        idx = S.ivf_index(corpus, centroids=cents)
-        (
-            idx[1]
-            .select(
-                "cell", "vec_id",
-                F.col("_cu").cast("array<float>").alias("_cu"),
-            )
-            .repartition(64, "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(ivf_dir)
-        )
-        idx[1].unpersist()
-        books = S.train_pq_codebooks(
-            sample, m=16, n_codes=256, iters=3, kernel="column"
-        )
-        with open(meta_path, "w") as fh:
-            json.dump({"centroids": cents, "codebooks": books}, fh)
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    cents, books = meta["centroids"], meta["codebooks"]
-    # r14 at-rest layout (verdict item 4): codes carry their vector's
-    # IVF cell (2 extra bytes/row) and a cell-PARTITIONED copy of the
-    # raw corpus exists, so the PQ rerank fetch prunes to the
-    # candidates' own cells instead of scanning the whole corpus — the
-    # fetch that made the cold PQ serve slower than brute (0.74-0.81x
-    # in r13). An existing cell-less codes table is rebuilt once.
+    # the one-time at-rest builds: the key is kept only when a build
+    # ran (reusing the at-rest tables takes well under a second)
     import shutil as _sh
 
-    if (
-        os.path.isdir(codes_path)
-        and "cell" not in spark.read.parquet(codes_path).columns
-    ):
-        _sh.rmtree(codes_path)
-    bycell_dir = os.path.join(data_dir, "ann10m_cold_corpus_bycell")
-    if not os.path.isdir(codes_path):
-        assign = spark.read.parquet(ivf_dir).select("vec_id", "cell")
-        (
-            S.pq_encode(spark.read.parquet(corpus_path), books)
-            .join(assign, "vec_id")
-            .write.mode("overwrite")
-            .parquet(codes_path)
-        )
-    if not os.path.isdir(bycell_dir):
-        assign = spark.read.parquet(ivf_dir).select("vec_id", "cell")
-        (
-            spark.read.parquet(corpus_path)
-            .join(assign, "vec_id")
-            .repartition(64, "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(bycell_dir)
-        )
-    if time.time() - t0 > 1.0:
-        out["ann10m_cold_build_sec"] = round(time.time() - t0, 4)
+    with _stopwatch(out, "ann10m_cold_build_sec"):
+        if not (os.path.exists(meta_path) and os.path.isdir(ivf_dir)):
+            # one-time at-rest index build (amortized across rounds, like
+            # any index-at-rest): same train config as the ann_big soak
+            corpus = spark.read.parquet(corpus_path)
+            sample = corpus.filter(F.col("vec_id") % 10 == 3)
+            cents = S.train_ivf_centroids(sample, n_centroids=64, iters=3)
+            idx = S.ivf_index(corpus, centroids=cents)
+            (
+                idx[1]
+                .select(
+                    "cell", "vec_id",
+                    F.col("_cu").cast("array<float>").alias("_cu"),
+                )
+                .repartition(64, "cell")
+                .write.mode("overwrite")
+                .partitionBy("cell")
+                .parquet(ivf_dir)
+            )
+            idx[1].unpersist()
+            books = S.train_pq_codebooks(
+                sample, m=16, n_codes=256, iters=3, kernel="column"
+            )
+            with open(meta_path, "w") as fh:
+                json.dump({"centroids": cents, "codebooks": books}, fh)
+        with open(meta_path) as fh:
+            meta = json.load(fh)
+        cents, books = meta["centroids"], meta["codebooks"]
+        # r14 at-rest layout (verdict item 4): codes carry their vector's
+        # IVF cell (2 extra bytes/row) and a cell-PARTITIONED copy of the
+        # raw corpus exists, so the PQ rerank fetch prunes to the
+        # candidates' own cells instead of scanning the whole corpus — the
+        # fetch that made the cold PQ serve slower than brute (0.74-0.81x
+        # in r13). An existing cell-less codes table is rebuilt once.
+        if (
+            os.path.isdir(codes_path)
+            and "cell" not in spark.read.parquet(codes_path).columns
+        ):
+            _sh.rmtree(codes_path)
+        bycell_dir = os.path.join(data_dir, "ann10m_cold_corpus_bycell")
+        if not os.path.isdir(codes_path):
+            assign = spark.read.parquet(ivf_dir).select("vec_id", "cell")
+            (
+                S.pq_encode(spark.read.parquet(corpus_path), books)
+                .join(assign, "vec_id")
+                .write.mode("overwrite")
+                .parquet(codes_path)
+            )
+        if not os.path.isdir(bycell_dir):
+            assign = spark.read.parquet(ivf_dir).select("vec_id", "cell")
+            (
+                spark.read.parquet(corpus_path)
+                .join(assign, "vec_id")
+                .repartition(64, "cell")
+                .write.mode("overwrite")
+                .partitionBy("cell")
+                .parquet(bycell_dir)
+            )
+    if out["ann10m_cold_build_sec"] <= 1.0:
+        del out["ann10m_cold_build_sec"]
 
     # the point query, materialized as a LITERAL before any eviction so
     # building it never re-warms the corpus inside a timed serve: the
     # same perturbed-row construction as the ann soaks, vec_id=17
     stride = rows10 // ANN_QUERIES
-    q1_rows = (
-        spark.read.parquet(corpus_path)
-        .filter(F.col("vec_id") % stride == 17)
-        .limit(1)
-        .selectExpr(
-            "vec_id AS query_id",
-            "transform(embedding, (x, d) -> x + cast(0.1 * "
-            "(shiftrightunsigned(xxhash64(vec_id, d + 31), 11) / 9007199254740992.0 - 0.5) AS float)) AS embedding",
-        )
-        .collect()
-    )
+    q1_rows = _ann_queries(
+        spark.read.parquet(corpus_path), stride, 17, 1
+    ).collect()
     q1 = spark.createDataFrame(q1_rows, "query_id long, embedding array<float>")
 
     # the probed-cell byte footprint, from the same probe rule the
@@ -2316,20 +2104,13 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     order = np.lexsort((np.arange(len(cents)), -sims))
     probed = sorted(int(c) for c in order[:8])
 
-    def _dir_sz(p):
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(p)
-            for f in fs
-        )
-
-    out["ann10m_cold_bytes_corpus"] = _dir_sz(corpus_path)
+    out["ann10m_cold_bytes_corpus"] = _dir_bytes(corpus_path)
     out["ann10m_cold_bytes_ivf_probed"] = sum(
-        _dir_sz(os.path.join(ivf_dir, f"cell={c}"))
+        _dir_bytes(os.path.join(ivf_dir, f"cell={c}"))
         for c in probed
         if os.path.isdir(os.path.join(ivf_dir, f"cell={c}"))
     )
-    out["ann10m_cold_bytes_codes"] = _dir_sz(codes_path)
+    out["ann10m_cold_bytes_codes"] = _dir_bytes(codes_path)
 
     def serve_brute():
         return S.brute_force_topk_matrix(
@@ -2364,19 +2145,16 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
         "pq_adc": serve_pq_adc,
         "pq": serve_pq,
     }
+    def _evict(_prev):
+        out["ann10m_cold_evict_files"] = _evict_pages(
+            corpus_path, ivf_dir, codes_path, bycell_dir
+        )
+
     results: dict[str, set] = {}
-    times: dict[str, list[float]] = {k: [] for k in paths}
-    for _trial in range(2):
-        for name, fn in paths.items():
-            out["ann10m_cold_evict_files"] = _evict_pages(
-                corpus_path, ivf_dir, codes_path, bycell_dir
-            )
-            t0 = time.time()
-            rows = fn().collect()
-            times[name].append(time.time() - t0)
-            results[name] = {r["vec_id"] for r in rows}
-    for name in paths:
-        out[f"ann10m_cold_{name}_q1_sec"] = round(min(times[name]), 4)
+    for name, fn in paths.items():
+        t = _min_of(lambda: fn().collect(), 2, before=_evict)
+        out[f"ann10m_cold_{name}_q1_sec"] = t.sec
+        results[name] = {r["vec_id"] for r in t.last}
     out["ann10m_cold_ivf_q1_speedup"] = round(
         out["ann10m_cold_brute_q1_sec"]
         / max(out["ann10m_cold_ivf_q1_sec"], 1e-9),
@@ -2412,7 +2190,7 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     )
     out["ann10m_cold_pq_cells_probed"] = len(probed_cells)
     out["ann10m_cold_bytes_pq_rerank"] = sum(
-        _dir_sz(os.path.join(bycell_dir, f"cell={c}"))
+        _dir_bytes(os.path.join(bycell_dir, f"cell={c}"))
         for c in probed_cells
         if os.path.isdir(os.path.join(bycell_dir, f"cell={c}"))
     )
@@ -2420,12 +2198,12 @@ def _run_ann_cold_soak(spark: SparkSession, data_dir: str) -> dict:
     # warm controls: the SAME serves, page-cache-hot (immediately after
     # the trials, no evict) — cold/warmctl is the regime ratio that
     # explains why r12's RAM-resident numbers could not show the lever
-    out["ann10m_cold_warmctl_brute_q1_sec"] = _best(
+    out["ann10m_cold_warmctl_brute_q1_sec"] = _min_of(
         lambda: serve_brute().collect(), 2
-    )
-    out["ann10m_cold_warmctl_ivf_q1_sec"] = _best(
+    ).sec
+    out["ann10m_cold_warmctl_ivf_q1_sec"] = _min_of(
         lambda: serve_ivf().collect(), 2
-    )
+    ).sec
 
     # regime self-classification (the drift-line discipline applied to
     # cold runs): posix_fadvise drops the GUEST page cache, but this
@@ -2493,8 +2271,8 @@ def _run_near_dedup_soak(spark: SparkSession, data_dir: str) -> dict:
     import tempfile
     import threading
 
-    from .pipeline import dedup as D
-    from .streaming import near_dedup_stream
+    from imcs_spark.pipeline import dedup as D
+    from imcs_spark.streaming import near_dedup_stream
 
     NB, NH, BANDS, TAU = 20, 16, 8, 0.5
     sig_cols = [f"mh_{k}" for k in range(NH)]
@@ -2503,7 +2281,7 @@ def _run_near_dedup_soak(spark: SparkSession, data_dir: str) -> dict:
     _ensure(spark, path, gen_docs_2m)
     out: dict[str, float] = {}
     spark.catalog.clearCache()
-    out["nd2m_floor_sec"], _ = _floor_probe(spark)
+    out["nd2m_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
     docs = spark.read.parquet(path).select("doc_id", "text").persist()
     out["nd2m_rows"] = docs.count()
 
@@ -2516,9 +2294,8 @@ def _run_near_dedup_soak(spark: SparkSession, data_dir: str) -> dict:
         # 20 ascending id-range chunk files with increasing mtimes —
         # arrival order equals id order, the equality twin's
         # precondition (see _stage_batches)
-        t0 = time.time()
-        _stage_batches(docs, src, NB, DOCS_2M // NB + 1)
-        out["nd2m_stage_sec"] = round(time.time() - t0, 4)
+        with _stopwatch(out, "nd2m_stage_sec"):
+            _stage_batches(docs, src, NB, DOCS_2M // NB + 1)
 
         # poll the side table while the stream runs: deltas are GC'd at
         # compaction, so sizes must be sampled live to record every
@@ -2532,11 +2309,7 @@ def _run_near_dedup_soak(spark: SparkSession, data_dir: str) -> dict:
                     for v in os.listdir(side):
                         p = os.path.join(side, v)
                         try:
-                            b = sum(
-                                os.path.getsize(os.path.join(r, f))
-                                for r, _d, fs in os.walk(p)
-                                for f in fs
-                            )
+                            b = _dir_bytes(p)
                         except OSError:
                             continue  # dir being GC'd mid-walk
                         sizes[v] = max(sizes.get(v, 0), b)
@@ -2550,13 +2323,12 @@ def _run_near_dedup_soak(spark: SparkSession, data_dir: str) -> dict:
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(src, "*"))
         )
-        t0 = time.time()
-        q = near_dedup_stream(
-            stream, target, num_hashes=NH, bands=BANDS,
-            sim_threshold=TAU, checkpoint=chk,
-        )
-        finished = q.awaitTermination(3600)
-        out["nd2m_total_sec"] = round(time.time() - t0, 4)
+        with _stopwatch(out, "nd2m_total_sec"):
+            q = near_dedup_stream(
+                stream, target, num_hashes=NH, bands=BANDS,
+                sim_threshold=TAU, checkpoint=chk,
+            )
+            finished = q.awaitTermination(3600)
         stop.set()
         poller.join(5)
         if not finished:
@@ -2653,7 +2425,7 @@ def _run_near_dedup_ttl_soak(spark: SparkSession) -> dict:
     import shutil
     import tempfile
 
-    from .streaming import _read_state, _versions, near_dedup_stream
+    from imcs_spark.streaming import _read_state, _versions, near_dedup_stream
 
     N, NB = NDTTL_ROWS, NDTTL_BATCHES
     step = N // NB
@@ -2663,7 +2435,7 @@ def _run_near_dedup_ttl_soak(spark: SparkSession) -> dict:
     NEAR_OFF, FAR_OFF = step + 3, 4 * step + 7
     EVICT, COMPACT = 2, 4
     out: dict[str, float] = {}
-    out["ndttl_floor_sec"], _ = _floor_probe(spark)
+    out["ndttl_floor_sec"] = _min_of(_floor_df(spark).collect, 5).sec
 
     # dup sources are always plain rows (offsets ≡ ±3/±7 mod 10 map a
     # dup id to a base id ≡ 0 mod 10), so text(dup) == text(source)
@@ -2693,7 +2465,7 @@ def _run_near_dedup_ttl_soak(spark: SparkSession) -> dict:
     src = os.path.join(shared, "incoming")
     _stage_batches(docs, src, NB, step)
 
-    def _run(evict_after):
+    def _run(evict_after, prefix):
         # try/finally around everything after mkdtemp: an exception
         # anywhere (stream failure, state read) must not leak the
         # ~100 MB of per-run kept/checkpoint/state temp data
@@ -2706,14 +2478,13 @@ def _run_near_dedup_ttl_soak(spark: SparkSession) -> dict:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(os.path.join(src, "*"))
             )
-            t0 = time.time()
-            q = near_dedup_stream(
-                stream, target, num_hashes=16, bands=8,
-                checkpoint=os.path.join(tmp, "chk"),
-                compact_every=COMPACT, evict_after=evict_after,
-            )
-            finished = q.awaitTermination(1800)
-            wall = round(time.time() - t0, 4)
+            with _stopwatch(out, prefix + "total_sec"):
+                q = near_dedup_stream(
+                    stream, target, num_hashes=16, bands=8,
+                    checkpoint=os.path.join(tmp, "chk"),
+                    compact_every=COMPACT, evict_after=evict_after,
+                )
+                finished = q.awaitTermination(1800)
             if not finished:
                 q.stop()
                 raise TimeoutError("ndttl stream timed out")
@@ -2726,22 +2497,15 @@ def _run_near_dedup_ttl_soak(spark: SparkSession) -> dict:
                 f"{side}/d{d}" for d in _versions(spark, side, "d") if d > vs[-1]
             ]
             cells, _sigs, _legacy = _read_state(spark, paths)
-            n_cells = cells.count()
-            state_bytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for p in paths
-                for r, _d, fs in os.walk(p)
-                for f in fs
-            )
-            return wall, kept, n_cells, state_bytes
+            out[prefix + "state_cells"] = cells.count()
+            out[prefix + "state_bytes"] = _dir_bytes(*paths)
+            return kept
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
     try:
-        out["ndttl_total_sec"], kept_ttl, out["ndttl_state_cells"], \
-            out["ndttl_state_bytes"] = _run(EVICT)
-        out["ndttl_nottl_total_sec"], kept_un, out["ndttl_nottl_state_cells"], \
-            out["ndttl_nottl_state_bytes"] = _run(None)
+        kept_ttl = _run(EVICT, "ndttl_")
+        kept_un = _run(None, "ndttl_nottl_")
         out["ndttl_kept"] = len(kept_ttl)
         out["ndttl_nottl_kept"] = len(kept_un)
         # monotonicity: evicting gating state can only KEEP more

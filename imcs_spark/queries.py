@@ -1507,8 +1507,9 @@ def win_group_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     posed = _events_posed(spark, sf_dir)
     # multi-agg form: ONE run_id derivation + one shared Window node
     # for both aggregates (chained single-agg calls re-derived run_id
-    # per call: 2 extra Window passes + 2 sorts — r13 plan diff in
-    # plans/r13/win_group_agg_*)
+    # per call: 2 extra Window passes + 2 sorts — r13 plan diff:
+    # plans/r13/win_group_agg_* at commit 998ab1e; tools/plan_dump.py
+    # regenerates such dumps)
     out = grouping.win_group_aggs(
         posed,
         {"wg_sum": ("sum", "value"), "wg_max": ("max", "value")},
@@ -1852,7 +1853,8 @@ def ema_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the Window nodes, so Catalyst planned FOUR sequential Window
     # passes over the same (user_id, pos) spec; built together they land
     # in one Project + ONE Window node (r13 — same expressions, same
-    # frame, bit-identical results; plan diff in plans/r13/ema_atr_*).
+    # frame, bit-identical results; plan diff: plans/r13/ema_atr_* at
+    # commit 998ab1e, regenerated by tools/plan_dump.py).
     cf = out.select(
         "*",
         F.first("value").over(w).alias("x0"),

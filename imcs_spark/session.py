@@ -98,8 +98,10 @@ def get_spark(
         # cpus-task stage — the official 32-core bench measured its
         # fixed-work shuffle floor +32% while the floor's claimed wins
         # (stretch-6M, LSH star) re-measured FLAT in an interleaved
-        # same-session A/B (tools/ab_floor.py: off/on 0.98-1.07x,
-        # min-of-3 on every workload the r13 conf targeted). Operators
+        # same-session A/B (off/on 0.98-1.07x, min-of-3 on every
+        # workload the r13 conf targeted; the probe script and its log
+        # are tools/ab_floor.py and plans/r14/ab_floor1.log at commit
+        # 4628efa). Operators
         # whose downstream narrow stages are compute-heavy restore
         # parallelism locally via dedup.spread-style guarded
         # repartitions instead of a session-wide tax (guide §1.2:

@@ -987,26 +987,6 @@ def near_dedup_stream(
 
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        # Optional phase timing to stderr (IMCS_ND_TIMING=1): the
-        # per-batch wall is fixed-cost-dominated at small batches and
-        # this is the only way to attribute it without a profiler.
-        import os as _os
-        import sys as _sys
-        import time as _time
-
-        _dbg = _os.environ.get("IMCS_ND_TIMING") in ("1", "2")
-        _tprev = _time.time()
-
-        def _mark(phase: str) -> None:
-            nonlocal _tprev
-            if _dbg:
-                now = _time.time()
-                print(
-                    f"[nd-timing] b{batch_id} {phase}: {now - _tprev:.3f}s",
-                    file=_sys.stderr,
-                )
-                _tprev = now
-
         # Persisted per-batch frames are released in the finally: an
         # exception mid-batch must not leak sigs/bb/prev cache blocks
         # into a long-lived stream's storage pool. (The trickle-path
@@ -1047,15 +1027,21 @@ def near_dedup_stream(
                 # batch's minhash materialization: the srow agg below is
                 # the batch's heaviest job and blocks only on a socket
                 # read, so a planning thread runs driver-side work in
-                # parallel (round 14, r13-verdict item 3 phase budget)
+                # parallel (round 14, r13-verdict item 3 phase budget).
+                # The thread does not propagate exceptions: a failed read
+                # is captured and re-raised after the join, like the
+                # append worker below.
                 _rs_out: dict = {}
 
                 def _rs():
-                    _rs_out["seen"] = _read_state(
-                        spark,
-                        [f"{side_path}/v{usable[-1]}"]
-                        + [f"{side_path}/d{d}" for d in deltas],
-                    )
+                    try:
+                        _rs_out["seen"] = _read_state(
+                            spark,
+                            [f"{side_path}/v{usable[-1]}"]
+                            + [f"{side_path}/d{d}" for d in deltas],
+                        )
+                    except BaseException as e:  # noqa: BLE001 - re-raised on join
+                        _rs_out["error"] = e
 
                 _rs_t = InheritableThread(target=_rs)
                 _rs_t.start()
@@ -1069,10 +1055,10 @@ def near_dedup_stream(
                     ).alias("idb"),
                     F.count_distinct("bucket").alias("nb"),
                 ).collect()[0]
-                _mark("minhash_srow")
                 _rs_t.join()
+                if "error" in _rs_out:
+                    raise _rs_out["error"]
                 seen = _rs_out["seen"]
-                _mark("state_read_plan")
             elif _snapshot_ok(spark, pre_path):
                 seen = _read_state(spark, [pre_path])
             elif _data_exists(spark, target_path):
@@ -1098,7 +1084,6 @@ def near_dedup_stream(
                     sort=True,
                 )
                 seen = _read_state(spark, [pre_path])
-                _mark("derive_pre_state")
             else:
                 # fresh target: persist an EMPTY pre snapshot before the
                 # append (same reasoning as append_stream — without it, a
@@ -1160,7 +1145,6 @@ def near_dedup_stream(
                         ).alias("idb"),
                         F.count_distinct("bucket").alias("nb"),
                     ).collect()[0]
-                    _mark("minhash_srow")
                 est_bytes = srow["n"] * 32 + (srow["idb"] or 0)
                 hint = F.broadcast if est_bytes <= (128 << 20) else (lambda d: d)
                 probe = cells_s
@@ -1223,7 +1207,6 @@ def near_dedup_stream(
                 else:
                     gated = prev
                 drop_prev = gated.select(id_col).distinct()
-                _mark("probe_built")
             else:
                 prev = None
                 collided = None
@@ -1233,7 +1216,7 @@ def near_dedup_stream(
             # 14, r13-verdict item 3): rule (b)'s `mins` and the state
             # delta's fresh cells were the SAME relation computed twice —
             # two groupBy-over-bb exchanges per batch, one on the append
-            # thread and one inside the state-write jobs (deep-timing
+            # thread and one inside the state-write jobs (phase
             # attribution: the fresh chain was 1.4-1.9 s of the 3.4-4.4 s
             # state_write wall). Compute batch_cells once, persist it,
             # and derive both consumers from it. For a non-collided cell
@@ -1317,7 +1300,6 @@ def near_dedup_stream(
             # without) — the extra count job contends with the append
             # job for the same cores; BlockManager already dedups the
             # computation between the two write threads.
-            _mark("append_launch")
 
             # post-batch state: earlier occupants win their cells; new
             # cells take this batch's min-id occupant. O(batch) path:
@@ -1350,14 +1332,6 @@ def near_dedup_stream(
                     fresh_cells.select("hub_id"), "hub_id", "left_semi"
                 ).repartition(nf).persist()
                 state_tmp.append(fresh_sigs)
-                if _os.environ.get("IMCS_ND_TIMING") == "2":
-                    # DEEP attribution mode (probe-only): force each
-                    # sub-materialization so the state_write wall
-                    # decomposes. Changes overlap behavior — never use
-                    # for recorded numbers, only attribution.
-                    prev.count(); _mark("deep:prev")
-                    fresh_cells.count(); _mark("deep:fresh")
-                    fresh_sigs.count(); _mark("deep:fresh_sigs")
                 if usable and len(deltas) + 1 < compact_every:
                     _write_state(
                         spark, fresh, fresh_sigs, f"{side_path}/d{batch_id}",
@@ -1396,14 +1370,11 @@ def near_dedup_stream(
                     )
                     keep = {batch_id} | ({usable[-1]} if usable else set())
                     base = usable[-1] if usable else None
-            _mark("state_write")
             app_t.join()
             if app_errs:
                 raise app_errs[0]
-            _mark("append_join")
             _gc_versions(spark, side_path, versions, keep, batch_id)
             _gc_deltas(spark, side_path, base, batch_id)
-            _mark("gc")
         finally:
             if app_t is not None and app_t.is_alive():
                 # an exception on the state-write path must not yank

@@ -1,4 +1,5 @@
-"""bench_scale: deterministic generation + the run_scale contract.
+"""bench_scale.py (beside bench.py): deterministic generation, the
+run_scale contract and the bench tail lines.
 
 Runs the module at toy sizes (monkeypatched constants) so the test
 exercises generation, caching, and every timed query without paying
@@ -9,7 +10,20 @@ import os
 
 import pytest
 
-import imcs_spark.bench_scale as bs
+import bench_scale as bs
+
+
+def _bench_module():
+    """bench.py loaded as a module (it is a script, not a package)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "benchmod",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"),
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    return m
 
 
 @pytest.fixture()
@@ -186,14 +200,7 @@ def test_build_drift_line_normalizes_against_prev_round(tmp_path):
     the headline, normalized by the geomean floor-probe ratio — a row
     that moved WITH the floors must show norm ~1.0 while raw shows the
     drift."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "benchmod",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"),
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = _bench_module()
 
     # synthetic prev round in driver format: floors 2x today's, gate
     # rows 2x today's — i.e. pure environment drift, zero code change
@@ -233,3 +240,56 @@ def test_build_drift_line_normalizes_against_prev_round(tmp_path):
     empty = tmp_path / "empty"
     empty.mkdir()
     assert m.build_drift_line({"value": 1.0}, scale, str(empty)) is None
+
+
+def test_summary_line_carries_queries_within_the_tail_budget():
+    """The bench capture parses only the last stdout line, so it must hold the
+    headline AND the per-query table, and together with the gate line
+    printed before it fit the 1990-byte tail budget; when 3 decimals
+    would overflow, entries >= 0.1 s drop to 2."""
+    import __spark_entry__
+
+    m = _bench_module()
+    names = list(__spark_entry__.queries())
+    assert len(names) == 50
+    # an r14-sized gate line: 853 bytes
+    gate_line = json.dumps({"gate": {}, "pad": ""}, separators=(",", ":"))
+    gate_line = gate_line.replace('""', '"' + "x" * (853 - len(gate_line)) + '"')
+    assert len(gate_line) == 853
+    payload = {
+        "metric": "imcs_spark_headline_queries_total", "value": 10.1572,
+        "unit": "sec", "sf": 0.1,
+    }
+    for secs, decimals in ((1.23456, 3), (12.3456, 2)):
+        timings = {n: secs for n in names}
+        line = m.summary_line(payload, timings, len(gate_line) + 1)
+        d = json.loads(line)
+        assert {"metric", "value", "unit", "sf", "queries"} <= set(d)
+        assert d["value"] == 10.1572 and d["sf"] == 0.1
+        assert d["queries"] == {n: round(secs, decimals) for n in names}
+        assert len(gate_line) + 1 + len(line) + 1 <= m.TAIL_BUDGET == 1990
+    # with no gate line (SPARK_GRAFT_SCALE=0) the 3 decimals always fit
+    d = json.loads(m.summary_line(payload, {n: 12.3456 for n in names}))
+    assert d["queries"][names[0]] == 12.346
+
+
+def test_root_cause_picks_the_caused_by_line():
+    """A py4j message: the wrapper line, a stack, then the JVM cause —
+    the cause line is the one to record, not the last frame that
+    happens to contain "Error"."""
+    msg = (
+        "An error occurred while calling o123.collectToPython.\n"
+        ": org.apache.spark.SparkException: Job aborted due to stage "
+        "failure: Task 3 in stage 7.0 failed 1 times\n"
+        "\tat org.apache.spark.SparkException$.internalError(SparkException.scala:92)\n"
+        "Caused by: java.lang.OutOfMemoryError: Java heap space\n"
+        "\tat java.base/java.util.Arrays.copyOf(Arrays.java:3537)\n"
+        "\tat org.apache.spark.sql.errors.QueryExecutionErrors$"
+        ".failedToExecuteQueryError(QueryExecutionErrors.scala:123)\n"
+    )
+    assert bs.root_cause(msg) == "Caused by: java.lang.OutOfMemoryError: Java heap space"
+    # no JVM cause: the first non-empty line
+    assert bs.root_cause("\n  ValueError: bad input\nmore detail") == (
+        "ValueError: bad input"
+    )
+    assert bs.root_cause("") == ""

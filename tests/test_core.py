@@ -394,3 +394,61 @@ def test_readme_quickstart_runs(spark, tmp_path):
         assert set(got) == {"IBM", "MSFT"} and all(v > 0 for v in got.values())
     spark.catalog.dropTempView("quote")
     eng.drop("quote")
+
+
+def test_engine_reads_only_deployment_env_settings():
+    """The engine package reads no environment knobs beyond its
+    deployment settings and the JPEG input-size cap: a behaviour or
+    timing switch read from the environment is invisible at the call
+    site and untested by default. Scans every os.environ / getenv read
+    under imcs_spark/ (a read whose name is not a string literal counts
+    as a knob too)."""
+    import ast
+    import os
+
+    allowed = {
+        ("session.py", "SPARK_GRAFT_CPUS"),
+        ("session.py", "SPARK_GRAFT_ON_CLUSTER"),
+        ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
+        ("pipeline/jpeg.py", "IMCS_SPARK_JPEG_MAX_BLOCKS"),
+        ("pipeline/multimodal.py", "IMCS_SPARK_JPEG_MAX_BLOCKS"),
+    }
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "imcs_spark")
+
+    def literal(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return "<dynamic>"
+
+    found = set()
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            tree = ast.parse(open(path).read(), path)
+            parents = {
+                child: node
+                for node in ast.walk(tree)
+                for child in ast.iter_child_nodes(node)
+            }
+            for node in ast.walk(tree):
+                name = getattr(node, "attr", getattr(node, "id", None))
+                if name not in ("environ", "getenv"):
+                    continue
+                up = parents.get(node)
+                if name == "getenv" or (
+                    isinstance(up, ast.Attribute) and up.attr == "get"
+                ):
+                    call = up if name == "getenv" else parents.get(up)
+                    key = literal(call.args[0]) if call.args else "<dynamic>"
+                elif isinstance(up, ast.Subscript):
+                    key = literal(up.slice)
+                elif isinstance(up, ast.Compare):
+                    key = literal(up.left)
+                else:
+                    key = "<dynamic>"
+                found.add((rel, key))
+    assert found, "the scan found no environment reads at all"
+    assert found <= allowed, sorted(found - allowed)

@@ -1558,6 +1558,56 @@ def test_near_dedup_crash_replay_matrix(spark, monkeypatch):
             shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_near_dedup_state_read_error_reaches_the_stream(spark, monkeypatch):
+    """A failed state read in a non-first batch surfaces as the stream's
+    own exception: the read runs on a planning thread, which must hand
+    its error back across the join instead of leaving the batch to die
+    on a missing result."""
+    import imcs_spark.streaming as ST
+    from imcs_spark.streaming import near_dedup_stream
+
+    real_read = ST._read_state
+
+    def failing_read(spark_, paths):
+        # batch 1 is the first batch that reads committed state (v0)
+        if any(p.endswith("/v0") for p in paths):
+            raise RuntimeError("injected state read failure")
+        return real_read(spark_, paths)
+
+    monkeypatch.setattr(ST, "_read_state", failing_read)
+    tmp = tempfile.mkdtemp(prefix="imcs_readerr_")
+    try:
+        src = os.path.join(tmp, "incoming")
+        os.makedirs(src)
+        t0 = 1_700_000_000
+        for b in range(2):
+            p = os.path.join(src, f"b{b:03d}.parquet")
+            spark.createDataFrame(
+                [(b, " ".join(f"w{b}_{j}" for j in range(12)))],
+                "doc_id long, text string",
+            ).coalesce(1).write.parquet(p + "_stage")
+            part = [
+                f for f in os.listdir(p + "_stage") if f.startswith("part-")
+            ][0]
+            os.replace(os.path.join(p + "_stage", part), p)
+            shutil.rmtree(p + "_stage")
+            os.utime(p, (t0 + 10 * b, t0 + 10 * b))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = near_dedup_stream(
+            stream, os.path.join(tmp, "kept"),
+            checkpoint=os.path.join(tmp, "chk"), bands=16,
+        )
+        with pytest.raises(Exception) as exc:
+            q.awaitTermination(240)
+        assert "injected state read failure" in str(exc.value)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_near_dedup_random_arrival_greedy_model(spark):
     """Randomized ARRIVAL-ORDER semantics: every other stream-vs-batch
     equality test feeds batches in id order (where the stream's kept
