@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from imcs_spark.queries import QUERIES, ORACLES, flagship  # noqa: E402
+from registry.queries import QUERIES, ORACLES, flagship  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:

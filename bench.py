@@ -110,7 +110,7 @@ def main():
 
     # UNTIMED warm-up pass first: several queries share build-once
     # artifacts (cached tables, ANN indexes, verified pair lists —
-    # imcs_spark/queries.py:_artifact); without this pass the artifact
+    # registry/queries.py:_artifact); without this pass the artifact
     # build is billed to whichever query happens to touch it first, so
     # a registry reorder shows up as a phantom per-query regression.
     # One full pass builds every artifact and compiles each query's

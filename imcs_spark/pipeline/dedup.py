@@ -26,7 +26,7 @@ materializing the result, reclaim storage with
 spark.catalog.clearCache() (or unpersist the returned frame's
 dependencies); long-lived sessions running dedup over many corpora
 should do this between corpora. The query registry's artifact model
-(queries.py:_artifact) relies on exactly this retention.
+(registry/queries.py:_artifact) relies on exactly this retention.
 """
 
 from __future__ import annotations

@@ -12,10 +12,10 @@ interleaved DC and non-interleaved AC data-unit ordering.
 ``progressive=True``) SOF2 multi-scan streams used to build test
 fixtures (the same role `encode_png` plays for the PNG path); the
 progressive/baseline pair must decode pixel-identically, which pins
-the two entropy coders against each other. Lossless (SOF3, any
-precision 2-16) and 12-bit extended-sequential (SOF1) streams decode
-too; arithmetic-coded and hierarchical streams raise
-NotImplementedError with the marker that triggered it.
+the two entropy coders against each other. Other frame types —
+extended-sequential (SOF1), lossless (SOF3), arithmetic-coded and
+hierarchical — raise NotImplementedError with the marker that
+triggered it.
 
 The decoder is table-driven — quantization and Huffman tables are read
 from the stream's DQT/DHT segments, never assumed — so round-trip
@@ -29,7 +29,6 @@ entropy-coded decode end-to-end instead of a deterministic fake.
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
@@ -464,136 +463,6 @@ def encode_jpeg(
 
 
 
-# fixed DC-class table for the lossless encoder: categories 0-7 at
-# length 4, 8-16 at length 5 (Kraft sum 0.78 — valid, no all-ones
-# max-length code). Not entropy-optimal; chosen for correctness and
-# symmetry with the decoder, which rebuilds it from the DHT bytes.
-_LL_BITS = [0, 0, 0, 8, 9] + [0] * 11
-_LL_VALUES = list(range(17))
-
-
-def _ll_predict(ra: int, rb: int, rc: int, selector: int) -> int:
-    """T.81 H.1.2.1 neighbor predictors 1-7 — ONE implementation
-    shared by encoder and decoder (round-trip correctness depends on
-    the two sides computing bit-identical predictions, so the dispatch
-    must never fork)."""
-    if selector == 1:
-        return ra
-    if selector == 2:
-        return rb
-    if selector == 3:
-        return rc
-    if selector == 4:
-        return ra + rb - rc
-    if selector == 5:
-        return ra + ((rb - rc) >> 1)
-    if selector == 6:
-        return rb + ((ra - rc) >> 1)
-    return (ra + rb) >> 1
-
-
-def encode_jpeg_lossless(
-    pixels: np.ndarray,
-    predictor: int = 1,
-    point_transform: int = 0,
-    precision: int = 8,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode a lossless (SOF3, T.81 Annex H) JPEG: (H, W) grayscale
-    or (H, W, 3) direct-RGB samples, any precision 2-16 (values must
-    fit the declared precision — pass an int array for P > 8).
-    Round-trips bit-exactly through decode_jpeg for point_transform=0
-    and P=8; with Pt > 0 the decoder reconstructs (sample >> Pt) << Pt,
-    and deep precisions are reduced to uint8 on decode (>> (P-8)).
-    `restart_interval` (in samples-per-component MCUs) exercises the
-    restart prediction reset (H.2.1: prediction returns to the default
-    after every RST)."""
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"lossless predictor {predictor} out of range 1-7")
-    if not 2 <= precision <= 16:
-        raise ValueError(f"lossless precision {precision} out of 2-16")
-    if not 0 <= point_transform < precision:
-        raise ValueError("point transform must be in [0, precision)")
-    arr = np.asarray(pixels)
-    if arr.ndim == 2:
-        comps = [arr]
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        comps = [arr[:, :, i] for i in range(3)]
-    else:
-        raise ValueError("pixels must be (H, W) or (H, W, 3)")
-    h, w = comps[0].shape
-    if h == 0 or w == 0:
-        raise ValueError("cannot encode an empty image")
-    maxv = (1 << precision) - 1
-    samples = []
-    for pl in comps:
-        a = pl.astype(np.int64)
-        if a.min() < 0 or a.max() > maxv:
-            raise ValueError(
-                f"sample out of range for {precision}-bit precision"
-            )
-        samples.append(a >> point_transform)
-    pt = point_transform
-    ncomp = len(samples)
-    codes = _canonical_codes(_LL_BITS, _LL_VALUES)
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xC4, bytes([0x00] + _LL_BITS + _LL_VALUES))
-    sof = bytearray(struct.pack(">BHHB", precision, h, w, ncomp))
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += _seg(0xC3, bytes(sof))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytearray([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    out += _seg(0xDA, bytes(sos))
-    default = 1 << (precision - pt - 1)
-    bw = _BitWriter()
-    reset = [True] * ncomp
-    mcu = 0
-    rst = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                out += bw.flush()
-                out += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
-                bw = _BitWriter()
-                reset = [True] * ncomp
-            mcu += 1
-            for ci in range(ncomp):
-                s = samples[ci]
-                if reset[ci]:
-                    px = default
-                    reset[ci] = False
-                elif y == 0:
-                    px = int(s[0, x - 1])
-                elif x == 0:
-                    px = int(s[y - 1, 0])
-                else:
-                    px = _ll_predict(
-                        int(s[y, x - 1]), int(s[y - 1, x]),
-                        int(s[y - 1, x - 1]), predictor,
-                    )
-                diff = (int(s[y, x]) - px) & 0xFFFF
-                if diff >= 32768:
-                    diff -= 65536
-                if diff == -32768:  # transmitted as the SSSS=16 special
-                    code, ln = codes[16]
-                    bw.write(code, ln)
-                else:
-                    ssss, amp = _magnitude(diff)
-                    code, ln = codes[ssss]
-                    bw.write(code, ln)
-                    if ssss:
-                        bw.write(amp, ssss)
-    out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 def _seg(marker: int, payload: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 
@@ -766,24 +635,20 @@ def _extend(v: int, ssss: int) -> int:
     return v if v >= (1 << (ssss - 1)) else v - (1 << ssss) + 1
 
 
-def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
+def decode_jpeg(content: bytes, max_blocks: int = 1 << 24) -> np.ndarray:
     """Decode a baseline sequential OR progressive (SOF2) JPEG to
     uint8 pixels: (H, W) for grayscale streams, (H, W, 3) RGB
     otherwise. Supports component sampling factors in {1, 2}, restart
     intervals, and the full progressive scan repertoire (spectral
     selection, successive approximation, DC/AC refinement scans, EOB
-    runs, interleaved DC / non-interleaved AC ordering), plus
-    lossless (SOF3, precision 2-16, reduced to uint8 on output) and
-    12-bit extended-sequential (SOF1) frames. Arithmetic-coded and
-    hierarchical streams raise NotImplementedError naming the
-    unsupported marker.
+    runs, interleaved DC / non-interleaved AC ordering). Other frame
+    types (extended-sequential, lossless, arithmetic-coded,
+    hierarchical) raise NotImplementedError naming the unsupported
+    marker.
 
     ``max_blocks`` caps the declared coefficient-block count (see the
-    SOF guard below); None reads IMCS_SPARK_JPEG_MAX_BLOCKS from this
-    process's environment. Distributed callers must resolve the value
-    DRIVER-side and pass it through (executor Python workers do not
-    see env vars set on the driver after launch) — extract_features
-    does this."""
+    SOF guard below). The default, 2^24 blocks, is ~1 GB of
+    coefficient store: a ~268-megapixel frame."""
     d = bytes(content)
     if d[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG stream (missing SOI)")
@@ -793,7 +658,6 @@ def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
     frame = None
     restart_interval = 0
     progressive = False
-    lossless = False
     stores: dict[int, np.ndarray] = {}  # component id -> (nblocks, 64) zigzag int32
     geom = None  # (hmax, vmax, mcux, mcuy)
     n_scans = 0
@@ -822,32 +686,18 @@ def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
         if pos + seglen > len(d):
             raise ValueError("truncated JPEG stream (segment exceeds data)")
         payload = d[pos + 2 : pos + seglen]
-        if marker in (0xC6, 0xCA, 0xCE):
+        if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 "non-baseline JPEG frame marker 0xFF%02X not supported" % marker
             )
-        if marker in (0xC5, 0xC7, 0xC9, 0xCB, 0xCD, 0xCF):
-            raise NotImplementedError(
-                "non-baseline JPEG frame marker 0xFF%02X not supported" % marker
-            )
-        extended = marker == 0xC1
         if marker == 0xC2:
             progressive = True
             marker = 0xC0  # parse the SOF payload identically below
-        if marker == 0xC3:
-            lossless = True
-            marker = 0xC0
-        if marker in (0xC0, 0xC1):  # baseline / extended sequential SOF
+        if marker == 0xC0:  # baseline SOF (and SOF2, rewritten above)
             if len(payload) < 6:
                 raise ValueError("truncated JPEG SOF segment")
             precision, h, w, ncomp = struct.unpack(">BHHB", payload[:6])
-            if lossless:
-                # T.81 Annex H: any precision 2-16 (predictive, no DCT)
-                if not 2 <= precision <= 16:
-                    raise ValueError(f"lossless precision {precision} out of 2-16")
-            elif precision == 12 and extended:
-                pass  # 12-bit extended sequential (SOF1): DCT path below
-            elif precision != 8:
+            if precision != 8:
                 raise NotImplementedError(
                     f"{precision}-bit JPEG not supported for this frame type"
                 )
@@ -862,42 +712,13 @@ def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
             for ci in range(ncomp):
                 cid, hv, tq = payload[6 + 3 * ci : 9 + 3 * ci]
                 sh, sv = hv >> 4, hv & 0xF
-                if lossless and (sh != 1 or sv != 1):
-                    raise NotImplementedError(
-                        "subsampled lossless JPEG not supported (1x1 only)"
-                    )
                 if sh not in (1, 2) or sv not in (1, 2):
                     raise NotImplementedError(
                         f"sampling factor {sh}x{sv} not supported"
                         " (factors must be 1 or 2)"
                     )
                 comps.append({"id": cid, "h": sh, "v": sv, "tq": tq})
-            frame = {"h": h, "w": w, "comps": comps, "precision": precision}
-            if lossless:
-                # same two-tier allocation guard as the DCT path, in
-                # sample units: >= 1 bit per sample for any decodable
-                # stream, plus the absolute pixel ceiling
-                if h * w * ncomp > 8 * len(d):
-                    raise ValueError(
-                        f"lossless JPEG declares {h * w * ncomp} samples in"
-                        f" a {len(d)}-byte stream — corrupt or truncated SOF"
-                    )
-                if max_blocks is None:
-                    max_blocks = int(
-                        os.environ.get("IMCS_SPARK_JPEG_MAX_BLOCKS", str(1 << 24))
-                    )
-                # TOTAL samples across components, strictly compared —
-                # the DCT guard sums blocks over all components too; a
-                # per-plane-only cap would let a 3-component SOF3 at
-                # the limit allocate 3x the intended store
-                if h * w * ncomp > max_blocks * 64:
-                    raise ValueError(
-                        f"lossless JPEG declares {h * w * ncomp} samples (> cap"
-                        f" {max_blocks * 64}); raise IMCS_SPARK_JPEG_MAX_BLOCKS"
-                        " if this is intentional"
-                    )
-                pos += seglen
-                continue
+            frame = {"h": h, "w": w, "comps": comps}
             hmax = max(c["h"] for c in comps)
             vmax = max(c["v"] for c in comps)
             geom = (hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax)))
@@ -921,17 +742,13 @@ def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
             # 64 blocks per input byte at 256 B of int32 store each
             # (16 KB allocated per stream byte). 2^24 blocks = ~1 GB of
             # coefficient store = a ~268-megapixel frame, far beyond
-            # any legitimate corpus image; env-overridable for callers
-            # that truly process larger frames.
-            if max_blocks is None:
-                max_blocks = int(
-                    os.environ.get("IMCS_SPARK_JPEG_MAX_BLOCKS", str(1 << 24))
-                )
+            # any legitimate corpus image; callers that truly process
+            # larger frames pass a larger max_blocks.
             if n_blocks > max_blocks:
                 raise ValueError(
                     f"JPEG frame declares {n_blocks} coefficient blocks"
-                    f" (> cap {max_blocks}); raise"
-                    " IMCS_SPARK_JPEG_MAX_BLOCKS if this is intentional"
+                    f" (> cap {max_blocks}); pass a larger max_blocks"
+                    " if this is intentional"
                 )
             if progressive:
                 for c in comps:
@@ -942,7 +759,7 @@ def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
             i = 0
             while i < len(payload):
                 prec, tid = payload[i] >> 4, payload[i] & 0xF
-                if prec:  # Pq=1: 16-bit entries (12-bit frames use these)
+                if prec:  # Pq=1: 16-bit entries
                     if i + 129 > len(payload):
                         raise ValueError("truncated 16-bit DQT segment")
                     tab = np.frombuffer(
@@ -976,20 +793,6 @@ def decode_jpeg(content: bytes, max_blocks: int | None = None) -> np.ndarray:
                 cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
                 comp = next(c for c in frame["comps"] if c["id"] == cs)
                 scan_comps.append((comp, tt >> 4, tt & 0xF))
-            if lossless:
-                # T.81 Annex H scan header reuse: Ss = predictor
-                # selector, Al = point transform
-                sel = payload[1 + 2 * ns]
-                pt = payload[3 + 2 * ns] & 0xF
-                if ns != len(frame["comps"]):
-                    raise NotImplementedError(
-                        "multi-scan lossless JPEG not supported — one"
-                        " interleaved scan only"
-                    )
-                return _decode_lossless_scan(
-                    d, pos + seglen, frame, scan_comps, huff,
-                    restart_interval, sel, pt,
-                )
             if progressive:
                 ss, se = payload[1 + 2 * ns], payload[2 + 2 * ns]
                 ahal = payload[3 + 2 * ns]
@@ -1079,82 +882,13 @@ def _decode_scan(d, pos, frame, scan_comps, qt, huff, restart_interval):
     )
 
 
-def _decode_lossless_scan(
-    d, pos, frame, scan_comps, huff, restart_interval, predictor, pt
-):
-    """Lossless JPEG (SOF3, T.81 Annex H): Huffman-coded prediction
-    differences, no DCT and no quantization. Per sample: a DC-class
-    Huffman code gives the difference's magnitude category SSSS
-    (16 encodes the fixed difference 32768 with no extra bits), the
-    appended bits give the value, and the reconstruction is
-    (prediction + diff) mod 2^16. Prediction (H.1.2.1): the selected
-    one of 7 neighbor functions over Ra (left), Rb (above), Rc
-    (above-left); the first sample of the scan — and the first sample
-    of each component after a restart — predicts the default
-    2^(P-Pt-1); the rest of the first line predicts from Ra, the first
-    column from Rb. Decoded samples are scaled by the point transform
-    (<< Pt) and the plane is reduced to uint8 (>> (P-8) for deep
-    precisions). Three-component frames are returned as direct RGB —
-    lossless JPEG carries component values verbatim (no YCbCr
-    convention, per DNG/medical practice)."""
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"lossless predictor {predictor} out of range 1-7")
-    h, w, P = frame["h"], frame["w"], frame["precision"]
-    for _, td, _ in scan_comps:
-        if (0, td) not in huff:
-            raise ValueError(f"missing Huffman table (class, id)=(0, {td})")
-    planes = [np.zeros((h, w), dtype=np.int64) for _ in scan_comps]
-    br = _BitReader(d, pos)
-    default = 1 << (P - pt - 1)
-    reset = [True] * len(scan_comps)
-    mcu = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.restart()
-                reset = [True] * len(scan_comps)
-            mcu += 1
-            for ci, (_, td, _) in enumerate(scan_comps):
-                ssss = br.huffman(huff[(0, td)])
-                if ssss == 16:
-                    diff = 32768
-                elif ssss > 16:
-                    raise ValueError("lossless SSSS category > 16")
-                else:
-                    diff = _extend(br.bits(ssss), ssss)
-                pl = planes[ci]
-                if reset[ci]:
-                    px = default
-                    reset[ci] = False
-                elif y == 0:
-                    px = int(pl[0, x - 1])
-                elif x == 0:
-                    px = int(pl[y - 1, 0])
-                else:
-                    px = _ll_predict(
-                        int(pl[y, x - 1]), int(pl[y - 1, x]),
-                        int(pl[y - 1, x - 1]), predictor,
-                    )
-                pl[y, x] = (px + diff) & 0xFFFF
-    out = [pl << pt for pl in planes]
-    if P > 8:
-        out = [pl >> (P - 8) for pl in out]
-    elif P < 8:
-        out = [pl << (8 - P) for pl in out]
-    if len(out) == 1:
-        return np.clip(out[0], 0, 255).astype(np.uint8)
-    return np.clip(np.stack(out, axis=-1), 0, 255).astype(np.uint8)
-
-
 def _reconstruct(frame, comp_stores, qt, geom):
     """Dequantize + IDCT + color-convert the per-component zigzag
     coefficient arrays (shared by the baseline one-shot path and the
-    progressive multi-scan accumulator). Precision-aware (T.81 A.3.1:
-    level shift is 2^(P-1)): 12-bit extended-sequential frames decode
-    at native range and scale to uint8 by >> (P-8)."""
+    progressive multi-scan accumulator); 8-bit samples, level shift 128
+    (T.81 A.3.1)."""
     h, w = frame["h"], frame["w"]
-    P = frame.get("precision", 8)
-    level, maxv = float(1 << (P - 1)), float((1 << P) - 1)
+    level = 128.0
     hmax, vmax, mcux, mcuy = geom
     planes = []
     for comp, zzstore in comp_stores:
@@ -1177,17 +911,14 @@ def _reconstruct(frame, comp_stores, qt, geom):
         planes.append(plane[:h, :w])
 
     if len(planes) == 1:
-        out = np.clip(np.round(planes[0]), 0, maxv).astype(np.int64)
+        out = planes[0]
     else:
         y, cb, cr = planes[0], planes[1] - level, planes[2] - level
         r = y + 1.402 * cr
         g = y - 0.344136 * cb - 0.714136 * cr
         b = y + 1.772 * cb
-        rgb = np.stack([r, g, b], axis=-1)
-        out = np.clip(np.round(rgb), 0, maxv).astype(np.int64)
-    if P > 8:
-        out >>= P - 8
-    return out.astype(np.uint8)
+        out = np.stack([r, g, b], axis=-1)
+    return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
 
 def _scan_units(frame, scan_comps, geom, restart_interval):

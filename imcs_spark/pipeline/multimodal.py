@@ -18,7 +18,6 @@ mapInPandas signatures, partition sizing).
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -324,9 +323,7 @@ def audio_features(samples: np.ndarray, sample_rate: int) -> np.ndarray:
     return np.asarray(head + bands, dtype=np.float32)
 
 
-def real_decode(
-    content: bytes, mime: str, jpeg_max_blocks: int | None = None
-) -> np.ndarray:
+def real_decode(content: bytes, mime: str) -> np.ndarray:
     """Real decode + featurize for the formats decodable with numpy +
     the standard library: binary PPM/PGM pixels, 8-bit PNG, baseline
     JPEG (pipeline/jpeg.py), PCM WAV samples, and mp4 CONTAINERS
@@ -345,7 +342,7 @@ def real_decode(
     if head[:2] == b"\xff\xd8" or mime == "image/jpeg":
         from .jpeg import decode_jpeg
 
-        return image_features(decode_jpeg(bytes(content), jpeg_max_blocks))
+        return image_features(decode_jpeg(bytes(content)))
     if head[:4] == b"RIFF" or mime == "audio/x-wav":
         return audio_features(*decode_wav(bytes(content)))
     if head[4:8] == b"ftyp" or mime == "video/mp4":
@@ -386,13 +383,6 @@ def extract_features(
     rows are large — size partitions by bytes (maxPartitionBytes), not
     row count, before calling this."""
     out_schema = StructType(df.schema.fields + [_FEATURES_FIELD])
-    # resolve guard overrides DRIVER-side at plan-build time: the gen
-    # closure runs in executor Python workers, which never see env vars
-    # set on the driver after launch — the captured value ships with
-    # the serialized closure instead
-    jpeg_max_blocks = int(
-        os.environ.get("IMCS_SPARK_JPEG_MAX_BLOCKS", str(1 << 24))
-    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -400,7 +390,7 @@ def extract_features(
             mimes = pdf["mime"] if "mime" in pdf else [None] * len(pdf)
             for content, mid, mime in zip(pdf["content"], pdf["media_id"], mimes):
                 if use_real_decoder:
-                    arr = real_decode(content, mime or "", jpeg_max_blocks)
+                    arr = real_decode(content, mime or "")
                 else:
                     arr = _fake_decode(content, int(mid))
                 feats.append(arr.tolist())
@@ -409,12 +399,6 @@ def extract_features(
             yield pdf
 
     return df.mapInPandas(gen, schema=out_schema)
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize contract: metadata transform is real; pixel work is
-    in the (stubbed) decode path. Keeps schema stable for pipelines."""
-    return df.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))
 
 
 def sample_frames(
@@ -455,51 +439,3 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
             F.col("doc_id") % 3 != 0, ((F.col("doc_id") % 5) + 1) * 1000
         ).cast("long").alias("duration_ms"),
     )
-
-
-def fake_media_table(spark, n: int = 100, decodable: bool = False) -> DataFrame:
-    """Deterministic synthetic media table for tests. With
-    decodable=True every kind carries REAL decodable content: image
-    rows binary PPM gradients, audio rows PCM WAV sine tones, video
-    rows spec-conformant mp4 containers (pipeline/mp4.py) with
-    deterministic sample payloads — so real_decode runs end-to-end for
-    all three modalities."""
-    from .mp4 import encode_mp4
-
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        if decodable and kind == "image":
-            px = np.add.outer(
-                np.arange(48, dtype=np.uint16) * 2, np.arange(64, dtype=np.uint16)
-            ) % 256
-            pixels = np.stack([px, (px + i) % 256, (px * 2 + i) % 256], axis=2)
-            content = encode_ppm(pixels.astype(np.uint8))
-            mime = "image/x-portable-pixmap"
-        elif decodable and kind == "audio":
-            t = np.arange(2400) / 8000.0
-            content = encode_wav(0.5 * np.sin(2 * np.pi * (200 + 50 * i) * t))
-            mime = "audio/x-wav"
-        elif decodable and kind == "video":
-            payloads = [
-                bytes(((i + s + j) % 256) for j in range((i + s) % 40 + 10))
-                for s in range(i % 6 + 2)
-            ]
-            content = encode_mp4(payloads, chunk_split=1 if len(payloads) > 2 else None)
-            mime = "video/mp4"
-        else:
-            content = bytes([(i * 7 + j) % 256 for j in range(32 + (i % 5) * 16)])
-            mime = {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind]
-        rows.append(
-            (
-                i,
-                kind,
-                content,
-                mime,
-                64 if kind == "image" else None,
-                48 if kind == "image" else None,
-                3000 if kind != "image" else None,
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

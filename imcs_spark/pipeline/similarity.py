@@ -22,8 +22,9 @@ Each ANN stage — IVF assignment and serving, PQ encoding and serving —
 has ONE kernel: numpy per Arrow batch (mapInPandas), with the bounded
 query batch collected to the driver. IVF and PQ training additionally
 have an ORACLE-GRADE sequential kernel (fixed-order left folds) that
-DuckDB recomputes bit-identically (oracle_ivf.py / oracle_pq.py), so
-the ann_recall driver legs are true cross-engine checks.
+DuckDB recomputes bit-identically (registry/oracle_ivf.py and
+registry/oracle_pq.py), so the ann_recall driver legs are true
+cross-engine checks.
 """
 
 from __future__ import annotations
@@ -1401,26 +1402,27 @@ def pq_topk(
         .withColumn("_qu", _unit("_qv"))
         .drop("_qv")
     )
+    if prune_cells:
+        # restrict the exact-vector fetch to the candidates' OWN cells:
+        # a literal IN on the rerank table's partition column, so a
+        # cell-partitioned at-rest corpus scans only the probed cells'
+        # files instead of all of them. The candidates are collected
+        # once (bounded: n_queries * n_cand rows), and both the cell
+        # list and the fetch join's broadcast side come from those
+        # rows — one ADC scan, and nothing left cached. Candidate ids
+        # cannot escape the filter: each id's stamped cell IS the cell
+        # its vector lives in, so the fetch is exact.
+        top = top.select(query_id_col, id_col, "cell")
+        rows = top.collect()
+        rerank = rerank.filter(
+            F.col("cell").isin(sorted({r["cell"] for r in rows}))
+        )
+        top = encoded.sparkSession.createDataFrame(rows, top.schema)
     top = top.join(F.broadcast(qu), query_id_col)
     # the candidate set is query-batch-bounded (n_queries * k * factor)
     # while `rerank` is the corpus: BROADCAST the candidates so the
     # exact-vector fetch is one corpus scan with no shuffle, and
     # normalize AFTER the join inside the vectorized cosine below
-    if prune_cells:
-        # restrict the exact-vector fetch to the candidates' OWN cells:
-        # a literal IN on the rerank table's partition column, so a
-        # cell-partitioned at-rest corpus scans only the probed cells'
-        # files instead of all of them. `top` is persisted (tiny:
-        # n_queries * n_cand rows) so the cells collect and the fetch
-        # join share one ADC scan — cache ownership follows the module
-        # convention (caller clears between corpora). Candidate ids
-        # cannot escape the filter: each id's stamped cell IS the cell
-        # its vector lives in, so the fetch is exact.
-        top = top.persist()
-        probed = sorted(
-            r[0] for r in top.select("cell").distinct().collect()
-        )
-        rerank = rerank.filter(F.col("cell").isin(probed))
     cand = rerank.select(id_col, F.col(vec_col).alias("_cv")).join(
         F.broadcast(top.select(query_id_col, id_col, "_qu")), id_col
     )

@@ -110,14 +110,6 @@ def _lang_counts(text_col) -> Column:
     return counts
 
 
-def lang_scores(text_col: str = "text") -> dict[str, Column]:
-    """Per-language stopword-hit ratio."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    n = F.greatest(_ws_token_count(c), F.lit(1))
-    counts = _lang_counts(text_col)
-    return {lang: counts[lang] / n for lang in _STOPWORDS}
-
-
 def lang_id(text_col: str = "text", default: str = "unknown", min_score: float = 0.0) -> Column:
     """Argmax language over stopword-hit ratios; `default` when no
     language scores above min_score. Ratios share one denominator, so

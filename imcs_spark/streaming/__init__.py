@@ -626,9 +626,9 @@ def sessionize_stream_native(
     Emission semantics are append-mode standard: a session row is
     emitted once the watermark passes its end (last event + gap), so
     sessions closed by a later event inside the final watermark
-    horizon stay in state — use :func:`sessionize_stream` (custom
-    keyed state) when eager emit-on-close or non-aggregate per-session
-    logic is required; that is the case built-ins cannot express.
+    horizon stay in state. A late event inside the watermark merges
+    into the session state it falls within a gap of (extending its
+    start backwards), or opens its own session.
 
     Output schema matches batch ``series.sessionize``:
     (user, session_start, session_end=last event ts, n_events).
@@ -646,157 +646,6 @@ def sessionize_stream_native(
             F.col("session_window.start").alias("session_start"),
             "session_end",
             "n_events",
-        )
-    )
-
-
-def sessionize_stream(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    gap_seconds: int = 1800,
-    watermark: str = "10 minutes",
-):
-    """Custom stateful streaming operator (applyInPandasWithState): the
-    streaming counterpart of batch ``series.sessionize`` — per-user
-    gap-based sessions maintained as keyed state across micro-batches.
-    Prefer :func:`sessionize_stream_native` (built-in session_window,
-    fully JVM-side) for the plain gap-session aggregate; this variant
-    exists for semantics the built-in cannot express — sessions are
-    emitted EAGERLY the moment a later event closes them (not when the
-    watermark passes), and the per-session Python kernel can carry
-    arbitrary logic (custom payload aggregation, dynamic gaps).
-
-    Emits one row per CLOSED session: (user, session_start, session_end,
-    n_events). A session closes when a later event for the same user
-    arrives more than ``gap_seconds`` after the previous one, or when
-    the event-time timeout fires (watermark has passed the open
-    session's last event + gap). State per key is three scalars — at
-    1000-executor scale this shuffles once per batch on user_id and
-    stores O(active users) state, the standard keyed-state layout.
-
-    The reference cannot express this at all (no streaming state; its
-    insert trigger is row-at-a-time, imcs.c:4617-4812)."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key_dt = stream_df.schema[user_col].dataType
-    if not isinstance(key_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        # the numpy kernel and output schema carry the key as int64; a
-        # string key would die mid-query inside the state worker with an
-        # opaque Arrow error — fail upfront with the alternative
-        raise TypeError(
-            f"sessionize_stream: {user_col} must be an integer type, got"
-            f" {key_dt.simpleString()}; use sessionize_stream_native for"
-            " arbitrary key types"
-        )
-    out_schema = (
-        f"{user_col} long, session_start timestamp, "
-        "session_end timestamp, n_events long"
-    )
-    state_schema = "session_start long, last_ts long, n long"
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(key, pdfs, state: GroupState):
-        # This function runs once per key per micro-batch, so per-call
-        # (and per-event) Python overhead is the dominant cost at high
-        # key cardinality: the whole batch for a key is segmented into
-        # sessions with vectorized numpy (gap mask -> segment bounds),
-        # never a per-event loop, and the emitted frame is built from
-        # int64->datetime64 array casts, never per-row pd.Timestamp
-        # objects. Measured 2x end-to-end on a 100k-row replay.
-        import numpy as np
-
-        uid = key[0]
-        if state.hasTimedOut:
-            if state.exists:
-                s0, s1, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        user_col: np.array([uid], dtype="int64"),
-                        "session_start": np.array([s0], dtype="datetime64[us]"),
-                        "session_end": np.array([s1], dtype="datetime64[us]"),
-                        "n_events": np.array([n], dtype="int64"),
-                    }
-                )
-            else:
-                state.remove()
-            return
-        parts = []
-        for pdf in pdfs:
-            arr = pdf[ts_col].to_numpy()
-            if arr.dtype.kind == "M":
-                parts.append(arr.astype("datetime64[us]").astype("int64"))
-            else:
-                parts.append(pd.to_datetime(pdf[ts_col]).astype("int64").to_numpy() // 1000)
-        if not parts:
-            return
-        ts_arr = np.sort(np.concatenate(parts))
-        if ts_arr.size == 0:
-            # non-empty chunk list of zero-length arrays (empty Arrow
-            # batches) — nothing to do, and gaps[0] below would throw
-            return
-        # within-batch gap segmentation (vectorized): segment boundaries
-        # wherever consecutive sorted events are > gap apart
-        interior = (np.flatnonzero(np.diff(ts_arr) > gap_us) + 1).astype("int64")
-        bounds = np.concatenate(
-            (np.array([0], dtype="int64"), interior, np.array([ts_arr.size], dtype="int64"))
-        )
-        segs = [
-            [int(ts_arr[bounds[i]]), int(ts_arr[bounds[i + 1] - 1]),
-             int(bounds[i + 1] - bounds[i])]
-            for i in range(len(bounds) - 1)
-        ]
-        # merge the stored open session as an INTERVAL into the sorted
-        # segment list. Comparing only against the stored end (the old
-        # gaps[0] test) mishandled late events: an event long BEFORE the
-        # open session unconditionally "extended" it (one wrong merged
-        # span) instead of forming its own earlier session. The interval
-        # merge places the stored session by start time and coalesces
-        # any neighbors within the gap on either side.
-        if state.exists:
-            segs.append([int(v) for v in state.get])
-            segs.sort()
-            merged = [segs[0]]
-            for st, en, cn in segs[1:]:
-                if st - merged[-1][1] <= gap_us:
-                    merged[-1][1] = max(merged[-1][1], en)
-                    merged[-1][2] += cn
-                else:
-                    merged.append([st, en, cn])
-            segs = merged
-        # all sessions but the time-latest close now; the latest stays
-        # open in state with its timeout at end + gap
-        closed, last = segs[:-1], segs[-1]
-        state.update((last[0], last[1], last[2]))
-        state.setTimeoutTimestamp((last[1] + gap_us) // 1000)
-        if closed:
-            c = np.asarray(closed, dtype="int64")
-            yield pd.DataFrame(
-                {
-                    user_col: np.full(len(closed), uid, dtype="int64"),
-                    "session_start": c[:, 0].astype("datetime64[us]"),
-                    "session_end": c[:, 1].astype("datetime64[us]"),
-                    "n_events": c[:, 2],
-                }
-            )
-
-    return (
-        # project to the two columns the state op reads BEFORE the
-        # stateful exchange: every retained column is Arrow-transferred
-        # to the Python workers for every row otherwise.
-        stream_df.select(user_col, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 

@@ -6,7 +6,7 @@ What is recomputed, bit-for-bit against the Spark implementation
 (pipeline/dedup.py):
 
 - token hashes: Spark ``xxhash64(token)`` == XXH64(utf8, seed 42),
-  via the validated SQL kernel in :mod:`imcs_spark.oracle_xxh64`;
+  via the validated SQL kernel in :mod:`registry.oracle_xxh64`;
 - word-3-gram shingle hashes: the rotate-13/XOR sliding combine of
   ``shingle_hashes`` (missing neighbours take the same golden-ratio
   constant Spark coalesces to);

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .functions import aggregates as agg
+from imcs_spark.functions import aggregates as agg
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -27,16 +27,18 @@ ORACLES: dict = {}
 
 def query(name: str, oracle: str | None = None, plan_cache: bool = False):
     """Register a driver query. ``plan_cache=True`` builds the query's
-    DataFrame once per (application, sf_dir) and returns the same
-    object on later calls — the prepared-plan convention literal_ops /
-    series_ops / table_ops / join_concat_store already follow, now
-    available declaratively (r13). NOTHING is persisted by the wrapper:
-    every collect re-runs the full plan from the loaded tables; only
-    the ~0.1-1.2 s of per-call py4j plan construction + Catalyst
-    analysis is amortized, which is also the BASELINE gate's own
-    convention (its *_exec rows time prepared plans, the analog of the
-    reference's published psql numbers — see bench.py). Excluded by
-    construction: queries whose builder does data-dependent DRIVER
+    DataFrame once per (application, sf_dir) and returns, on every
+    call, ``memo.select("*")``: a new Dataset (its own QueryExecution)
+    over the memo's already-analyzed plan. Only the per-call py4j plan
+    construction and Catalyst analysis of the builder is amortized
+    (~0.1-1.2 s for the larger queries); each collect plans and runs
+    the whole job, map stages included. Returning the memo object
+    itself would not do that: Spark keeps a Dataset's materialized
+    shuffle files, so a re-collect of one object skips every stage
+    before its last exchange. Nothing is persisted by the wrapper.
+    Eager legs inside a builder (driver-side collects, index builds
+    through ``_artifact``) still run once, at the first call. Excluded
+    by construction: queries whose builder does data-dependent DRIVER
     compute that produces result rows (minhash_dedup's union-find) or
     runs streams (streaming_*) — those must pay their build every
     trial."""
@@ -48,7 +50,7 @@ def query(name: str, oracle: str | None = None, plan_cache: bool = False):
             ) -> DataFrame:
                 return _artifact(
                     spark, (_name + "_plan", sf_dir), lambda: _fn(spark, sf_dir)
-                )
+                ).select("*")
 
             wrapped.__name__ = fn.__name__
             wrapped.__doc__ = fn.__doc__
@@ -180,9 +182,6 @@ def _artifact(spark: SparkSession, key: tuple, build):
     return _ARTIFACTS[full_key]
 
 
-_ann_index = _artifact  # historical alias used by the ANN queries
-
-
 def _dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-duplicate pairs (exact Jaccard ≥ 0.8 over MinHash/
     LSH candidates) for the documents corpus — like the ANN indexes, a
@@ -192,7 +191,7 @@ def _dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than re-shingling the corpus. Cached per Spark application."""
 
     def build():
-        from .pipeline import dedup
+        from imcs_spark.pipeline import dedup
 
         docs = _t(spark, sf_dir, "documents")
         sigs = dedup.minhash_signatures(docs, num_hashes=32)
@@ -201,7 +200,7 @@ def _dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.count()  # materialize under the persist
         return pairs
 
-    return _ann_index(spark, ("dedup_pairs", sf_dir), build)
+    return _artifact(spark, ("dedup_pairs", sf_dir), build)
 
 
 def _r6(c) -> F.Column:
@@ -235,7 +234,7 @@ def _exact_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the truth per query)."""
 
     def build():
-        from .pipeline import similarity
+        from imcs_spark.pipeline import similarity
 
         emb = _t(spark, sf_dir, "embeddings")
         queries_df = emb.filter(F.col("vec_id") < 3).select(
@@ -249,7 +248,7 @@ def _exact_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.count()
         return df
 
-    return _ann_index(spark, ("exact_top5", sf_dir), build)
+    return _artifact(spark, ("exact_top5", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
@@ -410,14 +409,14 @@ def _events_posed(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame the same way. ~10 registered queries share it."""
 
     def build():
-        from .series import with_pos
+        from imcs_spark.series import with_pos
 
         ev = _t(spark, sf_dir, "events")
         posed = with_pos(ev, ["ts"], ["user_id"]).persist()
         posed.count()
         return posed
 
-    return _ann_index(spark, ("events_posed", sf_dir), build)
+    return _artifact(spark, ("events_posed", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
@@ -444,7 +443,7 @@ def window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     *_ref columns cross-check moving_agg(warmup='reference') against a
     DuckDB formulation of the C engine's circular-history semantics
     (avg divides by n always; min sees the padding zeros)."""
-    from .operators import windows
+    from imcs_spark.operators import windows
 
     posed = _events_posed(spark, sf_dir)
     out = windows.moving_agg(posed, "avg", 5, "value", ["user_id"], "w_avg")
@@ -478,7 +477,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 """,
 )
 def cum_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import windows
+    from imcs_spark.operators import windows
 
     posed = _events_posed(spark, sf_dir)
     out = windows.cum_agg(posed, "sum", "value", ["user_id"], "c_sum")
@@ -510,7 +509,7 @@ FROM runs GROUP BY user_id, run_id
 """,
 )
 def run_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import grouping
+    from imcs_spark.operators import grouping
 
     posed = _events_posed(spark, sf_dir)
     out = grouping.group_aggs(
@@ -551,7 +550,7 @@ FROM (SELECT UNNEST(GENERATE_SERIES(0, 19)) AS i) g LEFT JOIN counts c ON g.i = 
 """,
 )
 def hist_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import grouping
+    from imcs_spark.operators import grouping
 
     posed = _events_posed(spark, sf_dir)
     avg = grouping.grid_agg(posed, "avg", 10, "value", ["user_id"], "grid_avg")
@@ -610,7 +609,7 @@ FROM back b JOIN fwd f USING (event_id)
 """,
 )
 def asof_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import joins
+    from imcs_spark.operators import joins
 
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
@@ -644,7 +643,7 @@ FROM events ORDER BY value DESC, event_id LIMIT 10
 """,
 )
 def top_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import sorting
+    from imcs_spark.operators import sorting
 
     ev = _t(spark, sf_dir, "events")
     # event_id is the tie-breaking spine (unique)
@@ -666,7 +665,7 @@ def _exact_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip twice per bench pass doubled its cost for no coverage gain)."""
 
     def build():
-        from .operators import sorting
+        from imcs_spark.operators import sorting
 
         li = _t(spark, sf_dir, "lineitem")
         # No pos spine at all: quantile's sorted index breaks ties by
@@ -712,7 +711,7 @@ FROM idx JOIN s ON s.rn = idx.target
 """,
 )
 def quantile_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import sorting
+    from imcs_spark.operators import sorting
 
     accuracy = 1000
     li = _t(spark, sf_dir, "lineitem")
@@ -764,7 +763,7 @@ FROM posed
 """,
 )
 def diff_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import timeseries
+    from imcs_spark.operators import timeseries
 
     posed = _events_posed(spark, sf_dir)
     out = timeseries.diff(posed, "value", ["user_id"], "diff")
@@ -789,7 +788,7 @@ FROM lineitem GROUP BY 1, 2, 3, 4
 """,
 )
 def dateparts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import elementwise as E
+    from imcs_spark.functions import elementwise as E
 
     li = _t(spark, sf_dir, "lineitem")
     return (
@@ -826,7 +825,7 @@ SELECT 'dup', event_type, CAST(COUNT(*) AS BIGINT), CAST(0 AS BIGINT) FROM (
 """,
 )
 def thin_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import grouping, positional
+    from imcs_spark.operators import grouping, positional
 
     posed = _events_posed(spark, sf_dir)
     thin = positional.thin(
@@ -860,7 +859,7 @@ SELECT doc_id FROM d WHERE doc_id = (SELECT MIN(doc_id) FROM d d2 WHERE d2.dg = 
 """,
 )
 def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import dedup
+    from imcs_spark.pipeline import dedup
 
     docs = _t(spark, sf_dir, "documents")
     return dedup.exact_dedup(docs).select("doc_id")
@@ -913,7 +912,7 @@ FROM f JOIN m USING (doc_id)
 """,
 )
 def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import text as T
+    from imcs_spark.pipeline import text as T
 
     docs = _t(spark, sf_dir, "documents")
     metrics = docs.select(
@@ -941,7 +940,7 @@ def _langid_oracle() -> str:
     # then lexicographically greatest language — is the native struct
     # comparison order in BOTH engines (Spark array_max over
     # struct<s,l>, DuckDB list_aggregate 'max').
-    from .pipeline.text import _STOPWORDS
+    from imcs_spark.pipeline.text import _STOPWORDS
 
     score_cols, entries = [], []
     for lang, words in _STOPWORDS.items():
@@ -976,7 +975,7 @@ FROM best GROUP BY 1
 
 @query("langid_counts", plan_cache=True, oracle=_langid_oracle())
 def langid_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import text as T
+    from imcs_spark.pipeline import text as T
 
     docs = _t(spark, sf_dir, "documents")
     return (
@@ -1035,7 +1034,7 @@ FROM ranked8 WHERE rn <= 5
 """,
 )
 def ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import similarity
+    from imcs_spark.pipeline import similarity
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 3).select(
@@ -1143,7 +1142,7 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 """,
 )
 def minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import dedup
+    from imcs_spark.pipeline import dedup
 
     docs = _t(spark, sf_dir, "documents")
     pairs = _dedup_pairs(spark, sf_dir)
@@ -1174,7 +1173,7 @@ def minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # comp is shared by the comp and csplit legs, so both build
         # here; the union tree output is unchanged (order-insensitive
         # driver hash, identical rows).
-        from .pipeline import curate
+        from imcs_spark.pipeline import curate
 
         comp = dedup.connected_components(pairs)
         comp_leg = (
@@ -1214,7 +1213,7 @@ def _simhash_oracle() -> str:
     # all pairs, so the banded-probe path's guaranteed-recall claim is
     # verified end-to-end by the driver, not just by pytest. 'xx': the
     # production xxhash64 scale path, with XXH64 seed-42 itself
-    # recomputed in DuckDB SQL (imcs_spark/oracle_xxh64.py) — distinct
+    # recomputed in DuckDB SQL (registry/oracle_xxh64.py) — distinct
     # tokens hashed once, 32-bit halves joined back to the token
     # stream, then identical majority-vote + brute-force Hamming SQL
     # as the md5 leg.
@@ -1274,7 +1273,7 @@ FROM xpairs WHERE hamming <= 10 GROUP BY 2
 
 @query("simhash_pairs", plan_cache=True, oracle=_simhash_oracle())
 def simhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import dedup
+    from imcs_spark.pipeline import dedup
 
     # the SimHash near-pair lists are corpus-level built-once artifacts
     # (same as _dedup_pairs): signature + banded probe join run once
@@ -1286,7 +1285,7 @@ def simhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.count()
             return pairs
 
-        pairs = _ann_index(spark, ("simhash_pairs", sf_dir, algo), build)
+        pairs = _artifact(spark, ("simhash_pairs", sf_dir, algo), build)
         return pairs.groupBy("hamming").agg(F.count(F.lit(1)).alias("n_pairs")).select(
             F.lit(algo).alias("algo"), F.col("hamming").cast("int").alias("hamming"),
             "n_pairs",
@@ -1319,7 +1318,7 @@ def _ann_recall_oracle() -> str:
     # fix was defining an order, not discovering one).
     from .oracle_ivf import ivf_ctes
     from .oracle_pq import pq_ctes
-    from .pipeline.similarity import hyperplanes
+    from imcs_spark.pipeline.similarity import hyperplanes
 
     planes = hyperplanes(64, 8, seed=42)
     rows = ", ".join(
@@ -1387,13 +1386,13 @@ GROUP BY a.query_id
 
 @query("ann_recall", plan_cache=True, oracle=_ann_recall_oracle())
 def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import similarity
+    from imcs_spark.pipeline import similarity
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    lsh_index = _ann_index(
+    lsh_index = _artifact(
         spark,
         ("lsh", sf_dir),
         lambda: similarity.lsh_index(emb, n_planes=8, dim=64),
@@ -1406,7 +1405,7 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centroids bit-reproducible by oracle_ivf.py's SQL twin, turning
     # the ivf legs into a TRUE cross-engine oracle (they were per-SF
     # pinned integers in rounds 5-8)
-    ivf_index = _ann_index(
+    ivf_index = _artifact(
         spark,
         ("ivf", sf_dir),
         lambda: similarity.ivf_index(
@@ -1431,7 +1430,7 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-for-bit in tests/test_pipeline.py); serving is the standard
     # PQ shape — ADC top-(k*4) over the m-code encoded corpus, exact
     # cosine re-rank inside
-    pq_index = _ann_index(
+    pq_index = _artifact(
         spark,
         ("pq", sf_dir),
         lambda: (
@@ -1502,7 +1501,7 @@ FROM posed
 """,
 )
 def win_group_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import grouping
+    from imcs_spark.operators import grouping
 
     posed = _events_posed(spark, sf_dir)
     # multi-agg form: ONE run_id derivation + one shared Window node
@@ -1548,7 +1547,7 @@ def _approxdc_oracle() -> str:
     def rotl(x: str, r: int) -> str:
         return f"(((({x}) << {r}) & 4294967295) | (({x}) >> {32 - r}))"
 
-    from .functions.aggregates import MURMUR_SEED
+    from imcs_spark.functions.aggregates import MURMUR_SEED
 
     c1, c2 = 0xCC9E2D51, 0x1B873593
     seed = MURMUR_SEED
@@ -1670,7 +1669,7 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4th decimal — this hash-failed two rounds. Means are magnitude
     # ~0.05-40, so 4-decimal rounding tolerates ~5e-5 absolute noise vs
     # ~1e-9 actual — orders of magnitude of headroom.
-    from .functions import elementwise as E
+    from imcs_spark.functions import elementwise as E
 
     def _m4(c):
         return F.round(F.avg(c), 4)
@@ -1705,7 +1704,7 @@ FROM events
 """,
 )
 def like_iif_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import elementwise as E
+    from imcs_spark.functions import elementwise as E
 
     ev = _t(spark, sf_dir, "events")
     return ev.agg(
@@ -1779,7 +1778,7 @@ FROM eflips
 """,
 )
 def cross_extrema_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import timeseries
+    from imcs_spark.operators import timeseries
 
     posed = _events_posed(spark, sf_dir)
     cr = timeseries.cross(
@@ -1837,7 +1836,7 @@ def ema_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # *_ok flags assert the actual recurrence kernels (cs_window_ema/atr
     # operators) agree with the closed form to 1e-5 — so the driver
     # verifies both the SQL semantics and the operator implementation.
-    from .operators import windows
+    from imcs_spark.operators import windows
 
     posed = _events_posed(spark, sf_dir).select("user_id", "pos", "value")
     out = windows.recurrences(
@@ -1903,7 +1902,7 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate <= TIMESTAMP '1996-1
 """,
 )
 def slice_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .table import Engine
+    from imcs_spark.table import Engine
 
     eng = Engine(spark)
     t = eng.create("orders", _t(spark, sf_dir, "orders"), "o_orderdate", "o_orderstatus")
@@ -1924,6 +1923,7 @@ def slice_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "literal_ops",
+    plan_cache=True,
     oracle="""
 SELECT * FROM (VALUES
   ('stretch',  0, 1.1), ('stretch', 1, 2.2), ('stretch', 2, 2.2), ('stretch', 3, 1.0), ('stretch', 4, 1.0),
@@ -1949,16 +1949,8 @@ SELECT * FROM (VALUES
 """,
 )
 def literal_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Static literal plan — built once per application (see
-    # series_ops_q's note: the timed trials measure operator execution,
-    # not ~1.7 s of py4j plan re-construction per trial; nothing is
-    # persisted, every collect re-runs the full plan).
-    return _artifact(spark, ("literal_ops_plan",), lambda: _literal_ops_build(spark))
-
-
-def _literal_ops_build(spark: SparkSession) -> DataFrame:
-    from .operators import joins, positional
-    from .series import seq
+    from imcs_spark.operators import joins, positional
+    from imcs_spark.series import seq
 
     def tag(op: str, df: DataFrame) -> DataFrame:
         return df.select(
@@ -2107,7 +2099,7 @@ SELECT CAST(pos AS BIGINT) AS pos, event_id FROM posed WHERE pos % 997 = 0
 """,
 )
 def global_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .series import zip_with_global_pos
+    from imcs_spark.series import zip_with_global_pos
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts")
     posed = zip_with_global_pos(ev, ["ts", "event_id"])
@@ -2138,7 +2130,7 @@ FROM sess GROUP BY user_id, session_id
 """,
 )
 def sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .series import sessionize
+    from imcs_spark.series import sessionize
 
     ev = _t(spark, sf_dir, "events")
     sess = sessionize(ev, "ts", 3600.0, ["user_id"])
@@ -2168,7 +2160,7 @@ FROM posed
 """,
 )
 def rank_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import sorting, timeseries
+    from imcs_spark.operators import sorting, timeseries
 
     posed = _events_posed(spark, sf_dir).select("user_id", "pos", F.col("value").alias("val"))
     out = sorting.rank(posed, "val", ["user_id"])
@@ -2203,7 +2195,7 @@ GROUP BY iid
 """,
 )
 def range_join_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.joins import range_join
+    from imcs_spark.operators.joins import range_join
 
     ev = _t(spark, sf_dir, "events").select("value")
     iv = spark.range(100).select(
@@ -2232,7 +2224,7 @@ FROM u
 """,
 )
 def union_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import joins
+    from imcs_spark.operators import joins
 
     ev = _t(spark, sf_dir, "events")
     a = ev.filter(F.col("event_type") == "click").select(F.col("value").alias("val"))
@@ -2309,7 +2301,7 @@ def _mm_jpeg_rt():
         pixel-identically (same quantized coefficients)."""
         import numpy as np
 
-        from .pipeline.jpeg import decode_jpeg, encode_jpeg
+        from imcs_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
 
         out = np.ones(len(mid), dtype="int32")
         for i, m in enumerate(mid.to_numpy()):
@@ -2352,7 +2344,7 @@ def _mm_mp4_rt():
         on any mismatch)."""
         import numpy as np
 
-        from .pipeline.mp4 import encode_mp4, parse_mp4
+        from imcs_spark.pipeline.mp4 import encode_mp4, parse_mp4
 
         ns = np.zeros(len(mid), dtype="int64")
         nb = np.zeros(len(mid), dtype="int64")
@@ -2402,7 +2394,7 @@ FROM m GROUP BY kind
 """,
 )
 def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import multimodal as MM
+    from imcs_spark.pipeline import multimodal as MM
 
     docs = _t(spark, sf_dir, "documents")
     media = MM.media_from_documents(docs)
@@ -2448,7 +2440,7 @@ def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with the first 48 bits of md5 (a hash DuckDB shares bit-for-bit);
 # the 'xx' leg is the production xxhash64 SCALE path, with XXH64
 # seed-42 itself recomputed from scratch in DuckDB SQL
-# (imcs_spark/oracle_xxh64.py — UHUGEINT mod-2^64 arithmetic, stripe
+# (registry/oracle_xxh64.py — UHUGEINT mod-2^64 arithmetic, stripe
 # recursion, unrolled tail), so the whole winnowing profile including
 # the 64-bit rotate-XOR fold and the signed-min is re-derived in ANSI
 # SQL. Both paths flag the same near-dup corpus structure (~5% rate).
@@ -2562,7 +2554,7 @@ FROM xsizes
 
 @query("fingerprint_profile", plan_cache=True, oracle=_fingerprint_oracle())
 def fingerprint_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import text as T
+    from imcs_spark.pipeline import text as T
 
     docs = _t(spark, sf_dir, "documents")
 
@@ -2612,7 +2604,7 @@ def _pii_ctes() -> str:
     oracle's CTE list (`curate_profile`, which since round 9 carries
     the driver-facing 'pii' legs; the standalone `pii_redact` slot was
     registration #52 and fell outside the driver's 50-slot window)."""
-    from .pipeline.curate import CCARD_PATTERN, IPV6_PATTERN, PII_PATTERNS
+    from imcs_spark.pipeline.curate import CCARD_PATTERN, IPV6_PATTERN, PII_PATTERNS
 
     pat = {name: p for name, p, _ in PII_PATTERNS}
     # Luhn over the reversed digit string of candidate c (1-based i:
@@ -2772,8 +2764,8 @@ SELECT 'pii', 'len_delta', 0.0, 0.0, len_delta FROM pii_tot
 
 @query("curate_profile", plan_cache=True, oracle=_curate_profile_oracle())
 def curate_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import curate
-    from .pipeline import sample as S
+    from imcs_spark.pipeline import curate
+    from imcs_spark.pipeline import sample as S
 
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
@@ -2859,7 +2851,7 @@ def split_pack_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
     `curation_e2e` registry slot (its 'split'/'pack' legs) so the
     six-stage end-to-end composition could join the driver's 50-row
     CORRECTNESS snapshot without evicting them."""
-    from .pipeline import curate
+    from imcs_spark.pipeline import curate
 
     docs = _t(spark, sf_dir, "documents")
 
@@ -2909,7 +2901,7 @@ def split_pack_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window, and the final aggregate.
 # ---------------------------------------------------------------------------
 def _curation_e2e_oracle() -> str:
-    from .pipeline.curate import CCARD_PATTERN, IPV6_PATTERN, PII_PATTERNS
+    from imcs_spark.pipeline.curate import CCARD_PATTERN, IPV6_PATTERN, PII_PATTERNS
 
     pat = {name: p for name, p, _ in PII_PATTERNS}
     dg = "reverse(regexp_replace(c, '[^0-9]', '', 'g'))"
@@ -3041,8 +3033,8 @@ FROM rawpacked GROUP BY 1, 2, 3
 
 @query("curation_e2e", plan_cache=True, oracle=_curation_e2e_oracle())
 def curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .pipeline import curate, dedup
-    from .pipeline import text as T
+    from imcs_spark.pipeline import curate, dedup
+    from imcs_spark.pipeline import text as T
 
     docs = _t(spark, sf_dir, "documents")
 
@@ -3153,7 +3145,7 @@ def embedding_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup buckets + verifies ONCE and serves every consumer from the
     # persisted pair list.
     def build():
-        from .pipeline import dedup
+        from imcs_spark.pipeline import dedup
 
         emb = _t(spark, sf_dir, "embeddings")
         base = emb.select(
@@ -3306,7 +3298,7 @@ FROM (
 """,
 )
 def streaming_ops_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import dedup_stream, windowed_agg_stream
+    from imcs_spark.streaming import dedup_stream, windowed_agg_stream
 
     _t(spark, sf_dir, "events")  # runs the batch-side ts magnitude guard
     agg_df = windowed_agg_stream(
@@ -3387,7 +3379,7 @@ WHERE EPOCH(session_end) + 3600 <= (SELECT MAX(EPOCH(ts)) FROM events) - 3600
 """,
 )
 def streaming_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import sessionize_stream_native
+    from imcs_spark.streaming import sessionize_stream_native
 
     _t(spark, sf_dir, "events")
     sess = sessionize_stream_native(
@@ -3424,7 +3416,7 @@ def _near_dedup_stream_target(spark: SparkSession, sf_dir: str) -> str:
     def build() -> str:
         import tempfile
 
-        from .streaming import near_dedup_stream
+        from imcs_spark.streaming import near_dedup_stream
 
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         lo, hi, n = docs.select(
@@ -3575,7 +3567,7 @@ JOIN grid_leg g USING (event_type)
 """,
 )
 def sql_surface_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sqlsurface import register_sql, register_views
+    from imcs_spark.sqlsurface import register_sql, register_views
 
     # register the cs_* surface once per application (r13): the
     # CREATE OR REPLACE FUNCTION statements + 4 pandas-UDAF
@@ -3695,8 +3687,8 @@ FROM srt
 """,
 )
 def sort_permute_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import sorting
-    from .series import zip_with_global_pos
+    from imcs_spark.operators import sorting
+    from imcs_spark.series import zip_with_global_pos
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 997 == 0)
     # The slice is PROPORTIONAL (1/997 of the table), not bounded — at
@@ -3720,6 +3712,7 @@ def sort_permute_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "table_ops",
+    plan_cache=True,
     # The pos spine orders by (ts, event_id) on BOTH sides: event_id is
     # the deterministic tiebreaker, so a duplicate ts near the span
     # boundary can never make the slice permutation engine-dependent.
@@ -3747,18 +3740,11 @@ UNION ALL SELECT 'append_wsum', ROUND(SUM(pos * value), 3) FROM u41
 """,
 )
 def table_ops_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Built once per (application, sf_dir) like the literal batteries:
-    # the eager introspective legs (count/stats/truncate/profile) run
+    # The eager introspective legs (count/stats/truncate/profile) run
     # at build — once, exactly as the correctness driver sees them —
     # and the data legs (span/concat/append aggregates) re-execute on
     # every collect.
-    return _artifact(
-        spark, ("table_ops_plan", sf_dir), lambda: _table_ops_build(spark, sf_dir)
-    )
-
-
-def _table_ops_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .table import Engine
+    from imcs_spark.table import Engine
 
     ev = _t(spark, sf_dir, "events")
     eng = Engine(spark)
@@ -3813,9 +3799,9 @@ def _table_ops_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator invocations made here — deltas, not absolutes, so the
     # leg is immune to whatever the rest of the registry has counted
     # in this application
-    from . import profile as P
-    from .operators import positional as _pos
-    from .series import seq as _seq
+    from imcs_spark import profile as P
+    from imcs_spark.operators import positional as _pos
+    from imcs_spark.series import seq as _seq
 
     before = dict(P.profile())
     _s3 = _seq(spark, [3.0, 1.0, 2.0])
@@ -3846,7 +3832,7 @@ def _table_ops_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         if lohi["lo"] is None
         else lohi["lo"] + (lohi["hi"] - lohi["lo"]) / 2
     )
-    from .table import TsTable
+    from imcs_spark.table import TsTable
 
     older = TsTable(
         spark,
@@ -3880,6 +3866,7 @@ def _table_ops_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "series_ops",
+    plan_cache=True,
     oracle="""
 SELECT * FROM (VALUES
   ('prd', 2430.0), ('all', 0.0), ('any', 15.0),
@@ -3895,24 +3882,14 @@ FROM (VALUES ('ab', 'd'), ('c', 'ef')) AS s(a, b)
 """,
 )
 def series_ops_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The plan is STATIC (literal series only — no sf tables), so it is
-    # built once per application through the _artifact convention the
-    # bench already warms: the timed trials then measure the operators'
-    # EXECUTION, not ~2 s of py4j plan re-construction per trial
-    # (round-10 VERDICT #5; same prepared-plan reading BENCH_SCALE.md's
-    # *_exec keys use). Nothing is persisted — every collect re-runs
-    # the full plan, including the driver-side format_series legs'
-    # bounded collects, which run once at build like the ANN indexes.
-    return _artifact(spark, ("series_ops_plan",), lambda: _series_ops_build(spark))
-
-
-def _series_ops_build(spark: SparkSession) -> DataFrame:
-    from . import sources as S
-    from .functions import aggregates as A
-    from .functions import elementwise as E
-    from .operators import positional
-    from .series import const_series
-    from .sqlsurface import register_sql
+    # The driver-side format_series legs' bounded collects run once, at
+    # build, like the ANN indexes.
+    from imcs_spark import sources as S
+    from imcs_spark.functions import aggregates as A
+    from imcs_spark.functions import elementwise as E
+    from imcs_spark.operators import positional
+    from imcs_spark.series import const_series
+    from imcs_spark.sqlsurface import register_sql
 
     s = S.parse(spark, "int4:{6,3,5,3,9}")
 
@@ -4033,6 +4010,7 @@ def _series_ops_build(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "join_concat_store",
+    plan_cache=True,
     # The 'ls' leg verifies stretch_exact's lockstep cursor against an
     # INDEPENDENT implementation of the reference semantics
     # (func.c:4308-4392): a DuckDB recursive CTE walks the left
@@ -4084,24 +4062,11 @@ FROM events WHERE user_id = 41
 """,
 )
 def join_concat_store_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Static literal plan + artifact-count leg — built once per
-    # application, the same idiom as literal_ops/series_ops (the timed
-    # trials measure operator execution, not ~0.7 s of py4j plan
-    # re-construction per trial; nothing is persisted, every collect
-    # re-runs the plan). r13 optimization; rows identical.
-    return _artifact(
-        spark,
-        ("join_concat_store_plan", sf_dir),
-        lambda: _join_concat_store_build(spark, sf_dir),
-    )
-
-
-def _join_concat_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from .operators import joins, positional
-    from .series import seq
-    from .table import TsTable
+    from imcs_spark.operators import joins, positional
+    from imcs_spark.series import seq
+    from imcs_spark.table import TsTable
 
     a = seq(spark, [0, 2, 3, 8, 10], "int")
     b = seq(spark, [1, 3, 6, 10], "int")
@@ -4149,49 +4114,6 @@ def _join_concat_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# ---------------------------------------------------------------------------
-# §2.9 UDAF surface: the reference has NO user-defined aggregate
-# mechanism ("extensibility is: write a C operator", SURVEY §2.9);
-# Spark's pandas_udf GROUPED_AGG is the strict superset claimed there.
-# Driver-verified with a weighted geometric mean — a real aggregate SQL
-# can only express through the exp/ln identity the oracle uses.
-# Since round 9 the driver-facing check is the `wgeo` leg of
-# `sql_surface` (cs_wgeomean, sqlsurface.py) — the standalone slot was
-# registration #51 and fell outside the driver's 50-slot CORRECTNESS
-# window in round 8. This DataFrame-API twin stays UNREGISTERED,
-# pinned against the same DuckDB oracle in pytest
-# (tests/test_engine_introspection.py::test_udaf_wgeomean_dataframe_path).
-# ---------------------------------------------------------------------------
-UDAF_WGEOMEAN_ORACLE = """
-SELECT event_type,
-       ROUND(EXP(SUM((user_id % 7 + 1) * LN(ABS(value) + 1))
-                 / SUM(user_id % 7 + 1)), 6) AS wgeo
-FROM events GROUP BY event_type
-"""
-
-
-def udaf_wgeomean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def wgeo(v: pd.Series, w: pd.Series) -> float:  # Series -> scalar = GROUPED_AGG
-        import numpy as np
-
-        vv = v.to_numpy(dtype="float64")
-        ww = w.to_numpy(dtype="float64")
-        return float(np.exp((np.log(vv) * ww).sum() / ww.sum()))
-
-    ev = _t(spark, sf_dir, "events")
-    prepared = ev.select(
-        "event_type",
-        (F.abs(F.col("value")) + 1).alias("_v"),
-        (F.col("user_id") % 7 + 1).cast("double").alias("_w"),
-    )
-    return prepared.groupBy("event_type").agg(
-        _r6(wgeo("_v", "_w")).alias("wgeo")
-    )
-
-
 def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction counts + length delta over the synthesized-PII
     corpus (oracle chain: :func:`_pii_ctes`). UNREGISTERED since round
@@ -4199,7 +4121,7 @@ def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     which call this function; the standalone slot was registration #52
     and fell outside the driver's 50-slot CORRECTNESS window in round
     8. Also pytest-pinned directly against :func:`_pii_oracle`."""
-    from .pipeline import curate as C
+    from imcs_spark.pipeline import curate as C
 
     docs = _t(spark, sf_dir, "documents")
     did = F.col("doc_id")

@@ -31,3 +31,23 @@ def assert_seq(df, expected, col="val", rel=1e-6):
             assert got == pytest.approx(want, rel=rel), f"{rows} vs {expected}"
         else:
             assert got == want, f"{rows} vs {expected}"
+
+
+def completed_tasks(spark, action, group="completed-tasks"):
+    """Run ``action()`` under a fresh job group and return the number of
+    tasks that ran to completion in its jobs (a stage that Spark skips
+    because its shuffle output already exists contributes none)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    st = sc.statusTracker()
+    n = 0
+    for j in st.getJobIdsForGroup(group):
+        info = st.getJobInfo(j)
+        for s in info.stageIds if info is not None else ():
+            sinfo = st.getStageInfo(s)
+            n += sinfo.numCompletedTasks if sinfo is not None else 0
+    return n

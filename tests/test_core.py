@@ -398,11 +398,12 @@ def test_readme_quickstart_runs(spark, tmp_path):
 
 def test_engine_reads_only_deployment_env_settings():
     """The engine package reads no environment knobs beyond its
-    deployment settings and the JPEG input-size cap: a behaviour or
-    timing switch read from the environment is invisible at the call
-    site and untested by default. Scans every os.environ / getenv read
-    under imcs_spark/ (a read whose name is not a string literal counts
-    as a knob too)."""
+    deployment settings: a behaviour or timing switch read from the
+    environment is invisible at the call site and untested by default.
+    Scans every os.environ / getenv read under imcs_spark/ (a read
+    whose name is not a string literal counts as a knob too). The same
+    scan checks that no engine module imports the driver's query
+    registry: the registry is a client of the engine, not part of it."""
     import ast
     import os
 
@@ -410,8 +411,6 @@ def test_engine_reads_only_deployment_env_settings():
         ("session.py", "SPARK_GRAFT_CPUS"),
         ("session.py", "SPARK_GRAFT_ON_CLUSTER"),
         ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
-        ("pipeline/jpeg.py", "IMCS_SPARK_JPEG_MAX_BLOCKS"),
-        ("pipeline/multimodal.py", "IMCS_SPARK_JPEG_MAX_BLOCKS"),
     }
     root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "imcs_spark")
 
@@ -421,6 +420,7 @@ def test_engine_reads_only_deployment_env_settings():
         return "<dynamic>"
 
     found = set()
+    registry_imports = []
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
             if not fn.endswith(".py"):
@@ -434,6 +434,15 @@ def test_engine_reads_only_deployment_env_settings():
                 for child in ast.iter_child_nodes(node)
             }
             for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and not node.level:
+                    mods = [node.module or ""]
+                else:
+                    mods = []
+                registry_imports += [
+                    (rel, m) for m in mods if m.split(".")[0] == "registry"
+                ]
                 name = getattr(node, "attr", getattr(node, "id", None))
                 if name not in ("environ", "getenv"):
                     continue
@@ -452,3 +461,4 @@ def test_engine_reads_only_deployment_env_settings():
                 found.add((rel, key))
     assert found, "the scan found no environment reads at all"
     assert found <= allowed, sorted(found - allowed)
+    assert not registry_imports, registry_imports

@@ -246,7 +246,7 @@ def test_query_registry_within_driver_window():
     CORRECTNESS hard signal — exactly what happened to udaf_wgeomean
     and pii_redact in round 8. Guard the cap, and that every
     registered query still carries an oracle."""
-    from imcs_spark.queries import ORACLES, QUERIES
+    from registry.queries import ORACLES, QUERIES
 
     assert len(QUERIES) <= 50, (
         f"{len(QUERIES)} registered queries — slots past 50 are "
@@ -254,6 +254,40 @@ def test_query_registry_within_driver_window():
         f"check into an existing composite query instead"
     )
     assert set(ORACLES) == set(QUERIES)
+
+
+def test_plan_cache_query_reruns_its_shuffle(spark):
+    """A ``plan_cache`` query memoizes its built plan, not its
+    execution: every call must hand out a Dataset whose collect runs
+    the whole job. Collecting the memoized object twice would let the
+    second collect skip the map stage, whose shuffle files Spark keeps
+    per Dataset, so a timed repeat would measure only the reduce side."""
+    from registry.queries import QUERIES, query
+
+    from conftest import completed_tasks
+
+    name = "_plan_cache_shuffle_probe"
+
+    @query(name, plan_cache=True)
+    def probe(spark, sf_dir):
+        return (
+            spark.range(0, 20000, 1, 4)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .count()
+        )
+
+    try:
+        runs = [
+            completed_tasks(
+                spark, lambda: QUERIES[name](spark, "plan-cache-probe").collect(),
+                group=f"plan-cache-probe-{i}",
+            )
+            for i in range(2)
+        ]
+    finally:
+        del QUERIES[name]
+    assert runs[0] > 1, runs  # the map stage and the reduce side ran
+    assert runs[1] == runs[0], runs
 
 
 def test_coverage_query_citations_are_registered():
@@ -264,7 +298,7 @@ def test_coverage_query_citations_are_registered():
     import os
     import re
 
-    from imcs_spark.queries import QUERIES
+    from registry.queries import QUERIES
 
     text = open(
         os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md")
@@ -291,29 +325,12 @@ def _duckdb_views(sf_dir, *tables):
     return con
 
 
-def test_udaf_wgeomean_dataframe_path(spark, sf_dir):
-    """The DataFrame-API GROUPED_AGG twin of sql_surface's wgeo leg
-    (unregistered since round 9; formerly driver slot #51) still
-    matches the DuckDB exp/ln-identity oracle."""
-    from imcs_spark.queries import UDAF_WGEOMEAN_ORACLE, udaf_wgeomean_q
-
-    got = {
-        r["event_type"]: r["wgeo"]
-        for r in udaf_wgeomean_q(spark, sf_dir).collect()
-    }
-    con = _duckdb_views(sf_dir, "events")
-    want = dict(con.execute(UDAF_WGEOMEAN_ORACLE).fetchall())
-    assert got.keys() == want.keys()
-    for k in want:
-        assert got[k] == want[k], (k, got[k], want[k])
-
-
 def test_pii_redact_cross_engine(spark, sf_dir):
     """pii_redact_q (unregistered since round 9; formerly driver slot
     #52 — the driver-facing check is curate_profile's 'pii' legs,
     which unpivot this same aggregate) stays bit-identical to the
     staged DuckDB redaction oracle."""
-    from imcs_spark.queries import _pii_oracle, pii_redact_q
+    from registry.queries import _pii_oracle, pii_redact_q
 
     got = pii_redact_q(spark, sf_dir).first().asDict()
     con = _duckdb_views(sf_dir, "documents")

@@ -159,7 +159,10 @@ def test_lsh_topk_recall(spark, sf_dir):
 
 
 def test_multimodal_features(spark):
-    media = multimodal.fake_media_table(spark, 30)
+    docs = spark.createDataFrame(
+        [(i, "x" * (32 + (i % 5) * 16)) for i in range(30)], "doc_id long, text string"
+    )
+    media = multimodal.media_from_documents(docs)
     out = multimodal.extract_features(media)
     rows = out.collect()
     assert len(rows) == 30
@@ -214,11 +217,51 @@ def test_real_decode_pnm_and_wav():
     assert bands.tolist().index(max(bands)) == 2  # 1 kHz in band [1k,1.5k)
 
 
+def _decodable_media(spark, n):
+    """Media table whose every row carries real decodable content:
+    image rows binary PPM gradients, audio rows PCM WAV sine tones,
+    video rows mp4 containers with deterministic sample payloads."""
+    import numpy as np
+
+    from imcs_spark.pipeline.mp4 import encode_mp4
+
+    rows = []
+    for i in range(n):
+        kind = ("image", "audio", "video")[i % 3]
+        if kind == "image":
+            px = np.add.outer(
+                np.arange(48, dtype=np.uint16) * 2, np.arange(64, dtype=np.uint16)
+            ) % 256
+            pixels = np.stack([px, (px + i) % 256, (px * 2 + i) % 256], axis=2)
+            content = multimodal.encode_ppm(pixels.astype(np.uint8))
+            mime = "image/x-portable-pixmap"
+        elif kind == "audio":
+            t = np.arange(2400) / 8000.0
+            content = multimodal.encode_wav(0.5 * np.sin(2 * np.pi * (200 + 50 * i) * t))
+            mime = "audio/x-wav"
+        else:
+            payloads = [
+                bytes(((i + s + j) % 256) for j in range((i + s) % 40 + 10))
+                for s in range(i % 6 + 2)
+            ]
+            content = encode_mp4(payloads, chunk_split=1 if len(payloads) > 2 else None)
+            mime = "video/mp4"
+        rows.append(
+            (
+                i, kind, content, mime,
+                64 if kind == "image" else None,
+                48 if kind == "image" else None,
+                3000 if kind != "image" else None,
+            )
+        )
+    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+
+
 def test_extract_features_real_decoder(spark):
     """All three modalities decode for real through the distributed
     Arrow path: PPM pixels, WAV samples, and mp4 containers (box tree
     + sample tables resolved to payload-byte stats)."""
-    media = multimodal.fake_media_table(spark, 30, decodable=True)
+    media = _decodable_media(spark, 30)
     rows = multimodal.extract_features(media, use_real_decoder=True).collect()
     assert len(rows) == 30
     for r in rows:
@@ -799,10 +842,12 @@ def test_jpeg_rejects_non_baseline():
     enc[i + 1] = 0xC2
     with pytest.raises(ValueError, match="Ss=Se=0"):
         jpeg.decode_jpeg(bytes(enc))
-    # genuinely unsupported coding: arithmetic (SOF9)
-    enc[i + 1] = 0xC9
-    with pytest.raises(NotImplementedError, match="0xFFC9"):
-        jpeg.decode_jpeg(bytes(enc))
+    # genuinely unsupported frame types: extended sequential (SOF1),
+    # lossless (SOF3) and arithmetic (SOF9)
+    for sof in (0xC1, 0xC3, 0xC9):
+        enc[i + 1] = sof
+        with pytest.raises(NotImplementedError, match="0xFF%02X" % sof):
+            jpeg.decode_jpeg(bytes(enc))
     with pytest.raises(ValueError, match="SOI"):
         jpeg.decode_jpeg(b"\x00\x01\x02")
 
@@ -1155,7 +1200,7 @@ def test_xxh64_sql_kernel_matches_spark(spark):
 
     from pyspark.sql import functions as F
 
-    from imcs_spark.oracle_xxh64 import xxh64_ctes
+    from registry.oracle_xxh64 import xxh64_ctes
 
     strs = ["", "a", "ab", "abc", "abcd", "abcde", "abcdefg", "abcdefgh",
             "hello world", "héllo wörld ünïcode", "x" * 31, "y" * 32,
@@ -1188,7 +1233,7 @@ def test_curation_e2e_plan_shape(spark):
     exchanges allowed are the decontamination gram/hit sides (distinct
     + two broadcasts), ONE dedup window shuffle, the packing window,
     and the final aggregate — and no join may degrade to a cartesian."""
-    from imcs_spark import queries as Q
+    from registry import queries as Q
 
     df = Q.QUERIES["curation_e2e"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1248,110 +1293,6 @@ def test_cluster_split_leakage_safe(spark):
     with _pytest.raises(ValueError, match="exactly one"):
         curate.cluster_split(docs, pairs=pairs, components=comp)
 
-
-
-def test_jpeg_lossless_roundtrip():
-    """SOF3 lossless codec (T.81 Annex H): bit-exact round trips for
-    every predictor, RGB, restart intervals (prediction reset), point
-    transform, and deep precisions (decode reduces by >> (P-8))."""
-    import numpy as np
-
-    from imcs_spark.pipeline import jpeg
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (13, 17)).astype(np.uint8)
-    for p in range(1, 8):
-        out = jpeg.decode_jpeg(jpeg.encode_jpeg_lossless(img, predictor=p))
-        assert np.array_equal(out, img), f"predictor {p}"
-    rgb = rng.randint(0, 256, (9, 11, 3)).astype(np.uint8)
-    assert np.array_equal(
-        jpeg.decode_jpeg(jpeg.encode_jpeg_lossless(rgb, predictor=4)), rgb
-    )
-    assert np.array_equal(
-        jpeg.decode_jpeg(
-            jpeg.encode_jpeg_lossless(img, predictor=5, restart_interval=7)
-        ),
-        img,
-    )
-    deep = rng.randint(0, 1 << 12, (8, 9)).astype(np.int64)
-    assert np.array_equal(
-        jpeg.decode_jpeg(jpeg.encode_jpeg_lossless(deep, predictor=2, precision=12)),
-        (deep >> 4).astype(np.uint8),
-    )
-    deep16 = rng.randint(0, 1 << 16, (6, 7)).astype(np.int64)
-    assert np.array_equal(
-        jpeg.decode_jpeg(jpeg.encode_jpeg_lossless(deep16, predictor=7, precision=16)),
-        (deep16 >> 8).astype(np.uint8),
-    )
-    # point transform: decoder reconstructs (s >> pt) << pt
-    assert np.array_equal(
-        jpeg.decode_jpeg(jpeg.encode_jpeg_lossless(img, point_transform=2)),
-        (img >> 2) << 2,
-    )
-    # worst-case diff alternation (0 <-> max) exercises the big
-    # category + mod-2^16 paths
-    stripes = np.zeros((4, 8), np.int64)
-    stripes[:, 1::2] = (1 << 16) - 1
-    assert np.array_equal(
-        jpeg.decode_jpeg(jpeg.encode_jpeg_lossless(stripes, precision=16)),
-        (stripes >> 8).astype(np.uint8),
-    )
-    # guards
-    with pytest.raises(ValueError, match="predictor"):
-        jpeg.encode_jpeg_lossless(img, predictor=0)
-    with pytest.raises(ValueError, match="range"):
-        jpeg.encode_jpeg_lossless(deep)  # 12-bit values at default P=8
-
-
-def test_jpeg_12bit_extended_sequential():
-    """12-bit extended-sequential (SOF1) decode with a 16-bit DQT: a
-    hand-built DC-only stream decodes to blockwise-constant pixels in
-    closed form (DC/8 + 2048, clipped to 12 bits, reduced >> 4)."""
-    import struct
-
-    import numpy as np
-
-    from imcs_spark.pipeline import jpeg
-
-    targets = [0, 1024, 2048, 4095]  # 12-bit block values
-    dcs = [8 * (v - 2048) for v in targets]
-    dqt = bytes([0x10]) + b"".join(struct.pack(">H", 1) for _ in range(64))
-    dht_dc = bytes([0x00] + jpeg._LL_BITS + jpeg._LL_VALUES)
-    ac_bits = [1] + [0] * 15
-    dht_ac = bytes([0x10] + ac_bits + [0x00])
-    out = bytearray(b"\xff\xd8")
-    out += jpeg._seg(0xDB, dqt)
-    out += jpeg._seg(0xC4, dht_dc)
-    out += jpeg._seg(0xC4, dht_ac)
-    out += jpeg._seg(0xC1, struct.pack(">BHHB", 12, 8, 32, 1) + bytes([1, 0x11, 0]))
-    out += jpeg._seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    bw = jpeg._BitWriter()
-    dc_codes = jpeg._canonical_codes(jpeg._LL_BITS, jpeg._LL_VALUES)
-    ac_codes = jpeg._canonical_codes(ac_bits, [0x00])
-    pred = 0
-    for dc in dcs:
-        ssss, amp = jpeg._magnitude(dc - pred)
-        c, ln = dc_codes[ssss]
-        bw.write(c, ln)
-        if ssss:
-            bw.write(amp, ssss)
-        pred = dc
-        c, ln = ac_codes[0x00]
-        bw.write(c, ln)  # EOB
-    out += bw.flush()
-    out += b"\xff\xd9"
-    px = jpeg.decode_jpeg(bytes(out))
-    assert px.shape == (8, 32)
-    for b, v in enumerate(targets):
-        block = px[:, 8 * b : 8 * (b + 1)]
-        assert (block == (v >> 4)).all(), (b, v, block[0, 0])
-    # 12-bit is extended-sequential only: the same stream as SOF0 is
-    # refused (baseline is 8-bit by definition)
-    i = bytes(out).find(b"\xff\xc1")
-    bad = bytearray(out)
-    bad[i + 1] = 0xC0
-    with pytest.raises(NotImplementedError, match="12-bit"):
-        jpeg.decode_jpeg(bytes(bad))
 
 
 def test_deterministic_sampling(spark):
@@ -1460,42 +1401,6 @@ def test_quantize_embeddings_roundtrip(spark):
         for r in S.brute_force_topk(dq, dqq, k=3).collect()
     }
     assert got == exact
-
-
-def test_jpeg_lossless_fuzz_soak():
-    """Seeded fuzz over the lossless codec's parameter space: random
-    shapes x predictors x precisions x restart intervals x point
-    transforms, every trip bit-exact (after the documented pt / deep-
-    precision reductions)."""
-    import numpy as np
-
-    from imcs_spark.pipeline import jpeg
-
-    rng = np.random.RandomState(17)
-    for trial in range(40):
-        h = int(rng.randint(1, 24))
-        w = int(rng.randint(1, 24))
-        ncomp = int(rng.choice([1, 3]))
-        precision = int(rng.choice([2, 4, 8, 8, 8, 12, 16]))
-        predictor = int(rng.randint(1, 8))
-        pt = int(rng.randint(0, min(3, precision)))
-        ri = int(rng.choice([0, 0, 1, 3, 5, 11]))
-        shape = (h, w) if ncomp == 1 else (h, w, 3)
-        img = rng.randint(0, 1 << precision, shape).astype(np.int64)
-        enc = jpeg.encode_jpeg_lossless(
-            img, predictor=predictor, point_transform=pt,
-            precision=precision, restart_interval=ri,
-        )
-        got = jpeg.decode_jpeg(enc)
-        want = (img >> pt) << pt
-        if precision > 8:
-            want = want >> (precision - 8)
-        elif precision < 8:
-            want = want << (8 - precision)
-        want = np.clip(want, 0, 255).astype(np.uint8)
-        assert np.array_equal(got, want), (
-            trial, h, w, ncomp, precision, predictor, pt, ri,
-        )
 
 
 def test_rank_threshold_sampling_matches_topn(spark):
@@ -1690,7 +1595,7 @@ def test_ivf_index_and_serve_match_duckdb_twin(spark, sf_dir):
     and the masked ivf_topk serve returns the same ranked ids, as the
     DuckDB twin (oracle_ivf.ivf_ctes: iv_asg* cell map, iv_cand
     re-rank) for the same bit-identical sequential centroids."""
-    from imcs_spark.oracle_ivf import ivf_ctes
+    from registry.oracle_ivf import ivf_ctes
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1745,7 +1650,7 @@ def test_ivf_sequential_centroids_bit_equal_duckdb(spark, sf_dir):
 
     import duckdb
 
-    from imcs_spark.oracle_ivf import ivf_centroids_sql
+    from registry.oracle_ivf import ivf_centroids_sql
     from imcs_spark.pipeline import similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1775,7 +1680,7 @@ def test_pq_sequential_codebooks_bit_equal_duckdb(spark, sf_dir):
 
     import duckdb
 
-    from imcs_spark.oracle_pq import pq_codebooks_sql
+    from registry.oracle_pq import pq_codebooks_sql
     from imcs_spark.pipeline import similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1801,7 +1706,7 @@ def test_pq_encode_matches_duckdb_twin(spark, sf_dir):
     same code arrays as the DuckDB twin (oracle_pq.pq_ctes: pq_a*) for
     the same bit-identical sequential codebooks — the ivf_index cell
     map pin applied to PQ."""
-    from imcs_spark.oracle_pq import pq_ctes
+    from registry.oracle_pq import pq_ctes
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1858,7 +1763,7 @@ def test_pq_topk_matches_duckdb_twin(spark, sf_dir):
     ranked ids as the DuckDB twin (oracle_pq.pq_ctes) for the same
     codebooks: the ADC top-k without rerank (pq_score), and the
     post-rerank ranking with it (pq_rr)."""
-    from imcs_spark.oracle_pq import pq_ctes
+    from registry.oracle_pq import pq_ctes
     from imcs_spark.pipeline import similarity as S
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2130,6 +2035,53 @@ def test_pq_ram_resident_brute_fallback(spark, sf_dir):
     finally:
         enc.unpersist()
         corpus.unpersist()
+
+
+def test_pq_topk_cell_pruned_serve_leaves_nothing_cached(spark, sf_dir):
+    """The cell-pruned rerank (codes and rerank corpus both carry
+    `cell`) reads its candidates once for the probed-cell list and the
+    fetch join's broadcast side. It must not leave them cached: a
+    second identical serve would otherwise reuse the first serve's
+    candidates instead of scanning the codes again. Pruning is exact,
+    so the answer equals the unpruned rerank's."""
+    from conftest import completed_tasks
+
+    from imcs_spark.pipeline import similarity as S
+    from imcs_spark.table import Engine
+
+    # the >= -2 filter gives this read a logical plan no other test's
+    # cached read shares
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") >= -2
+    )
+    books = S.train_pq_codebooks(corpus, m=2, n_codes=4, iters=1)
+    cells = corpus.select("vec_id", (F.col("vec_id") % 5).alias("cell"))
+    enc = S.pq_encode(corpus, books).join(cells, "vec_id")
+    bycell = corpus.join(cells, "vec_id")
+    queries = corpus.limit(3).selectExpr("vec_id AS query_id", "embedding")
+
+    def serve(codes, rerank):
+        return {
+            (r.query_id, r.rank): r.vec_id
+            for r in S.pq_topk(
+                codes, queries, books, k=5, rerank=rerank, rerank_factor=2,
+                brute_fallback=False,
+            ).collect()
+        }
+
+    eng = Engine(spark)
+    cached_before = len(eng.stats()["cached_rdds"])
+    runs, answers = [], []
+    for i in range(2):
+        runs.append(
+            completed_tasks(
+                spark, lambda: answers.append(serve(enc, bycell)),
+                group=f"pq-pruned-serve-{i}",
+            )
+        )
+    assert len(eng.stats()["cached_rdds"]) == cached_before
+    assert runs[1] == runs[0], runs
+    assert answers[0] == answers[1] == serve(enc.drop("cell"), bycell)
 
 
 def test_pii_screens_are_necessary_conditions():

@@ -320,78 +320,6 @@ def test_streaming_append_replay_uses_pre_snapshot(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_sessionize_stream_stateful(spark):
-    """applyInPandasWithState sessionizer: sessions survive across
-    micro-batches in keyed state, close on gap (mid-batch AND
-    cross-batch), and the event-time timeout flushes an idle open
-    session once the watermark passes."""
-    import json
-    import time as _time
-
-    from imcs_spark.streaming import sessionize_stream
-
-    tmp = tempfile.mkdtemp(prefix="imcs_sess_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    name = f"sess_{int(_time.time() * 1000)}"
-
-    def feed(fname, rows):
-        p = os.path.join(src, fname)
-        with open(p + ".tmp", "w") as f:
-            for uid, ts in rows:
-                f.write(json.dumps({"user_id": uid, "ts": ts}) + "\n")
-        os.rename(p + ".tmp", p)
-
-    try:
-        # user 1: two events 10s apart (one session), then a mid-batch
-        # gap >60s opens a second session. user 2: one event.
-        feed("b1.json", [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:00:10"),
-                         (1, "2024-01-01 10:02:00"), (2, "2024-01-01 10:00:30")])
-        stream = spark.readStream.schema("user_id long, ts timestamp").json(src)
-        sess = sessionize_stream(stream, "ts", "user_id",
-                                 gap_seconds=60, watermark="0 seconds")
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        # batch 2: user 1 continues the OPEN session (state carried
-        # across batches); user 2's session stays open.
-        feed("b2.json", [(1, "2024-01-01 10:02:30")])
-        q.processAllAvailable()
-        # batch 3: user 2's event arrives PAST the gap from their open
-        # session — the cross-batch-gap close path (regression: this
-        # used to also emit a phantom 0-event session). Also advances
-        # event time past user 1's open session + gap -> timeout flush.
-        feed("b3.json", [(2, "2024-01-01 11:00:00")])
-        q.processAllAvailable()
-        feed("b4.json", [(3, "2024-01-01 12:00:00")])
-        q.processAllAvailable()
-        q.stop()
-        rows = spark.sql(f"select * from {name}").collect()
-        got = {
-            (r["user_id"], str(r["session_start"])): (str(r["session_end"]), r["n_events"])
-            for r in rows
-        }
-        # user 1 session A: closed by the mid-batch gap in b1
-        assert got[(1, "2024-01-01 10:00:00")] == ("2024-01-01 10:00:10", 2), got
-        # user 1 session B: extended in b2 (cross-batch state), closed by timeout
-        assert got[(1, "2024-01-01 10:02:00")] == ("2024-01-01 10:02:30", 2), got
-        # user 2 session A: closed by the CROSS-BATCH gap in b3
-        assert got[(2, "2024-01-01 10:00:30")] == ("2024-01-01 10:00:30", 1), got
-        # user 2 session B: opened by b3's event, closed by timeout after b4
-        assert got[(2, "2024-01-01 11:00:00")] == ("2024-01-01 11:00:00", 1), got
-        # no phantom sessions: every emitted session has >= 1 event,
-        # and exactly the four closed sessions above were emitted
-        # (user 3's session is still open at stop, so never emitted)
-        assert all(r["n_events"] >= 1 for r in rows), rows
-        assert len(rows) == 4, rows
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_dedup_stream_drops_cross_batch_duplicates(spark):
     """Streaming exact dedup: duplicate content arriving in a LATER
     micro-batch (within the watermark) is dropped; novel content
@@ -493,14 +421,14 @@ def test_sessionize_stream_native_boundaries(spark):
 
 
 def test_sessionize_stream_late_event_keeps_boundaries(spark):
-    """A late-but-in-watermark event that sorts BEFORE the stored
-    session must extend session_start backwards and must NOT regress
-    the stored end/timeout (which used to close the session early with
-    session_end = the late timestamp)."""
+    """A late-but-in-watermark event that sorts BEFORE a session held
+    in state must extend session_start backwards and must NOT regress
+    the session's end: the session is emitted once, with both events,
+    after the watermark passes it."""
     import json
     import time as _time
 
-    from imcs_spark.streaming import sessionize_stream
+    from imcs_spark.streaming import sessionize_stream_native
 
     tmp = tempfile.mkdtemp(prefix="imcs_sess_late_")
     src = os.path.join(tmp, "in")
@@ -517,8 +445,8 @@ def test_sessionize_stream_late_event_keeps_boundaries(spark):
     try:
         feed("b1.json", [(1, "2024-01-01 10:00:00")])
         stream = spark.readStream.schema("user_id long, ts timestamp").json(src)
-        sess = sessionize_stream(stream, "ts", "user_id",
-                                 gap_seconds=60, watermark="30 minutes")
+        sess = sessionize_stream_native(stream, "ts", "user_id",
+                                        gap_seconds=60, watermark="30 minutes")
         q = (
             sess.writeStream.format("memory")
             .queryName(name)
@@ -530,8 +458,8 @@ def test_sessionize_stream_late_event_keeps_boundaries(spark):
         # within gap): extends the session backwards
         feed("b2.json", [(1, "2024-01-01 09:59:30")])
         q.processAllAvailable()
-        # advance event time far enough that watermark (max - 30min)
-        # passes the session timeout (end + 60s)
+        # advance event time far enough that the watermark (max -
+        # 30min) passes the session's end + 60s
         feed("b3.json", [(9, "2024-01-01 12:00:00")])
         q.processAllAvailable()
         feed("b4.json", [(9, "2024-01-01 13:00:00")])
@@ -550,12 +478,12 @@ def test_sessionize_stream_late_event_keeps_boundaries(spark):
 
 def test_sessionize_stream_late_event_beyond_gap_is_own_session(spark):
     """A late in-watermark event arriving more than a gap BEFORE the
-    stored session must form its OWN earlier session (the old end-only
-    comparison merged it unconditionally into one wrong span)."""
+    sessions held in state must form its OWN earlier session, not be
+    merged into one span with them."""
     import json
     import time as _time
 
-    from imcs_spark.streaming import sessionize_stream
+    from imcs_spark.streaming import sessionize_stream_native
 
     tmp = tempfile.mkdtemp(prefix="imcs_sess_late2_")
     src = os.path.join(tmp, "in")
@@ -572,8 +500,8 @@ def test_sessionize_stream_late_event_beyond_gap_is_own_session(spark):
     try:
         feed("b1.json", [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:10:00")])
         stream = spark.readStream.schema("user_id long, ts timestamp").json(src)
-        sess = sessionize_stream(stream, "ts", "user_id",
-                                 gap_seconds=60, watermark="2 hours")
+        sess = sessionize_stream_native(stream, "ts", "user_id",
+                                        gap_seconds=60, watermark="2 hours")
         q = (
             sess.writeStream.format("memory")
             .queryName(name)
@@ -581,13 +509,13 @@ def test_sessionize_stream_late_event_beyond_gap_is_own_session(spark):
             .start()
         )
         q.processAllAvailable()
-        # b1 formed two sessions (10:00 and 10:10 are > 60s apart); the
-        # 10:00 one closed, 10:10 stays open. Now a late event one hour
-        # earlier (in the 2h watermark) must be ITS OWN closed session,
-        # not a merge into [09:00, 10:10].
+        # b1 formed two sessions (10:00 and 10:10 are > 60s apart),
+        # both held in state. Now a late event one hour earlier (in the
+        # 2h watermark) must be ITS OWN session, not a merge into
+        # [09:00, 10:10].
         feed("b2.json", [(1, "2024-01-01 09:00:00")])
         q.processAllAvailable()
-        # flush the open session via timeout
+        # advance the watermark past all three sessions
         feed("b3.json", [(9, "2024-01-01 15:00:00")])
         q.processAllAvailable()
         feed("b4.json", [(9, "2024-01-01 16:00:00")])
@@ -604,16 +532,6 @@ def test_sessionize_stream_late_event_beyond_gap_is_own_session(spark):
         }, got
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_sessionize_stream_rejects_string_key(spark):
-    from imcs_spark.streaming import sessionize_stream
-
-    stream = spark.readStream.schema("user_id string, ts timestamp").format("rate").load() \
-        if False else None
-    df = spark.createDataFrame([], "user_id string, ts timestamp")
-    with pytest.raises(TypeError, match="integer type"):
-        sessionize_stream(df, "ts", "user_id")
 
 
 def test_streaming_near_dedup(spark):
@@ -1155,7 +1073,7 @@ def test_near_dedup_stream_query_leg(spark, sf_dir):
     subset reproducible from the artifact cache. Full cross-engine
     value verification runs in the driver against the DuckDB minhash
     twin (oracle_minhash.minhash_kept_ctes)."""
-    from imcs_spark.queries import QUERIES
+    from registry.queries import QUERIES
 
     df = QUERIES["near_dedup_stream"](spark, sf_dir)
     kept = {r["doc_id"] for r in df.collect()}

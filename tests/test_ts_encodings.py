@@ -12,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from imcs_spark.queries import _normalize_event_ts
+from registry.queries import _normalize_event_ts
 from imcs_spark.series import sessionize
 
 # Three events, gaps 30 min then 2 h: sessions (0, 0, 1) at gap=3600 s.

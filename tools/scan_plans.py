@@ -124,7 +124,7 @@ def main() -> int:
         # for the rest of the audit session.
         from pyspark.sql import DataFrame as _DF
 
-        from imcs_spark import queries as _queries
+        from registry import queries as _queries
 
         for _v in _queries._ARTIFACTS.values():
             for _item in (_v if isinstance(_v, (tuple, list)) else (_v,)):

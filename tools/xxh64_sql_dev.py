@@ -1,5 +1,5 @@
 """Dev harness: validate the production DuckDB-SQL XXH64 kernel
-(imcs_spark/oracle_xxh64.py — Spark's xxhash64: seed 42 over UTF-8
+(registry/oracle_xxh64.py — Spark's xxhash64: seed 42 over UTF-8
 bytes, standard XXH64) bit-for-bit against a pure-Python XXH64 model.
 
 The harness IMPORTS the production generator so every run exercises
@@ -15,7 +15,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from imcs_spark.oracle_xxh64 import SEED, xxh64_ctes  # noqa: E402
+from registry.oracle_xxh64 import SEED, xxh64_ctes  # noqa: E402
 
 M = 1 << 64
 P1 = 0x9E3779B185EBCA87
