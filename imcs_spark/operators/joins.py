@@ -46,7 +46,6 @@ def join_pos(
     right: DataFrame,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_join_pos (op `<->`): positions in sorted right whose value
     equals some element of sorted left. Sort-merge/broadcast semi-join;
@@ -55,7 +54,7 @@ def join_pos(
     probe = left.select(*keys, val_col).distinct()
     matched = right.join(probe, on=keys + [val_col], how="left_semi")
     out = matched.select(*keys, F.col(POS).cast("long").alias(VAL))
-    return renumber(out, keys or None, order_by=(VAL,), bounded=bounded)
+    return renumber(out, keys or None, order_by=(VAL,))
 
 
 def join_values(
@@ -64,12 +63,11 @@ def join_values(
     values: DataFrame,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_join: values from `values` at the positions where right
     matches left (values is aligned to right by pos)."""
     keys = [*partition_by] if partition_by else []
-    pos_frame = join_pos(left, right, val_col, partition_by, bounded=bounded)
+    pos_frame = join_pos(left, right, val_col, partition_by)
     vals = values.select(*keys, POS, F.col(val_col).alias("_v"))
     out = pos_frame.join(
         vals.withColumnRenamed(POS, VAL), on=keys + [VAL], how="inner"
@@ -117,8 +115,6 @@ def asof_join(
     direction: str = "nearest",
     strict: bool = False,
     filler=None,
-    bounded: bool = False,
-    cache_out: list | None = None,
     tolerance=None,
 ) -> DataFrame:
     """As-of join via union + one window pass.
@@ -130,10 +126,7 @@ def asof_join(
                    (reference cs_asof_join rule, func.c:4549-4551:
                    pick prev when x-prev ≤ next-x)
     Right columns arrive suffixed only on collision. `filler` replaces
-    nulls where no match exists (used by stretch). `cache_out` (a list)
-    receives any frame the global path persists, for callers that want
-    to unpersist after their downstream action (see
-    series.zip_with_global_pos_and_total for the convention).
+    nulls where no match exists (used by stretch).
     `tolerance` (beyond the reference; pandas merge_asof parity)
     rejects a match whose |left ts − matched ts| exceeds it — the row
     then counts as unmatched (NULL, or `filler`). Pass a number for
@@ -145,8 +138,6 @@ def asof_join(
         left, right, on, by, right_cols,
         equal_goes_to_right_first=not (direction == "backward" and strict)
         and not (direction == "forward" and not strict),
-        bounded=bounded,
-        cache_out=cache_out,
     )
     out, chosen, mts = _directional_values(out, direction, payload)
     ok = _within_tolerance(mts, tolerance)
@@ -174,8 +165,6 @@ def asof_join_multi(
     directions: Sequence[str] = ("backward", "nearest"),
     strict: bool = False,
     filler=None,
-    bounded: bool = False,
-    cache_out: list | None = None,
     tolerance=None,
 ) -> DataFrame:
     """Multi-direction as-of join in ONE union + window pass.
@@ -213,8 +202,6 @@ def asof_join_multi(
     out, keys, lmark, payload = _asof_fill(
         left, right, on, by, right_cols,
         equal_goes_to_right_first=orderings.pop(),
-        bounded=bounded,
-        cache_out=cache_out,
     )
     used_nearest = False
     taken: set[str] = set(left.columns)  # output names must not clash with
@@ -255,8 +242,6 @@ def _asof_fill(
     by: Sequence[str] | None,
     right_cols: Sequence[str] | None,
     equal_goes_to_right_first: bool,
-    bounded: bool = False,
-    cache_out: list | None = None,
 ):
     """Shared core of the as-of family: tag + union both sides, then
     carry the nearest right ROW backward (``_browc``) and forward
@@ -292,25 +277,24 @@ def _asof_fill(
             ),
         ),
     )
-    if keys or bounded:
-        # bounded=True is the package-wide small-frame hint (literal
-        # vectors, bounded slices): one window over one partition is
-        # cheaper there than the range-partition + carry jobs below,
-        # which cost a fixed ~0.3-0.5 s of shuffle machinery per call
-        w = (
-            Window.partitionBy(*keys).orderBy(*order_cols)
-            if keys
-            else Window.orderBy(*order_cols)
-        )
-        out = out.withColumn(
-            "_browc",
-            F.last("_rrow", ignorenulls=True).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        ).withColumn("_frowc", _forward_carry(keys, order_cols))
+    if keys:
+        out = _window_carry(out, keys, order_cols)
     else:
-        out = _global_asof_carry(out, order_cols, cache_out=cache_out)
+        out = _global_asof_carry(out, order_cols)
     return out, keys, lmark, payload
+
+
+def _window_carry(out: DataFrame, keys: Sequence[str], order_cols: Sequence[str]) -> DataFrame:
+    """Backward (``_browc``) and forward (``_frowc``) right-row carries
+    as running windows per ``keys`` partition — one window over the
+    whole frame when ``keys`` is empty."""
+    w = Window.partitionBy(*keys).orderBy(*order_cols)
+    return out.withColumn(
+        "_browc",
+        F.last("_rrow", ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    ).withColumn("_frowc", _forward_carry(keys, order_cols))
 
 
 def _forward_carry(keys: Sequence[str], order_cols: Sequence[str]) -> F.Column:
@@ -325,7 +309,7 @@ def _forward_carry(keys: Sequence[str], order_cols: Sequence[str]) -> F.Column:
     because desc_nulls_last is the exact reversal of the asc_nulls_first
     total order and the frame still includes the current row)."""
     rev = [F.col(c).desc() for c in order_cols]
-    w = Window.partitionBy(*keys).orderBy(*rev) if keys else Window.orderBy(*rev)
+    w = Window.partitionBy(*keys).orderBy(*rev)
     return F.last("_rrow", ignorenulls=True).over(
         w.rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -380,9 +364,7 @@ def _directional_values(out: DataFrame, direction: str, payload: list[str]):
     }, F.when(prefer_back, F.col("_bts")).otherwise(F.col("_fts"))
 
 
-def _global_asof_carry(
-    out: DataFrame, order_cols: Sequence[str], cache_out: list | None = None
-) -> DataFrame:
+def _global_asof_carry(out: DataFrame, order_cols: Sequence[str]) -> DataFrame:
     """Scalable GLOBAL as-of carries (no by-keys): Window.orderBy with
     no partitioning executes as Exchange SinglePartition — the whole
     union through ONE task, the exact hazard every other global
@@ -400,20 +382,7 @@ def _global_asof_carry(
     end and could not exist at a scale where the union exceeds the
     cache). Bounds use the (ts, side) prefix only: rows tied on the
     full order key share a (ts, side) value and therefore a bucket,
-    so bucket ranges still respect the total order. ``cache_out`` is
-    a DEPRECATED no-op retained for API compatibility; passing it
-    warns."""
-    if cache_out is not None:
-        import warnings
-
-        warnings.warn(
-            "_global_asof_carry: `cache_out` is a deprecated no-op "
-            "(nothing is cached since the literal range-bucket "
-            "redesign); stop passing it",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-    del cache_out  # compat no-op — nothing is cached any more
+    so bucket ranges still respect the total order."""
     from ..series import is_small_plan, range_bucket_expr
 
     ocols = [F.col(c) for c in order_cols]
@@ -421,13 +390,7 @@ def _global_asof_carry(
         # fits one task: a plain global window beats paying the probe
         # + bounds job floors (Catalyst estimates err large, so only
         # genuinely small unions take this branch)
-        w = Window.orderBy(*order_cols)
-        return out.withColumn(
-            "_browc",
-            F.last("_rrow", ignorenulls=True).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        ).withColumn("_frowc", _forward_carry([], order_cols))
+        return _window_carry(out, [], order_cols)
     pid_expr, _n = range_bucket_expr(out, ["_ts", "_side"])
     part = out.withColumn("_pid", pid_expr)
     ordkey = F.when(F.col("_rrow").isNotNull(), F.struct(*ocols))
@@ -444,18 +407,15 @@ def _global_asof_carry(
         F.last("_plast", ignorenulls=True).over(wprev).alias("_carry_b"),
         F.first("_pfirst", ignorenulls=True).over(wnext).alias("_carry_f"),
     )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local_b = F.last("_rrow", ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
+    # bucket-local running carries; the forward one is the reversed
+    # running frame, never first() over unboundedFollowing — the _pid
+    # partitions are data-sized and that frame is O(n²) per partition
+    local = _window_carry(
+        part.join(F.broadcast(carries), "_pid", "left"), ["_pid"], order_cols
     )
-    # reversed running frame, NOT first() over unboundedFollowing —
-    # the _pid partitions are data-sized (millions of rows) and the
-    # following-frame evaluation is O(n²) per partition (_forward_carry)
-    local_f = _forward_carry(["_pid"], order_cols)
     return (
-        part.join(F.broadcast(carries), "_pid", "left")
-        .withColumn("_browc", F.coalesce(local_b, F.col("_carry_b")))
-        .withColumn("_frowc", F.coalesce(local_f, F.col("_carry_f")))
+        local.withColumn("_browc", F.coalesce("_browc", "_carry_b"))
+        .withColumn("_frowc", F.coalesce("_frowc", "_carry_f"))
         .drop("_pid", "_carry_b", "_carry_f")
     )
 
@@ -465,8 +425,6 @@ def asof_join_pos(
     right: DataFrame,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """cs_asof_join_pos (op `->`): position in right of the nearest
     element for each left value; ties to the earlier one. Output pos
@@ -476,7 +434,7 @@ def asof_join_pos(
     l = left.select(*keys, POS, val_col)
     joined = asof_join(
         l, r, on=val_col, by=keys or None, right_cols=["rpos"],
-        direction="nearest", bounded=bounded, cache_out=cache_out,
+        direction="nearest",
     )
     return joined.select(*keys, POS, F.col("rpos").cast("long").alias(VAL))
 
@@ -487,15 +445,11 @@ def asof_join_values(
     values: DataFrame,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """cs_asof_join: values (aligned to right by pos) at the nearest
     match."""
     keys = [*partition_by] if partition_by else []
-    pos_frame = asof_join_pos(
-        left, right, val_col, partition_by, bounded=bounded, cache_out=cache_out
-    )
+    pos_frame = asof_join_pos(left, right, val_col, partition_by)
     vals = values.select(*keys, F.col(POS).alias(VAL), F.col(val_col).alias("_v"))
     out = pos_frame.join(vals, on=keys + [VAL], how="inner")
     return out.select(*keys, POS, F.col("_v").alias(val_col))
@@ -508,8 +462,6 @@ def table_join(
     direction: int = 0,
     by: Sequence[str] | None = None,
     right_cols: Sequence[str] | None = None,
-    bounded: bool = False,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """TABLE_join (imcs--1.1.sql:334-347, func.c:6494-6553): join an
     unsorted probe against the stored sorted timestamp column;
@@ -523,8 +475,7 @@ def table_join(
         return left.join(sel, on=([*by] if by else []) + [on], how="inner")
     d = "backward" if direction < 0 else "forward"
     return asof_join(
-        left, right, on=on, by=by, right_cols=right_cols, direction=d,
-        bounded=bounded, cache_out=cache_out,
+        left, right, on=on, by=by, right_cols=right_cols, direction=d
     )
 
 
@@ -535,8 +486,6 @@ def stretch(
     filler,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """cs_stretch: map each left timestamp to the value attached to the
     first right timestamp strictly greater than it; filler past the
@@ -555,8 +504,6 @@ def stretch(
         right_cols=["_sval"],
         direction="forward",
         strict=True,
-        bounded=bounded,
-        cache_out=cache_out,
     )
     return out.select(
         *keys, POS, F.coalesce(F.col("_sval"), F.lit(filler)).alias(val_col)
@@ -683,7 +630,6 @@ def stretch0(
     filler,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_stretch0 (func.c:4393-4498): full ordered merge of the two
     timelines — right-side timestamps emit their value (consuming a
@@ -723,7 +669,7 @@ def stretch0(
         F.coalesce(F.col("_sval"), F.lit(filler)).alias(val_col),
     )
     return renumber(
-        out, keys or None, order_by=("_order_ts", "_tie", "_dup"), bounded=bounded
+        out, keys or None, order_by=("_order_ts", "_tie", "_dup")
     ).drop("_order_ts", "_tie", "_dup")
 
 
@@ -732,15 +678,15 @@ def union_merge(
     b: DataFrame,
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_union: order-preserving multiset merge of two sorted
-    sequences — distributed union + range-partitioned sort (the global
-    path renumbers through zip_with_global_pos: range shuffle +
-    broadcast offsets, never a single-partition window)."""
+    sequences — distributed union + renumber by value (the global path
+    renumbers through zip_with_global_pos: one window when the union
+    is small, else literal range buckets + a literal offset array,
+    never a single-partition window over a large frame)."""
     keys = [*partition_by] if partition_by else []
     u = a.select(*keys, val_col).unionByName(b.select(*keys, val_col))
-    return renumber(u, keys or None, order_by=(val_col,), bounded=bounded)
+    return renumber(u, keys or None, order_by=(val_col,))
 
 
 def salted_join(

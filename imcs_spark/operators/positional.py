@@ -23,7 +23,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..series import POS, VAL, with_pos, zip_with_global_pos
+from ..series import POS, VAL, is_small_plan, with_pos, zip_with_global_pos
 
 
 def _w(partition_by: Sequence[str] | None, order_by=(POS,)):
@@ -37,21 +37,17 @@ def renumber(
     partition_by: Sequence[str] | None = None,
     order_by: Sequence[str] = (POS,),
     pos_col: str = POS,
-    bounded: bool = False,
 ) -> DataFrame:
     """Re-densify positions after a subsequence selection.
 
-    With ``partition_by`` this is a per-series window (parallel). For a
-    single global series the default is the distributed two-pass zip
-    (range-partitioned sort + broadcast offsets — no single-partition
-    window); pass ``bounded=True`` only for frames known to be small
-    (literal vectors, bounded slices), where one window over one
-    partition is cheaper than a second job.
+    With ``partition_by`` this is a per-series window (parallel). A
+    single global series goes through :func:`zip_with_global_pos`,
+    which picks its own plan: one window over one partition when the
+    frame is small (literal vectors, bounded slices), otherwise
+    literal range buckets, a bucket-local ``row_number`` and a literal
+    offset array — never a single-partition window over a large frame.
     """
-    if partition_by or bounded:
-        # the dense-position spine expression lives ONCE in
-        # series.with_pos (three drifting copies of the row_number
-        # convention was a maintenance hazard)
+    if partition_by:
         return with_pos(df, list(order_by), partition_by, pos_col)
     return zip_with_global_pos(df, list(order_by), pos_col=pos_col)
 
@@ -69,12 +65,11 @@ def filter_(
     cond: Column,
     partition_by: Sequence[str] | None = None,
     renum: bool = True,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_filter (SQL op `?`): keep rows where cond holds. Predicate is
     pushed into the scan by Catalyst when cond references base columns."""
     out = df.filter(cond)
-    return renumber(out, partition_by, bounded=bounded) if renum else out
+    return renumber(out, partition_by) if renum else out
 
 
 def filter_pos(
@@ -82,13 +77,12 @@ def filter_pos(
     cond: Column,
     partition_by: Sequence[str] | None = None,
     pos_col: str = POS,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_filter_pos: original positions where cond holds, as a new
     series (pos, val=original position)."""
     keep = ([*partition_by] if partition_by else []) + [pos_col]
     out = df.filter(cond).select(*keep).withColumnRenamed(pos_col, VAL)
-    return renumber(out, partition_by, order_by=(VAL,), bounded=bounded)
+    return renumber(out, partition_by, order_by=(VAL,))
 
 
 def filter_first_pos(
@@ -97,13 +91,12 @@ def filter_first_pos(
     n: int,
     partition_by: Sequence[str] | None = None,
     pos_col: str = POS,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_filter_first_pos: first n matching positions per series.
     The reference parallelizes this with a position-ordered merge
     (func.c:2931-2980); here row_number + filter — Catalyst executes it
     as a rank-limit per partition."""
-    out = filter_pos(df, cond, partition_by, bounded=bounded)
+    out = filter_pos(df, cond, partition_by)
     return out.filter(F.col(POS) < n)
 
 
@@ -113,11 +106,10 @@ def thin(
     step: int,
     partition_by: Sequence[str] | None = None,
     pos_col: str = POS,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_thin: every step-th element starting at origin."""
     out = df.filter(((F.col(pos_col) - origin) % step == 0) & (F.col(pos_col) >= origin))
-    return renumber(out, partition_by, bounded=bounded)
+    return renumber(out, partition_by)
 
 
 def unique(
@@ -125,29 +117,29 @@ def unique(
     val_col: str = VAL,
     partition_by: Sequence[str] | None = None,
     pos_col: str = POS,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_unique: collapse *adjacent* duplicates (NOT distinct —
     reference semantics, func.c:3737-3856).
 
-    Per-series (partition_by) and bounded frames use a lag window. The
-    unbounded-global path exploits the dense-pos convention instead:
-    the previous element of row p is the row at p-1, so adjacent-lag is
-    a hash equi-join on pos — fully parallel, no global window."""
+    Per-series (partition_by) and small global frames
+    (series.is_small_plan) use a lag window. A large global series
+    exploits the dense-pos convention instead: the previous element of
+    row p is the row at p-1, so adjacent-lag is a hash equi-join on
+    pos — fully parallel, no global window."""
     # NULL-safe adjacency: `val != prev` under three-valued logic both
     # DROPS a NULL that follows a value (NULL != x is NULL -> filtered)
     # and KEEPS adjacent NULL duplicates (prev.isNull() conflated
     # "first row" with "previous value is NULL"). Compare with
     # eqNullSafe and detect the first row explicitly — the same
     # pattern series.run_id uses for this hazard.
-    if partition_by or bounded:
+    if partition_by or is_small_plan(df):
         w = _w(partition_by, (pos_col,))
         prev = F.lag(F.col(val_col)).over(w)
         first = F.lag(F.lit(1)).over(w).isNull()
         out = df.withColumn("_keep", first | ~F.col(val_col).eqNullSafe(prev)).filter(
             F.col("_keep")
         ).drop("_keep")
-        return renumber(out, partition_by, bounded=bounded)
+        return renumber(out, partition_by)
     prev_src = df.select(
         (F.col(pos_col) + 1).alias(pos_col),
         F.col(val_col).alias("_prev"),
@@ -224,7 +216,6 @@ def limit(
     partition_by: Sequence[str] | None = None,
     pos_col: str = POS,
     total: int | None = None,
-    bounded: bool = False,
 ) -> DataFrame:
     """cs_limit / << / >>: positional subsequence, negatives from the
     end (imcs.c:3154-3175). Negative bounds need the series length —
@@ -247,30 +238,30 @@ def limit(
         out = out.filter(F.col(pos_col) <= hi)
     if "_cnt" in out.columns:
         out = out.drop("_cnt")
-    return renumber(out, partition_by, bounded=bounded)
+    return renumber(out, partition_by)
 
 
-def head(df: DataFrame, n: int, partition_by=None, bounded: bool = False) -> DataFrame:
+def head(df: DataFrame, n: int, partition_by=None) -> DataFrame:
     # n=0 must be EMPTY: mapping it through till_pos = -1 would hit the
     # negative-from-end convention and return the whole frame
     if n <= 0:
-        return renumber(df.limit(0), partition_by, bounded=bounded)
-    return limit(df, 0, n - 1, partition_by, bounded=bounded)
+        return renumber(df.limit(0), partition_by)
+    return limit(df, 0, n - 1, partition_by)
 
 
-def tail(df: DataFrame, n: int, partition_by=None, bounded: bool = False) -> DataFrame:
+def tail(df: DataFrame, n: int, partition_by=None) -> DataFrame:
     # -0 == 0 would resolve to from_pos=0 (the whole frame), not empty
     if n <= 0:
-        return renumber(df.limit(0), partition_by, bounded=bounded)
-    return limit(df, -n, None, partition_by, bounded=bounded)
+        return renumber(df.limit(0), partition_by)
+    return limit(df, -n, None, partition_by)
 
 
-def cut_head(df: DataFrame, n: int, partition_by=None, bounded: bool = False) -> DataFrame:
-    return limit(df, n, None, partition_by, bounded=bounded)
+def cut_head(df: DataFrame, n: int, partition_by=None) -> DataFrame:
+    return limit(df, n, None, partition_by)
 
 
-def cut_tail(df: DataFrame, n: int, partition_by=None, bounded: bool = False) -> DataFrame:
-    return limit(df, 0, -n - 1, partition_by, bounded=bounded)
+def cut_tail(df: DataFrame, n: int, partition_by=None) -> DataFrame:
+    return limit(df, 0, -n - 1, partition_by)
 
 
 def if_streams(
@@ -318,11 +309,11 @@ def concat(a: DataFrame, b: DataFrame, pos_col: str = POS) -> DataFrame:
     return a.unionByName(b.withColumn(pos_col, F.col(pos_col) + F.lit(n)))
 
 
-def union_sorted(a: DataFrame, b: DataFrame, val_col: str = VAL, bounded: bool = False) -> DataFrame:
+def union_sorted(a: DataFrame, b: DataFrame, val_col: str = VAL) -> DataFrame:
     """cs_union: merge two sorted sequences (func.c:3857-3937) —
     delegates to joins.union_merge, the single implementation of this
     operator (it additionally supports partition_by; two copies had
     already started drifting in capability)."""
     from .joins import union_merge
 
-    return union_merge(a, b, val_col, bounded=bounded)
+    return union_merge(a, b, val_col)

@@ -17,16 +17,6 @@ Beyond the reference's surface (it has no document ops); designed for
 
 All hashes are deterministic (xxhash64 with literal salts), so results
 are reproducible across runs and cluster sizes.
-
-Cache ownership: several operators persist intermediates that the
-RETURNED DataFrame's lineage still references (candidate sets,
-signatures, bucketed units) — they cannot be unpersisted here without
-breaking the caller's plan. Ownership transfers to the caller: after
-materializing the result, reclaim storage with
-spark.catalog.clearCache() (or unpersist the returned frame's
-dependencies); long-lived sessions running dedup over many corpora
-should do this between corpora. The query registry's artifact model
-(registry/queries.py:_artifact) relies on exactly this retention.
 """
 
 from __future__ import annotations
@@ -282,7 +272,11 @@ def jaccard_pairs(
 ) -> DataFrame:
     """True n-gram Jaccard similarity per pair via inverted-index join
     on shared shingles. With `candidates`, restricted to those pairs
-    (semi-join pushdown before the heavy join)."""
+    (semi-join pushdown before the heavy join). `candidates` is read
+    twice (doc semi-join + pair semi-join) and nothing is persisted
+    here: a caller whose candidate lineage is expensive persists it
+    and releases it once the result is materialized (as
+    minhash_dedup_cc does)."""
     src = df.select(id_col, text_col)
     if candidates is not None:
         # normalize pair orientation FIRST: the intersection below is
@@ -293,12 +287,6 @@ def jaccard_pairs(
             F.least("left_id", "right_id").alias("left_id"),
             F.greatest("left_id", "right_id").alias("right_id"),
         )
-        # candidates is referenced twice below (doc semi-join + pair
-        # semi-join); without a persist its whole lineage — signatures
-        # plus the LSH band join — executes twice. The pair list is
-        # tiny relative to the corpus (bucket collisions only), so
-        # memory cost is negligible at any scale.
-        candidates = candidates.persist()
         # restrict to docs that appear in any candidate pair BEFORE
         # shingling — shingle cost and the inverted-index self-join
         # then scale with candidate count, not corpus size (without
@@ -310,11 +298,6 @@ def jaccard_pairs(
         )
         src = src.join(F.broadcast(cand_docs), id_col, "left_semi")
     sh = shingle_hashes(src, text_col, shingle_n).select(id_col, "shingle")
-    if candidates is not None:
-        # sh feeds three consumers (sizes, both join sides); persist the
-        # candidate-restricted shingle set so the explode + semi-join
-        # lineage runs once. Bounded by candidate docs, not the corpus.
-        sh = sh.persist()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_size"))
     l = sh.select(F.col(id_col).alias("left_id"), "shingle")
     r = sh.select(F.col(id_col).alias("right_id"), "shingle")
@@ -813,11 +796,20 @@ def minhash_dedup_cc(
     COMPONENT of the verified-duplicate graph (minimum id wins) — the
     complete answer where minhash_dedup's greedy pass is order-
     dependent across chains (a~b, b~c, a!~c keeps {a, c} greedily but
-    only {a} here)."""
+    only {a} here).
+
+    The LSH candidate pairs are persisted for the verification join,
+    which reads them twice, and released before returning: neither
+    connected_components path leaves the result depending on them (the
+    driver union-find builds a local frame, the iterative one
+    checkpoints its labels)."""
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    cands = minhash_lsh_candidates(sigs, id_col, num_hashes, bands)
-    dups = jaccard_pairs(df, cands, text_col, id_col, shingle_n, jaccard_threshold)
-    comp = connected_components(dups)
+    cands = minhash_lsh_candidates(sigs, id_col, num_hashes, bands).persist()
+    try:
+        dups = jaccard_pairs(df, cands, text_col, id_col, shingle_n, jaccard_threshold)
+        comp = connected_components(dups)
+    finally:
+        cands.unpersist()
     losers = comp.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias(id_col)
     )

@@ -10,13 +10,14 @@ an explicit ``pos`` column:
   ``row_number() over (partition by id order by ts) - 1`` — fully
   parallel, no global shuffle bottleneck; this is the common case at
   100 TB (millions of independent series).
-- global (one giant series): a two-pass partition-offset scheme —
+- global (one giant series): a two-pass bucket-offset scheme —
   deterministic range buckets (literal bounds probed once, see
   :func:`range_bucket_expr`), count rows per bucket (tiny agg over
-  pruned key columns), broadcast cumulative offsets, and add them to
-  the bucket-local row_number. All JVM-side; no single-partition
-  window and NOTHING persisted, so it scales to arbitrarily long
-  series.
+  pruned key columns), fold the cumulative offsets into a literal
+  array, and add the bucket's offset to a bucket-local row_number.
+  All JVM-side; no single-partition window and NOTHING persisted, so
+  it scales to arbitrarily long series. A small frame (see
+  :func:`is_small_plan`) takes one window over one partition instead.
 
 Convention used by every operator in this package: a *series frame* is a
 DataFrame carrying ``pos`` (long, 0-based, dense per series) plus value
@@ -249,13 +250,16 @@ def zip_with_global_pos(
     pos_col: str = POS,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Scalable global position: range-partition + broadcast offsets.
+    """Scalable global position: literal range buckets + offsets.
 
-    Two Spark jobs, zero single-partition stages:
-      1. range-partition and sort by the order key, count rows per
-         physical partition (a tiny aggregate);
-      2. broadcast the cumulative offsets and add the partition-local
-         index from ``monotonically_increasing_id``.
+    Two eager jobs before the caller's, zero single-partition stages
+    over the data:
+      1. probe the order key's range bounds (memoized per frame, see
+         :func:`range_bucket_expr`);
+      2. count rows per bucket (a tiny aggregate over the key columns).
+    The position is then a literal offset array indexed by bucket plus
+    the bucket-local ``row_number``. Small frames skip both jobs and
+    run one window (see :func:`zip_with_global_pos_and_total`).
     """
     out, _total = zip_with_global_pos_and_total(
         df, order_by, pos_col, num_partitions, need_total=False
@@ -268,8 +272,6 @@ def zip_with_global_pos_and_total(
     order_by: Sequence[str],
     pos_col: str = POS,
     num_partitions: int | None = None,
-    persist: bool = True,
-    cache_out: list | None = None,
     need_total: bool = True,
 ) -> tuple[DataFrame, int]:
     """zip_with_global_pos that also returns the total row count (known
@@ -285,11 +287,9 @@ def zip_with_global_pos_and_total(
     could not work at a scale where the frame exceeds the storage
     pool. The counting job touches only the key columns (Catalyst
     prunes the scan); the position is offset[bucket] + row_number
-    within the bucket.
-
-    ``persist`` and ``cache_out`` are DEPRECATED no-ops kept for API
-    compatibility: nothing is persisted any more. Passing a
-    non-default value warns so callers stop relying on them.
+    within the bucket, with the offsets folded into a literal array
+    (at most _MAX_BUCKET_BOUNDS + 1 entries — the same size as the
+    bucket CASE tree the plan already carries).
 
     PRECONDITION: the input lineage must be deterministic and the
     order key a total order per the caller's semantics — the counting
@@ -305,18 +305,6 @@ def zip_with_global_pos_and_total(
     probe and run one single-partition window — no extra jobs at all;
     with ``need_total=False`` (the zip_with_global_pos wrapper) not
     even a count job runs."""
-    if persist is not True or cache_out is not None:
-        import warnings
-
-        warnings.warn(
-            "zip_with_global_pos_and_total: `persist` and `cache_out` are "
-            "deprecated no-ops (nothing is cached since the literal "
-            "range-bucket redesign); stop passing them",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-    del persist, cache_out  # compat no-ops — nothing is cached
-    spark = df.sparkSession
     if is_small_plan(df):
         w = Window.orderBy(*order_by)
         out = df.withColumn(pos_col, (F.row_number().over(w) - 1).cast("long"))
@@ -333,33 +321,15 @@ def zip_with_global_pos_and_total(
         running += row["_cnt"]
     w = Window.partitionBy("_pid").orderBy(*order_by)
     local = (F.row_number().over(w) - 1).cast("long")
-    max_pid = max(offsets, default=0)
-    if max_pid < 4096:
-        # The offsets are driver-known after the counting pass, and the
-        # partition-id space is small: fold them into a literal array
-        # lookup instead of a broadcast join — one whole Spark job less
-        # (broadcast build + exchange), which is ~0.2 s of pure job
-        # floor on a warm local cluster and the dominant cost of the
-        # zip for small/medium inputs. Falls back to the join when the
-        # pid space is large enough that a literal array would bloat
-        # the plan (many-thousand-partition shuffles at real scale —
-        # where the extra job is noise anyway).
-        arr = F.array(
-            *[F.lit(int(offsets.get(p, 0))) for p in range(max_pid + 1)]
-        )
-        out = (
-            mid.withColumn(pos_col, local + F.element_at(arr, F.col("_pid") + 1))
-            .drop("_pid")
-        )
-        return out, running
-    offset_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid long, _offset long"
+    # the offsets are driver-known after the counting pass, so they
+    # ride in the plan as a literal array (range_bucket_expr caps the
+    # bucket count): no broadcast build or exchange, no extra job
+    arr = F.array(
+        *[F.lit(int(offsets.get(p, 0))) for p in range(max(offsets, default=0) + 1)]
     )
-    out = (
-        mid.join(F.broadcast(offset_df), "_pid")
-        .withColumn(pos_col, local + F.col("_offset"))
-        .drop("_pid", "_offset")
-    )
+    out = mid.withColumn(
+        pos_col, local + F.element_at(arr, F.col("_pid") + 1)
+    ).drop("_pid")
     return out, running
 
 

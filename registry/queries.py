@@ -195,9 +195,12 @@ def _dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         docs = _t(spark, sf_dir, "documents")
         sigs = dedup.minhash_signatures(docs, num_hashes=32)
-        cands = dedup.minhash_lsh_candidates(sigs, num_hashes=32, bands=16)
+        # the verification join reads the candidates twice; hold them
+        # only until the pairs are materialized
+        cands = dedup.minhash_lsh_candidates(sigs, num_hashes=32, bands=16).persist()
         pairs = dedup.jaccard_pairs(docs, cands, threshold=0.8).persist()
         pairs.count()  # materialize under the persist
+        cands.unpersist()
         return pairs
 
     return _artifact(spark, ("dedup_pairs", sf_dir), build)
@@ -1967,36 +1970,32 @@ def literal_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     builders = [
         lambda: tag("stretch", joins.stretch(
             seq(spark, [1, 2, 3, 4, 5], "int"), seq(spark, [2, 4], "int"),
-            seq(spark, [1.1, 2.2]), 1.0, bounded=True)),
+            seq(spark, [1.1, 2.2]), 1.0)),
         lambda: tag("stretchx", joins.stretch_exact(
             seq(spark, [1, 2, 3, 4, 5], "int"), seq(spark, [2, 4], "int"),
             seq(spark, [1.1, 2.2]), 1.0)),
         lambda: tag("stretch0", joins.stretch0(
             seq(spark, [1, 2, 3, 5], "int"), seq(spark, [2, 3, 4], "int"),
-            seq(spark, [1.1, 1.2, 1.3]), 0.0, bounded=True)),
+            seq(spark, [1.1, 1.2, 1.3]), 0.0)),
         lambda: tag("join_pos", joins.join_pos(
-            seq(spark, [0, 2, 3, 8, 10], "int"), seq(spark, [1, 3, 6, 10], "int"),
-            bounded=True)),
+            seq(spark, [0, 2, 3, 8, 10], "int"), seq(spark, [1, 3, 6, 10], "int"))),
         lambda: tag("asof_pos", joins.asof_join_pos(
-            seq(spark, [4, 9], "int"), seq(spark, [1, 3, 6, 10], "int"),
-            bounded=True)),
+            seq(spark, [4, 9], "int"), seq(spark, [1, 3, 6, 10], "int"))),
         lambda: tag("union", joins.union_merge(
-            seq(spark, [1, 5, 7, 8], "int"), seq(spark, [2, 3, 5, 6], "int"),
-            bounded=True)),
+            seq(spark, [1, 5, 7, 8], "int"), seq(spark, [2, 3, 5, 6], "int"))),
         lambda: tag("unique", positional.unique(
-            seq(spark, [1, 1, 2, 2, 2, 1, 3], "double"), bounded=True)),
+            seq(spark, [1, 1, 2, 2, 2, 1, 3], "double"))),
         lambda: tag("reverse", positional.reverse(seq(spark, [1.0, 2.0, 3.0]))),
         lambda: tag("repeat", positional.repeat(seq(spark, [1.0, 2.0]), 2)),
-        lambda: tag("limit", positional.limit(base5, 1, 3, bounded=True)),
-        lambda: tag("tail", positional.tail(base5, 2, bounded=True)),
-        lambda: tag("head", positional.head(base5, 2, bounded=True)),
-        lambda: tag("cuthead", positional.cut_head(base5, 2, bounded=True)),
-        lambda: tag("cuttail", positional.cut_tail(base5, 2, bounded=True)),
+        lambda: tag("limit", positional.limit(base5, 1, 3)),
+        lambda: tag("tail", positional.tail(base5, 2)),
+        lambda: tag("head", positional.head(base5, 2)),
+        lambda: tag("cuthead", positional.cut_head(base5, 2)),
+        lambda: tag("cuttail", positional.cut_tail(base5, 2)),
         lambda: tag("map", positional.map_positions(
             seq(spark, [10.0, 20.0, 30.0, 40.0]), seq(spark, [3, 0], "long"))),
-        lambda: tag("fpos", positional.filter_pos(
-            mask101, F.col("val") != 0, bounded=True
-        ).withColumn("val", F.col("val").cast("double"))),
+        lambda: tag("fpos", positional.filter_pos(mask101, F.col("val") != 0)
+                    .withColumn("val", F.col("val").cast("double"))),
         lambda: tag("if", positional.if_streams(
             mask101, seq(spark, [1.0, 2.0, 3.0]),
             seq(spark, [0.1, 0.2, 0.3]))),
@@ -2008,7 +2007,7 @@ def literal_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 seq(spark, [10.0, 40.0, 100.0]).withColumnRenamed("val", "rv"), "pos"
             ).select(F.col("val").alias("t"), "rv"),
             on="t", right_cols=["rv"], direction="nearest",
-            tolerance=2, filler=-1.0, bounded=True,
+            tolerance=2, filler=-1.0,
         ).select("pos", F.col("rv").alias("val"))),
     ]
     return _parallel_union(builders)
@@ -3920,9 +3919,7 @@ def series_ops_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: stacked,
         lambda: one(
             "ffp",
-            positional.filter_first_pos(s, F.col("val") > 6, 1, bounded=True).select(
-                "val"
-            ),
+            positional.filter_first_pos(s, F.col("val") > 6, 1).select("val"),
         ),
         lambda: one(
             "roundtrip_wsum",
@@ -4079,8 +4076,8 @@ def join_concat_store_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             _r6(F.col("val").cast("double")).alias("val"),
         )
 
-    jp = tag("jp", joins.join_pos(a, b, bounded=True))
-    jv = tag("jv", joins.join_values(a, b, v, bounded=True))
+    jp = tag("jp", joins.join_pos(a, b))
+    jv = tag("jv", joins.join_values(a, b, v))
     cc = tag("cc", positional.concat(seq(spark, [1.0, 2.0]), seq(spark, [7.0])))
     ls = tag(
         "ls",

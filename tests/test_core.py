@@ -403,7 +403,11 @@ def test_engine_reads_only_deployment_env_settings():
     Scans every os.environ / getenv read under imcs_spark/ (a read
     whose name is not a string literal counts as a knob too). The same
     scan checks that no engine module imports the driver's query
-    registry: the registry is a client of the engine, not part of it."""
+    registry: the registry is a client of the engine, not part of it.
+    It also checks that no public function takes a plan hint or a
+    caching flag (``bounded``, ``cache_out``, ``persist``): operators
+    pick their own plan from the frame's size and own what they
+    cache."""
     import ast
     import os
 
@@ -421,6 +425,7 @@ def test_engine_reads_only_deployment_env_settings():
 
     found = set()
     registry_imports = []
+    flags = []
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
             if not fn.endswith(".py"):
@@ -434,6 +439,14 @@ def test_engine_reads_only_deployment_env_settings():
                 for child in ast.iter_child_nodes(node)
             }
             for node in ast.walk(tree):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = node.args
+                    flags += [
+                        (rel, node.name, p.arg)
+                        for p in a.posonlyargs + a.args + a.kwonlyargs
+                        if not node.name.startswith("_")
+                        and p.arg in ("bounded", "cache_out", "persist")
+                    ]
                 if isinstance(node, ast.Import):
                     mods = [a.name for a in node.names]
                 elif isinstance(node, ast.ImportFrom) and not node.level:
@@ -462,3 +475,4 @@ def test_engine_reads_only_deployment_env_settings():
     assert found, "the scan found no environment reads at all"
     assert found <= allowed, sorted(found - allowed)
     assert not registry_imports, registry_imports
+    assert not flags, flags

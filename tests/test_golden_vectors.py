@@ -456,14 +456,14 @@ def test_stretch0_duplicate_timestamps(spark):
 
     out = joins.stretch0(
         seq(spark, [5, 5], "int"), seq(spark, [5], "int"),
-        seq(spark, [10.0]), -1.0, bounded=True,
+        seq(spark, [10.0]), -1.0,
     )
     assert [(r.pos, r.val) for r in out.orderBy("pos").collect()] == [
         (0, 10.0), (1, -1.0)
     ]
     out = joins.stretch0(
         seq(spark, [5], "int"), seq(spark, [5, 5], "int"),
-        seq(spark, [10.0, 20.0]), -1.0, bounded=True,
+        seq(spark, [10.0, 20.0]), -1.0,
     )
     assert [(r.pos, r.val) for r in out.orderBy("pos").collect()] == [
         (0, 10.0), (1, 20.0)

@@ -647,6 +647,42 @@ def test_minhash_dedup_cc_transitive(spark):
     assert set(cc) <= set(greedy)
 
 
+def test_minhash_dedup_cc_repeat_leaves_nothing_cached(spark):
+    """minhash_dedup_cc holds its LSH candidates only while it verifies
+    them, and jaccard_pairs persists nothing: a second call over the
+    same documents runs the same tasks as the first instead of reusing
+    frames the first left cached, and no RDD it persisted is left
+    behind. (Persisted ids, not a count: the context cleaner may drop
+    earlier tests' cached frames meanwhile.)"""
+    from conftest import completed_tasks
+
+    base = "a ledger of tides and harbors kept by the lighthouse keeper"
+    docs = spark.createDataFrame(
+        [
+            (10, base),
+            (11, base + " at dusk"),
+            (12, base + " at dusk and dawn"),
+            (13, "an unrelated note on sourdough starters and rye flour"),
+        ],
+        "doc_id long, text string",
+    )
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    runs, kept = [], []
+
+    def run():
+        out = dedup.minhash_dedup_cc(docs, jaccard_threshold=0.5)
+        kept.append(sorted(r["doc_id"] for r in out.collect()))
+
+    for i in range(2):
+        runs.append(completed_tasks(spark, run, group=f"dedup-cc-repeat-{i}"))
+    assert persisted() <= before
+    assert runs[1] == runs[0], runs
+    assert kept[0] == kept[1] == [10, 13]
+
+
 # --------------------------------------------------------------------------
 # curate: decontamination, repetition, split, packing
 # --------------------------------------------------------------------------

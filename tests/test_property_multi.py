@@ -16,27 +16,30 @@ N_CASES = 20
 LEN = 40
 
 
-def test_fourth_review_operator_edges(spark):
+def test_fourth_review_operator_edges(spark, monkeypatch):
     """Round-5 fourth review pass: NULL-safe unique adjacency (both
     the window and global-join paths), head/tail(0) emptiness, ANSI-
     safe mod/bit_not, int-input logical_not, and all-zero norm."""
     import math
 
+    from imcs_spark import series
     from imcs_spark.functions import elementwise as E
     from imcs_spark.operators import positional as P
     from imcs_spark.operators import timeseries as TS
 
-    df = spark.createDataFrame(
-        [(0, 1.0), (1, None), (2, 2.0), (3, None), (4, None)],
-        "pos long, val double",
-    )
-    # NULL after a value is NOT an adjacent duplicate; NULL,NULL is
-    for out in (P.unique(df, bounded=True), P.unique(df)):
-        assert [r.val for r in out.orderBy("pos").collect()] == [1.0, None, 2.0, None]
+    df = series.seq(spark, [1.0, None, 2.0, None, None])
+    # NULL after a value is NOT an adjacent duplicate; NULL,NULL is.
+    # The literal frame is small, so unique takes its lag window; a
+    # negative size gate forces the pos self-join path
+    want = [1.0, None, 2.0, None]
+    assert [r.val for r in P.unique(df).orderBy("pos").collect()] == want
+    with monkeypatch.context() as m:
+        m.setattr(series, "_SMALL_INPUT_BYTES", -1)
+        assert [r.val for r in P.unique(df).orderBy("pos").collect()] == want
     s = spark.createDataFrame([(i, float(i)) for i in range(5)], "pos long, val double")
-    assert P.head(s, 0, bounded=True).count() == 0
-    assert P.tail(s, 0, bounded=True).count() == 0
-    assert P.head(s, 2, bounded=True).count() == 2
+    assert P.head(s, 0).count() == 0
+    assert P.tail(s, 0).count() == 0
+    assert P.head(s, 2).count() == 2
     row = spark.createDataFrame([(7, 0, -(2**63))], "a long, b long, c long").select(
         E.mod("a", "b").alias("m0"),
         E.mod("a", F.lit(4)).alias("m4"),
@@ -48,6 +51,20 @@ def test_fourth_review_operator_edges(spark):
     z = spark.createDataFrame([(0, 0.0), (1, 0.0)], "pos long, val double")
     assert all(math.isnan(r.norm) for r in TS.norm(z).collect())
 
+
+
+def test_unique_small_global_frame_uses_lag_window(spark):
+    """A small unkeyed frame takes unique's lag window (one window over
+    one partition), not the pos self-join the large global path uses:
+    the operator reads the size gate, not a caller flag."""
+    from imcs_spark.operators import positional as P
+    from imcs_spark.series import seq
+
+    out = P.unique(seq(spark, [1.0, 1.0, 2.0, 2.0, 2.0, 1.0, 3.0]))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "lag(" in plan, plan
+    assert [r.val for r in out.orderBy("pos").collect()] == [1.0, 2.0, 1.0, 3.0]
+    assert [r.pos for r in out.orderBy("pos").collect()] == [0, 1, 2, 3]
 
 def test_stretch_exact_ntz_dst_safe(spark):
     """NTZ timelines use LINEAR wall-clock micros: under a DST-bearing

@@ -245,7 +245,7 @@ def test_asof_tolerance(spark):
 
     def got(d, **kw):
         rows = J.asof_join(
-            left, right, right_cols=["rv"], direction=d, bounded=True, **kw
+            left, right, right_cols=["rv"], direction=d, **kw
         ).collect()
         return [r["rv"] for r in sorted(rows, key=lambda r: r["ts"])]
 
@@ -264,7 +264,7 @@ def test_asof_tolerance(spark):
         "ts string, rv double",
     ).select(F.col("ts").cast("timestamp").alias("ts"), "rv")
     out = J.asof_join(
-        lt, rt, right_cols=["rv"], direction="nearest", bounded=True,
+        lt, rt, right_cols=["rv"], direction="nearest",
         tolerance=F.expr("INTERVAL 30 SECONDS"),
     )
     vals = [r["rv"] for r in sorted(out.collect(), key=lambda r: r["ts"])]
@@ -272,7 +272,7 @@ def test_asof_tolerance(spark):
 
     m = J.asof_join_multi(
         left, right, right_cols=["rv"], directions=("backward", "nearest"),
-        bounded=True, tolerance=2,
+        tolerance=2,
     )
     rows = sorted(m.collect(), key=lambda r: r["ts"])
     assert [(r["rv_backward"], r["rv_nearest"]) for r in rows] == [
@@ -459,19 +459,6 @@ def test_asof_multi_output_name_collisions(spark):
     # originals untouched, the joined value landed in the suffixed col
     assert all(r["px_backward"] == 1.0 and r["px_backward_right"] == 2.0 for r in rows)
     assert rows[1]["px_backward_right2"] == 0.0  # ts=10 <- right ts=1
-
-
-def test_zip_deprecated_params_warn(spark):
-    """persist/cache_out are loud no-ops now."""
-    import warnings
-
-    from imcs_spark.series import zip_with_global_pos_and_total
-
-    df = spark.range(10).select((F.col("id") * 1.0).alias("v"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        zip_with_global_pos_and_total(df, ["v"], persist=False)
-        assert any(issubclass(x.category, DeprecationWarning) for x in w)
 
 
 def test_forward_carry_equals_following_frame(spark):
