@@ -10,8 +10,8 @@ Spark-first execution:
 - global series: a single-partition Window.orderBy would serialize the
   whole dataset through one task, so the global paths use
   `zip_with_global_pos` (literal range buckets, a bucket-local
-  row_number and a literal offset array — fully distributed) and derive rank/quantile from the sorted index;
-  global top-N uses orderBy().limit(n), which Catalyst plans as
+  row_number and a literal offset array — fully distributed) and
+  derive rank/quantile from the sorted index; global top-N uses orderBy().limit(n), which Catalyst plans as
   TakeOrderedAndProject — the same bounded-heap-with-parallel-merge the
   reference hand-rolled (func.c:2981-3087).
 

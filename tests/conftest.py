@@ -51,3 +51,10 @@ def completed_tasks(spark, action, group="completed-tasks"):
             sinfo = st.getStageInfo(s)
             n += sinfo.numCompletedTasks if sinfo is not None else 0
     return n
+
+
+def persisted_rdd_ids(spark):
+    """Ids of the RDDs persisted right now. Compare id sets, not counts:
+    the context cleaner may unpersist other tests' collected frames
+    while a test runs, which shifts a count either way."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())

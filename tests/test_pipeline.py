@@ -652,9 +652,8 @@ def test_minhash_dedup_cc_repeat_leaves_nothing_cached(spark):
     them, and jaccard_pairs persists nothing: a second call over the
     same documents runs the same tasks as the first instead of reusing
     frames the first left cached, and no RDD it persisted is left
-    behind. (Persisted ids, not a count: the context cleaner may drop
-    earlier tests' cached frames meanwhile.)"""
-    from conftest import completed_tasks
+    behind."""
+    from conftest import completed_tasks, persisted_rdd_ids
 
     base = "a ledger of tides and harbors kept by the lighthouse keeper"
     docs = spark.createDataFrame(
@@ -666,10 +665,7 @@ def test_minhash_dedup_cc_repeat_leaves_nothing_cached(spark):
         ],
         "doc_id long, text string",
     )
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = persisted()
+    before = persisted_rdd_ids(spark)
     runs, kept = [], []
 
     def run():
@@ -678,7 +674,7 @@ def test_minhash_dedup_cc_repeat_leaves_nothing_cached(spark):
 
     for i in range(2):
         runs.append(completed_tasks(spark, run, group=f"dedup-cc-repeat-{i}"))
-    assert persisted() <= before
+    assert persisted_rdd_ids(spark) <= before
     assert runs[1] == runs[0], runs
     assert kept[0] == kept[1] == [10, 13]
 
@@ -2080,10 +2076,9 @@ def test_pq_topk_cell_pruned_serve_leaves_nothing_cached(spark, sf_dir):
     second identical serve would otherwise reuse the first serve's
     candidates instead of scanning the codes again. Pruning is exact,
     so the answer equals the unpruned rerank's."""
-    from conftest import completed_tasks
+    from conftest import completed_tasks, persisted_rdd_ids
 
     from imcs_spark.pipeline import similarity as S
-    from imcs_spark.table import Engine
 
     # the >= -2 filter gives this read a logical plan no other test's
     # cached read shares
@@ -2105,8 +2100,7 @@ def test_pq_topk_cell_pruned_serve_leaves_nothing_cached(spark, sf_dir):
             ).collect()
         }
 
-    eng = Engine(spark)
-    cached_before = len(eng.stats()["cached_rdds"])
+    before = persisted_rdd_ids(spark)
     runs, answers = [], []
     for i in range(2):
         runs.append(
@@ -2115,7 +2109,7 @@ def test_pq_topk_cell_pruned_serve_leaves_nothing_cached(spark, sf_dir):
                 group=f"pq-pruned-serve-{i}",
             )
         )
-    assert len(eng.stats()["cached_rdds"]) == cached_before
+    assert persisted_rdd_ids(spark) <= before
     assert runs[1] == runs[0], runs
     assert answers[0] == answers[1] == serve(enc.drop("cell"), bycell)
 

@@ -52,7 +52,6 @@ def test_fourth_review_operator_edges(spark, monkeypatch):
     assert all(math.isnan(r.norm) for r in TS.norm(z).collect())
 
 
-
 def test_unique_small_global_frame_uses_lag_window(spark):
     """A small unkeyed frame takes unique's lag window (one window over
     one partition), not the pos self-join the large global path uses:
@@ -65,6 +64,7 @@ def test_unique_small_global_frame_uses_lag_window(spark):
     assert "Join" not in plan and "lag(" in plan, plan
     assert [r.val for r in out.orderBy("pos").collect()] == [1.0, 2.0, 1.0, 3.0]
     assert [r.pos for r in out.orderBy("pos").collect()] == [0, 1, 2, 3]
+
 
 def test_stretch_exact_ntz_dst_safe(spark):
     """NTZ timelines use LINEAR wall-clock micros: under a DST-bearing
