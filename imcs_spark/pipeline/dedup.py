@@ -798,17 +798,14 @@ def minhash_dedup_cc(
     dependent across chains (a~b, b~c, a!~c keeps {a, c} greedily but
     only {a} here).
 
-    The LSH candidate pairs are persisted and materialized for the
-    verification join, which reads them from concurrent stages (the
-    broadcast doc list and the pair semi-join; a lazy persist lets
-    both compute them), and released before returning: neither
+    The LSH candidate pairs are persisted for the verification join,
+    which reads them twice, and released before returning: neither
     connected_components path leaves the result depending on them (the
     driver union-find builds a local frame, the iterative one
     checkpoints its labels)."""
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
     cands = minhash_lsh_candidates(sigs, id_col, num_hashes, bands).persist()
     try:
-        cands.count()
         dups = jaccard_pairs(df, cands, text_col, id_col, shingle_n, jaccard_threshold)
         comp = connected_components(dups)
     finally:
