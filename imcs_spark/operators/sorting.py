@@ -11,9 +11,10 @@ Spark-first execution:
   whole dataset through one task, so the global paths use
   `zip_with_global_pos` (literal range buckets, a bucket-local
   row_number and a literal offset array — fully distributed) and
-  derive rank/quantile from the sorted index; global top-N uses orderBy().limit(n), which Catalyst plans as
-  TakeOrderedAndProject — the same bounded-heap-with-parallel-merge the
-  reference hand-rolled (func.c:2981-3087).
+  derive rank/quantile from the sorted index; global top-N uses
+  orderBy().limit(n), which Catalyst plans as TakeOrderedAndProject —
+  the same bounded-heap-with-parallel-merge the reference hand-rolled
+  (func.c:2981-3087).
 
 Reference quirks preserved:
 - cs_rank/cs_dense_rank assign ranks by ascending value but emit them
